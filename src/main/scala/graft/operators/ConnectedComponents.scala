@@ -46,22 +46,17 @@ object ConnectedComponents {
    */
   def components(edges: DataFrame, maxIterations: Int = 50,
       driverFinishEdges: Long = 8000000L): DataFrame = {
-    val spark = edges.sparkSession
     // AQE is pure overhead for the loop's many tiny shuffles: every query
     // stage materializes + re-plans, adding driver latency per round that
-    // dominates on small edge sets. Disable inside the loop; ConfScope
-    // restores the PRIOR state afterwards — including "unset".
-    ConfScope.restoring(spark,
-      "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions") {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      components0(edges, maxIterations, driverFinishEdges)
-    }
+    // dominates on small edge sets.
+    ConfScope.aqeOff(edges.sparkSession)(
+      components0(edges, maxIterations, driverFinishEdges))
   }
 
   private def components0(edges: DataFrame, maxIterations: Int,
       driverFinishEdges: Long): DataFrame = {
     // canonical directed edges large → small; drop self-loops
-    var e = edges.select(
+    val e = edges.select(
       greatest(col("id1"), col("id2")).as("src"),
       least(col("id1"), col("id2")).as("dst"))
       .filter(col("src") =!= col("dst"))
@@ -75,21 +70,22 @@ object ConnectedComponents {
     // ~16 tiny shuffle stages, and with the session's full partition count
     // the per-task scheduling overhead dominates wall time on all but the
     // largest graphs (measured: 42s -> ~4s on a 256-edge set at 32
-    // partitions). Rows-per-partition target re-derived round 5 at the
-    // 2-10M edge shape (the smallest sizes that reach the loop under the
-    // 8M driver-finish crossover): at 10M edges the loop measured 132.6 /
-    // 54.0 / 40.1 / 45.4 / 57.1 s for targets 100k/250k/500k/1M/2M —
-    // 500k is the optimum and is the default (graft.cc.rowsPerPartition
-    // overrides). Capped at the session's configured width so big graphs
-    // keep full parallelism.
+    // partitions). Rows-per-partition target (ConfScope.CcRowsPerPartition)
+    // re-derived round 5 at the 2-10M edge shape (the smallest sizes that
+    // reach the loop under the 8M driver-finish crossover): at 10M edges
+    // the loop measured 132.6 / 54.0 / 40.1 / 45.4 / 57.1 s for targets
+    // 100k/250k/500k/1M/2M — 500k is the optimum. ConfScope.width caps it
+    // at the session's configured width so big graphs keep full
+    // parallelism.
     val spark = e.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val rowsPerPart = spark.conf.getAll
-      .getOrElse("graft.cc.rowsPerPartition", "500000").toLong
-    val loopParts = math.max(1L, math.min(sessionParts.toLong,
-      nEdges / rowsPerPart + 1)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
+    ConfScope.aqeOff(spark,
+      Some(ConfScope.width(spark, nEdges, ConfScope.CcRowsPerPartition)))(
+      starLoop(e, maxIterations))
+  }
 
+  /** Large/small-star rounds from canonical edges to the star forest. */
+  private def starLoop(edges: DataFrame, maxIterations: Int): DataFrame = {
+    var e = edges
     var lastFp: (Long, String, String) = (-1L, "", "")
     var iter = 0
     var converged = false

@@ -32,21 +32,15 @@ import org.apache.spark.sql.functions._
  */
 object JaccardVerify {
 
-  /** Join candidates to one per-id payload column and score the pair.
-    * bcast = true broadcasts the payload side (dimension-table pattern):
-    * the candidate set — typically 10-40x the corpus size — then streams
-    * through two map-side hash joins and NO pair+payload bytes are ever
-    * shuffled. Only sound when the payload side fits in executor memory. */
+  /** Join candidates to one per-id payload column and score the pair. */
   private def scorePairs(pairs: DataFrame, side: DataFrame,
       score: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
-      as: String, bcast: Boolean): DataFrame = {
-    val s = if (bcast) broadcast(side) else side
+      as: String): DataFrame =
     pairs
-      .join(s.select(col("id").as("id1"), col("s").as("s1")), "id1")
-      .join(s.select(col("id").as("id2"), col("s").as("s2")), "id2")
+      .join(side.select(col("id").as("id1"), col("s").as("s1")), "id1")
+      .join(side.select(col("id").as("id2"), col("s").as("s2")), "id2")
       .withColumn(as, score(col("s1"), col("s2")))
       .drop("s1", "s2")
-  }
 
   /**
    * candidates(id1, id2, stage) x sigs(id, minhash, shingles) →
@@ -54,22 +48,7 @@ object JaccardVerify {
    *
    * estimate = true: tier 1 only — the 100 TB mode; `jaccard` is the
    * MinHash estimate (±σ), no shingle sets are ever shuffled.
-   */
-  /** Opt-in (env GRAFT_BCAST_MAX_DOCS): corpora up to this many docs
-    * broadcast the minhash side in tier 1. Measured SLOWER than the shuffle
-    * join on the local bench (163s vs 86s at 160k docs — two 160MB driver
-    * hash relations + GC); on a real cluster with network shuffle the
-    * tradeoff flips, hence a knob, default off. */
-  val broadcastMaxDocs: Long = sys.env.getOrElse("GRAFT_BCAST_MAX_DOCS", "0").toLong
-
-  /** Opt-in (env GRAFT_VERIFY_SEMIJOIN=1): prefilter the tier-2 payload
-    * side to docs that appear in a surviving pair before the scoring
-    * joins. Output-identical; a shuffle-volume win on low-participation
-    * corpora (see the design note at the tier-2 join). */
-  val semiJoinTexts: Boolean =
-    sys.env.getOrElse("GRAFT_VERIFY_SEMIJOIN", "0") == "1"
-
-  /**
+   *
    * texts = Some(df(id, text)): tier 2 recomputes the exact shingle Jaccard
    * FROM THE TEXT per surviving pair (TextShingleJaccard — same kernel,
    * bitwise-identical result) instead of joining stored shingle arrays.
@@ -79,8 +58,7 @@ object JaccardVerify {
    * emitShingles=false). The CPU cost — re-shingling two documents per
    * SURVIVING pair — is a few microseconds against tens of KB of saved
    * memory/shuffle traffic, the resource that actually caps N→4N scaling.
-   */
-  /**
+   *
    * Estimate-mode contract (estimate = true, tier 1 IS the output): the
    * returned `jaccard` is the UNBIASED numPerm-lane MinHash estimator when
    * the bundle carries the full 64-bit `minhash` column (the default — all
@@ -91,11 +69,17 @@ object JaccardVerify {
    * by ≤ ~(1−j)/256 ≈ 0.004, one-sided. In two-tier mode (estimate = false)
    * tier 1 always prefers the packed lanes — the bias is inside the margin
    * and tier 2 is exact regardless, so only the prefilter sees it.
+   *
+   * semiJoin = true: prefilter the tier-2 payload side to docs that appear
+   * in a surviving pair before the scoring joins. Output-identical; a
+   * shuffle-volume win on low-participation corpora (design note at the
+   * tier-2 join). Neither tier forces a broadcast; the planner picks each
+   * join strategy.
    */
   def verify(candidates: DataFrame, sigs: DataFrame, cfg: GraftConfig,
       estimate: Boolean = false, texts: Option[DataFrame] = None,
       packedEstimate: Boolean = false,
-      semiJoin: Boolean = semiJoinTexts): DataFrame = {
+      semiJoin: Boolean = false): DataFrame = {
     val t = cfg.simThreshold
     // narrow bundles (Signatures.compute emitShingles = false) carry no
     // shingle arrays: exact tier-2 scoring then REQUIRES the texts side —
@@ -115,12 +99,9 @@ object JaccardVerify {
     val agreement: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
       if (packed) (a, b) => SimilarityExpressions.minhashAgreementPacked(a, b, cfg.numPerm)
       else SimilarityExpressions.minhashAgreement
-    // short-circuit: with the default knob (0 = off) never run the count job
-    val bcast = broadcastMaxDocs > 0 && !sigs.isStreaming &&
-      sigs.count() <= broadcastMaxDocs
 
     val estimated = scorePairs(candidates.select("id1", "id2", "stage"),
-      minhashSide, agreement, "est", bcast)
+      minhashSide, agreement, "est")
 
     if (estimate) {
       estimated.filter(col("est") >= t)
@@ -157,9 +138,9 @@ object JaccardVerify {
       // scales where the distinct-id set cannot broadcast) before these
       // joins — it cuts the dominant shuffle by the non-participation
       // fraction and composes with this code unchanged. Implemented below
-      // behind GRAFT_VERIFY_SEMIJOIN (output-identical — the inner joins
-      // ignore non-participating docs either way; VerifyModesSpec pins it):
-      // opt-in because on the planted-dup bench corpus participation is
+      // as `semiJoin` (output-identical — the inner joins ignore
+      // non-participating docs either way; VerifyModesSpec pins it): off by
+      // default because on the planted-dup bench corpus participation is
       // near-total and the extra distinct-ids pass buys nothing.
       val (side0, score) = texts match {
         case Some(d) =>
@@ -175,7 +156,7 @@ object JaccardVerify {
           .union(survivors.select(col("id2").as("id"))).distinct()
         side0.join(ids, Seq("id"), "left_semi")
       }
-      scorePairs(survivors, side, score, "jaccard", bcast = false)
+      scorePairs(survivors, side, score, "jaccard")
         .filter(col("jaccard") >= t)
         .select(col("id1"), col("id2"), col("jaccard"), col("stage"))
     }

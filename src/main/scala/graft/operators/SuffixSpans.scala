@@ -58,16 +58,6 @@ object SuffixSpans {
       idCol: String = "id", textCol: String = "text"): Result =
     impl(docs, cfg, groupCap, idCol, textCol, computeLog = true)
 
-  /** Small-input fast path threshold (docs). Below it the stage chain's
-    * cost is pure per-stage overhead — ~10 tiny shuffles each paying AQE
-    * re-planning + session-width task scheduling. A/B (best-of-2 warm,
-    * local[32], AQE-off fast path vs session confs): 2k docs 1.9 vs
-    * 4.7 s, 10k 5.1 vs 6.4 s, 30k 8.8 vs 9.1 s, 80k 18.8 vs 11.2 s —
-    * AQE's coalescing starts earning its keep between 30k and 80k docs,
-    * so the default sits at 40k.
-    * `graft.span.fastPathDocs` overrides (0 disables the fast path). */
-  private val FastPathDocs = 40000L
-
   private def impl(docs: DataFrame, cfg: GraftConfig, groupCap: Int,
       idCol: String, textCol: String, computeLog: Boolean): Result = {
     val spark = docs.sparkSession
@@ -87,24 +77,19 @@ object SuffixSpans {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // materializes the cache the chain reads 2-3 times anyway, and sizes
-    // the small-input fast path (ConnectedComponents' right-sizing
-    // precedent): below FastPathDocs the ENTIRE chain — including both
+    // the small-input fast path (ConfScope.spanScope): at or below
+    // ConfScope.SpanFastPathDocs the ENTIRE chain — including both
     // localCheckpoint materializations — runs with AQE off and the shuffle
-    // width matched to the membership volume (floored at 8 so the
-    // flatMapGroups kernel stage keeps real parallelism; capped at the
-    // session width so large sessions aren't widened).
+    // width matched to the doc count. Below that size the chain's cost is
+    // pure per-stage overhead — ~10 tiny shuffles each paying AQE
+    // re-planning + session-width task scheduling. A/B (best-of-2 warm,
+    // local[32], AQE-off fast path vs session confs): 2k docs 1.9 vs
+    // 4.7 s, 10k 5.1 vs 6.4 s, 30k 8.8 vs 9.1 s, 80k 18.8 vs 11.2 s —
+    // AQE's coalescing starts earning its keep between 30k and 80k docs,
+    // so the threshold sits at 40k.
     val nDocs = d.count()
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val fastPathDocs = spark.conf.getAll
-      .getOrElse("graft.span.fastPathDocs", FastPathDocs.toString).toLong
-    val chain = () => runChain(d, cfg, groupCap, computeLog, winnowUdf, spark)
-    if (nDocs <= fastPathDocs) {
-      val opParts = math.min(sessionParts.toLong,
-        math.max(8L, nDocs / 1500L + 1)).max(1L).toString
-      ConfScope.withConfs(spark,
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> opParts)(chain())
-    } else chain()
+    ConfScope.spanScope(spark, d, nDocs)(
+      runChain(d, cfg, groupCap, computeLog, winnowUdf, spark))
   }
 
   private def runChain(d: DataFrame, cfg: GraftConfig, groupCap: Int,

@@ -43,11 +43,15 @@ final class DedupPipeline(
   private val io: Option[graft.io.TableIO] =
     tableIO.orElse(checkpointDir.map(d => new graft.io.ParquetTables(spark, d)))
 
-  /** Engine-managed physical planning for the pipeline's own jobs: in
-    * LOCAL mode, below `graft.pipeline.aqeOffDocs` input docs (default 10M;
-    * 0 disables the scope), AQE is turned off for the jobs that materialize
-    * INSIDE the pipeline methods. Rationale (measured A/B, graft.tools
-    * .PairsTune, local[32], best-of-3 warm — pairs slice / flagship):
+  /** Engine-managed physical planning for the pipeline's own jobs
+    * (ConfScope.pipelineScope): in LOCAL mode, for an input of at most
+    * ConfScope.AqeOffBytes of plan statistics (10M docs at >= 1 KB each) or
+    * of unknown size, AQE is turned off for the jobs that materialize
+    * INSIDE the pipeline methods, and a small input also gets the
+    * ConfScope.smallInputScope shuffle width. The gate reads plan
+    * statistics, not a count() job, so a checkpoint-resume run does not
+    * re-scan its input. Rationale (measured A/B, local[32], best-of-3
+    * warm — pairs slice / flagship):
     *   80k pages: pairs 5.2 s AQE-off vs 12.6 s on; flagship 17.6 vs 20.4
     *   320k: pairs 14.0 vs 19.3        1M: pairs 59.3 vs 126.9
     * Every blocking join already carries its own skew handling (bucket
@@ -65,41 +69,22 @@ final class DedupPipeline(
     * fetch waits land in task time (and whose I/O sensitivity made AQE-off
     * runs swing 778-1984 dps under identical confs). On a real cluster
     * those exchanges cross a network; AQE earns its keep exactly there. */
-  private def planningScope[T](pages: DataFrame)(body: => T): T = {
-    val threshold = spark.conf.getAll
-      .getOrElse("graft.pipeline.aqeOffDocs", "10000000").toLong
-    // size gate from PLAN STATISTICS (parquet file bytes / cached batch
-    // bytes), not a count() job: the old form re-scanned the full input
-    // once per run()/runPairs() call — including checkpoint-resume runs
-    // where the completed `pairs` table makes the count pure waste
-    // (advisor finding). Docs are approximated at >= 1 KB each, so the
-    // byte gate (docs x 1 KB) errs toward the AQE-off regime the local
-    // A/B measured 1.2-2.1x faster at every size up to 1M pages; cluster
-    // mode is untouched (isLocal guard).
-    lazy val smallInput =
-      pages.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        BigInt(threshold) * 1000
-    if (spark.sparkContext.isLocal && threshold > 0 && smallInput)
-      ConfScope.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
-        // compose the round-6 small-input shuffle right-sizing (ConfScope
-        // .smallInputScope scaladoc): a tiny corpus otherwise pays the
-        // cluster-sized map×reduce writer fan-out on every pipeline exchange
-        ConfScope.smallInputScope(spark, pages)(body)
-      }
-    else body
-  }
+  private def planningScope[T](pages: DataFrame)(body: => T): T =
+    ConfScope.pipelineScope(spark, pages)(body)
+
+  /** Ingest salting (north rule "salted repartitioning for skewed hosts"):
+    * a crawl partitioned by host makes the per-partition signature
+    * projection wait on the hottest host's partition; the salted exchange
+    * flattens the histogram. Purely physical — results are unchanged
+    * (everything downstream re-shuffles on its own keys). */
+  private def salted(pages: DataFrame): DataFrame =
+    if (hostSalts > 1 && pages.columns.contains("url"))
+      Salting.saltPagesByHost(pages, hostSalts)
+    else pages
 
   /** pages(id, text, ...) → (id, cluster) for every input page. */
   def run(pages: DataFrame): Result = planningScope(pages) {
-    // ingest salting (north rule "salted repartitioning for skewed hosts"):
-    // a crawl partitioned by host makes the per-partition signature
-    // projection wait on the hottest host's partition; the salted exchange
-    // flattens the histogram. Purely physical — results are unchanged
-    // (everything downstream re-shuffles on its own keys).
-    val input =
-      if (hostSalts > 1 && pages.columns.contains("url"))
-        Salting.saltPagesByHost(pages, hostSalts)
-      else pages
+    val input = salted(pages)
     // signatures feed 3 blocking stages + the tier-1 verify join → persisted.
     // emitShingles = false: the verify tier recomputes exact Jaccard from
     // text (JaccardVerify texts mode, bitwise-identical), so the ~8
@@ -191,10 +176,7 @@ final class DedupPipeline(
   private def runPairsPlan(pages: DataFrame, exact: Boolean,
       useMinhash: Boolean, useSimhash: Boolean, useSpans: Boolean)
       : (DataFrame, Seq[DataFrame]) = {
-    val input =
-      if (hostSalts > 1 && pages.columns.contains("url"))
-        Salting.saltPagesByHost(pages, hostSalts)
-      else pages
+    val input = salted(pages)
     // tier-1 scoring always needs the MinHash part for minhash8
     val parts = graft.functions.TextSignatures.SigParts(
       minhash = true, simhash = useSimhash, spans = useSpans)
@@ -229,7 +211,8 @@ final class DedupPipeline(
     * `<name>_format` table stamped with TextSignatures.formatVersion, and a
     * resume against a checkpoint written by a different family fails fast
     * instead of silently mixing incompatible values (round-5 advisor
-    * finding). Pre-versioning checkpoints (no format table) also fail. */
+    * finding). Pre-versioning checkpoints (no format table) also fail; the
+    * error names the stage directory to delete to recompute. */
   private def stage(name: String, persist: Boolean = false,
       versioned: Boolean = false)(body: => DataFrame): DataFrame =
     io match {
@@ -245,9 +228,13 @@ final class DedupPipeline(
             else -1L
           require(stored == fmt,
             s"checkpointed '$name' was written with signature format " +
-              s"$stored but this engine computes format $fmt — delete the " +
-              "checkpoint (or keep the old jar); resuming would mix " +
-              "incompatible signature values")
+              (if (stored < 0) "unknown (a checkpoint from before format stamps)"
+               else stored.toString) +
+              s" but this engine computes format $fmt; resuming would mix " +
+              "incompatible signature values. To recover, delete the " +
+              s"checkpoint's '$name' stage directory (or the whole checkpoint " +
+              "directory) and re-run to recompute it, or keep the jar that " +
+              "wrote it")
         }
         if (!t.isComplete(name)) {
           t.write(body, name)

@@ -27,25 +27,29 @@ object GraftSqlBridge {
     * action, exactly like the input would. */
   def truncateLineage(df: Dataset[Row]): DataFrame = {
     val cdf = df.asInstanceOf[classic.Dataset[Row]]
-    // toRdd is computed under AQE-off for THIS plan only: on an AQE plan,
-    // AdaptiveSparkPlanExec.execute eagerly materializes query stages (and
-    // can NPE through the TableCacheQueryStageExec recache path), so the
-    // "lazy lineage cut" would silently run the upstream job at plan-build
-    // time whenever the caller sits outside an AQE-off scope (advisor
-    // finding, round 5). The non-adaptive physical plan stays lazy.
-    val rdd = {
-      val session = cdf.sparkSession
-      val prior = session.conf.getOption("spark.sql.adaptive.enabled")
-      session.conf.set("spark.sql.adaptive.enabled", "false")
-      try cdf.queryExecution.toRdd
-      finally prior match {
-        case Some(v) => session.conf.set("spark.sql.adaptive.enabled", v)
-        case None => session.conf.unset("spark.sql.adaptive.enabled")
-      }
+    val session = cdf.sparkSession
+    // The RDD comes from a FRESH non-adaptive physical plan over the
+    // optimized logical plan, not from `cdf.queryExecution.toRdd`: an
+    // adaptive plan's execute() eagerly materializes its query stages, so
+    // the "lazy lineage cut" would run the upstream job at plan-build time
+    // (advisor finding, round 5) — and `executedPlan` may already have been
+    // forced under AQE. No session conf is touched.
+    val optimized = cdf.queryExecution.optimizedPlan
+    val plan = execution.QueryExecution.prepareExecutedPlan(session, optimized)
+    val (stats, constraints) =
+      execution.LogicalRDD.rewriteStatsAndConstraints(cdf.logicalPlan, optimized)
+    // a PartitioningCollection (join output) names several equivalent
+    // partitionings over attributes some of which the leaf may not output;
+    // keep the first, as LogicalRDD.fromDataset does
+    def firstLeaf(p: catalyst.plans.physical.Partitioning)
+        : catalyst.plans.physical.Partitioning = p match {
+      case catalyst.plans.physical.PartitioningCollection(ps) => firstLeaf(ps.head)
+      case other => other
     }
-    classic.Dataset.ofRows(cdf.sparkSession,
-      org.apache.spark.sql.execution.LogicalRDD.fromDataset(
-        rdd, cdf, isStreaming = false))
+    classic.Dataset.ofRows(session, execution.LogicalRDD(cdf.logicalPlan.output,
+      new execution.SQLExecutionRDD(plan.execute(), session.sessionState.conf),
+      firstLeaf(plan.outputPartitioning), plan.outputOrdering)(
+      session, stats, constraints))
   }
 
   /** `truncateLineage`, applied in LOCAL mode only. On separated executor

@@ -88,9 +88,13 @@ class ResumeSpec extends SparkSuite {
       Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete()
     }
     rmr(new java.io.File(s"$dir/signatures_format"))
-    intercept[IllegalArgumentException] {
+    val pre = intercept[IllegalArgumentException] {
       new DedupPipeline(spark, cfg, Some(dir)).run(df).assignments.count()
     }
+    // the error says how to recover: delete the stage (or the whole
+    // checkpoint) to recompute
+    assert(pre.getMessage.contains("delete the checkpoint's 'signatures' stage directory"),
+      pre.getMessage)
   }
 
   test("checkpointed and un-checkpointed runs agree") {
