@@ -25,7 +25,7 @@ fi
 EXTRA=()
 for c in "$@"; do EXTRA+=(--conf "$c"); done
 
-GRAFT_SCALE_PROFILE=1 "$SPARK_HOME/bin/spark-submit" \
+"$SPARK_HOME/bin/spark-submit" \
   --master spark://127.0.0.1:7077 \
   --deploy-mode client \
   --class graft.tools.ScalingCluster \
@@ -37,4 +37,4 @@ GRAFT_SCALE_PROFILE=1 "$SPARK_HOME/bin/spark-submit" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.ui.enabled=false \
   "${EXTRA[@]}" \
-  "$JAR" "$NPAGES" 1 2>/dev/null | grep '\[scalec\]'
+  "$JAR" "$NPAGES" 1 profile 2>/dev/null | grep '\[scalec\]'

@@ -12,9 +12,10 @@ import java.nio.file.{Files, Paths}
  * Measurement hygiene: the sandbox host is time-shared and shows multi-x
  * run-to-run noise, so N / 4N sessions are INTERLEAVED (pairs sampled under
  * similar external load) and the best pair is reported along with all raw
- * samples; job-level listener data (graft.tools.JobProfile) shows intra-job
- * parallel fraction ~0.94, so the pair least disturbed by co-tenants is the
- * closest estimate of the engine's own scaling.
+ * samples; job-level listener data (the JobProfile main, last in commit
+ * 24a9999) shows intra-job parallel fraction ~0.94, so the pair least
+ * disturbed by co-tenants is the closest estimate of the engine's own
+ * scaling.
  *
  * Usage: runMain graft.Scaling [nPages] [N] [reps]   (defaults 80000, 4, 3)
  */
@@ -56,7 +57,7 @@ object Scaling {
          |assignment) on the identical deterministic ${nPages}-page corpus,
          |at local[$n] vs local[$n4] in fresh sessions, interleaved pairs
          |(time-shared sandbox host; intra-job parallel fraction measured
-         |~0.94 via SparkListener task accounting — graft.tools.JobProfile).
+         |~0.94 via SparkListener task accounting — JobProfile, commit 24a9999).
          |
          |All sampled pairs (docs/sec @N | @4N | efficiency):
          |

@@ -72,12 +72,12 @@ object TextSignatures {
     * needed Math.multiplyHigh + fold + two conditional subtracts per
     * (shingle, perm) — ~150 Mops/core; the wraparound form is three ALU ops
     * the JIT auto-vectorizes — measured 1.5-1.8 Gops/core
-    * (graft.tools MinhashBench findings). Input h is already avalanched
-    * (hashChars finalizes with mix64), so the multiply-add's high bits —
-    * which decide the min — are well mixed; min-wise quality is validated
-    * empirically by the statistical agreement spec and the pipeline's
-    * recall >= 0.99 gates (the mod-prime family is only approximately
-    * min-wise independent too). */
+    * (the MinhashBench microbench, last in commit 24a9999). Input h is
+    * already avalanched (hashChars finalizes with mix64), so the
+    * multiply-add's high bits — which decide the min — are well mixed;
+    * min-wise quality is validated empirically by the statistical
+    * agreement spec and the pipeline's recall >= 0.99 gates (the mod-prime
+    * family is only approximately min-wise independent too). */
   final class Perms(cfg: GraftConfig) {
     val a: Array[Long] = stream(cfg.seed, cfg.numPerm).map(_ | 1L)
     val b: Array[Long] = stream(cfg.seed + 0x5ee1e5eedL, cfg.numPerm)

@@ -57,22 +57,16 @@ object Ann {
   }
 
   /**
-   * Random-hyperplane LSH sign-sketch bucket key(s) per vector: for table t,
-   * bucket = bits of sign(v · r_i), i < nPlanes, planes drawn deterministically
-   * from the seed. Vectors in the same bucket are likely high-cosine
-   * (P[bit match] = 1 - angle/π).
+   * Random-hyperplane LSH sign-sketch bucket key(s) per vector of an
+   * already-prepped (and typically persisted) `e`: for table t, bucket =
+   * bits of sign(v · r_i), i < nPlanes, planes drawn deterministically from
+   * the seed. Vectors in the same bucket are likely high-cosine
+   * (P[bit match] = 1 - angle/π). The LSH paths below reuse ONE prepped
+   * side for bucketing AND rescoring instead of re-deriving it per consumer
+   * (the un-persisted form re-executed the scan + norm + bucket UDF subtree
+   * three times: both sides of the bucket self-join plus the star branch).
    */
-  def hyperplaneBuckets(emb: DataFrame, nPlanes: Int, nTables: Int, seed: Long,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    hyperplaneBucketsFromPrepped(prep(emb, idCol, vecCol),
-      emb.select(size(col(vecCol))).head().getInt(0), nPlanes, nTables, seed)
-
-  /** Variant over an already-prepped (and typically persisted) `e` — the
-    * LSH paths below reuse ONE prepped side for bucketing AND rescoring
-    * instead of re-deriving it per consumer (the un-persisted form
-    * re-executed the scan + norm + bucket UDF subtree three times: both
-    * sides of the bucket self-join plus the star branch). */
-  private def hyperplaneBucketsFromPrepped(e: DataFrame, dim: Int,
+  private def hyperplaneBuckets(e: DataFrame, dim: Int,
       nPlanes: Int, nTables: Int, seed: Long): DataFrame = {
     // Deterministic pseudo-gaussian planes: sum of 4 uniform draws per
     // coord. Precomputed once on the driver and closed over by ONE udf —
@@ -140,7 +134,7 @@ object Ann {
     // lineage-cut after persist (5 consumers re-analyze it otherwise)
     val e = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(eCached)
     val dim = emb.select(size(col(vecCol))).head().getInt(0)
-    val buckets = hyperplaneBucketsFromPrepped(e, dim, nPlanes, nTables, seed)
+    val buckets = hyperplaneBuckets(e, dim, nPlanes, nTables, seed)
     // capped bucket join (same machinery as every blocking stage): a dense
     // embedding region would otherwise make one mega-bucket emit O(n²)
     // candidate rows. Oversize buckets degrade to star pairs around the
@@ -273,7 +267,7 @@ object Ann {
       (PairsResult(out, emptyOversizeLog(emb.sparkSession)), Seq(eCached))
     } else {
       val dim = emb.select(size(col(vecCol))).head().getInt(0)
-      val buckets = hyperplaneBucketsFromPrepped(e, dim, nPlanes, nTables, seed)
+      val buckets = hyperplaneBuckets(e, dim, nPlanes, nTables, seed)
       val capped = BucketJoin.pairs(buckets, bucketCap, "cosine_lsh")
       val out = rescorePairs(capped.pairs, e)
         .filter(col("cosine") >= threshold)

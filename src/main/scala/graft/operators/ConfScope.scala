@@ -94,12 +94,12 @@ object ConfScope {
    * Right-size shuffle width to a SMALL local input (round-6 finding): in
    * the bench session shape every map task opens one shuffle writer PER
    * REDUCE PARTITION (1 MB file buffer + zstd stream + file open ≈ 8 ms
-   * each — microbenched via graft.tools.TaskCost2), so a 32-map × 32-reduce
-   * exchange costs ~8-10 core-SECONDS before it moves a single row. A 64k-row
-   * groupBy measured 9.3 core-s / 0.52 s wall at 32 reduce partitions vs
-   * 1.8 core-s / 0.22 s at 4 — identical results. An input whose plan size
-   * is at most [[SmallJobBytes]] therefore plans its shuffles at
-   * [[width]]`(bytes, `[[BytesPerPartition]]`)` instead of the session's
+   * each — microbenched by the TaskCost2 main, last in commit 24a9999), so
+   * a 32-map × 32-reduce exchange costs ~8-10 core-SECONDS before it moves
+   * a single row. A 64k-row groupBy measured 9.3 core-s / 0.52 s wall at 32
+   * reduce partitions vs 1.8 core-s / 0.22 s at 4 — identical results. An
+   * input whose plan size is at most [[SmallJobBytes]] therefore plans its
+   * shuffles at [[width]]`(bytes, `[[BytesPerPartition]]`)` instead of the session's
    * cluster-sized default. A cluster session, a streaming input and an
    * input of unknown size run at the session width. AQE stays as
    * configured — runtime coalescing composes with a smaller initial width.

@@ -63,11 +63,11 @@ object SetSimJoin {
   /**
    * Shared per-field prefix machinery (round 6): BOTH the planner's cost
    * estimate and the join itself need the (hashed set table, df-sorted
-   * token list) pair, and computing them twice — once inside
-   * candidatePairEstimates, once inside jaccardSelfJoin — duplicated the
-   * most expensive shuffle chain of the whole operator (tokenize → token-df
-   * groupBy → per-id sort agg). A PrefixTable is built ONCE per field and
-   * consumed by [[estimateFromTables]] and [[joinFromTable]].
+   * token list) pair, and computing them twice — once for the estimate,
+   * once for the join — duplicated the most expensive shuffle chain of the
+   * whole operator (tokenize → token-df groupBy → per-id sort agg). A
+   * PrefixTable is built ONCE per field and consumed by
+   * [[estimateFromTables]] and [[joinFromTable]].
    *
    *  - d: (id [,extra...], h sorted distinct hash array) — the verify side;
    *  - sorted: (id, st array<struct<df,tok>>, n [,extra...]) — the df-sorted
@@ -79,8 +79,7 @@ object SetSimJoin {
     def caches: Seq[DataFrame] = Seq(d, sorted)
   }
 
-  private[operators] def prefixTable(d0: DataFrame, extra: Seq[String] = Nil,
-      persist: Boolean = true): PrefixTable = {
+  private[operators] def prefixTable(d0: DataFrame, extra: Seq[String] = Nil): PrefixTable = {
     extra.foreach(c => require(d0.columns.contains(c), s"extra column '$c' missing"))
     // Tokens ride as 64-bit hashes end to end (the engine-wide convention):
     // distinct/intersection counts over the hashes equal the counts over
@@ -100,11 +99,9 @@ object SetSimJoin {
     // scan + tokenize + gram projection re-executes per consumer, which
     // measured as ~4x the cost of every join stage combined. At cluster
     // scale this is the stage checkpoint.
-    val d0sel = d0.select(col("id") +: extra.map(col) :+
+    val d = d0.select(col("id") +: extra.map(col) :+
       array_sort(array_distinct(hashed)).as("h"): _*)
-    val d =
-      if (persist) d0sel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else d0sel
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // 1 shuffle: global token order key = (document frequency, token hash).
     // Rarest-first prefixes minimize join fan-out: a token with df=k
@@ -118,13 +115,11 @@ object SetSimJoin {
     // consumed by BOTH sides of the candidate self-join (the prefix slice
     // below is a cheap cache-read projection per side) and by the planner's
     // estimate job.
-    val sorted0 = toks.join(dfreq, "tok")
+    val sorted = toks.join(dfreq, "tok")
       .groupBy("id")
       .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("st"),
         (count(lit(1)).as("n") +: extra.map(c => first(col(c)).as(c))): _*)
-    val sorted =
-      if (persist) sorted0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sorted0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     PrefixTable(d, sorted)
   }
 
@@ -178,36 +173,16 @@ object SetSimJoin {
 
   /**
    * Cost estimate for planning (NOT a result bound): the raw prefix-join
-   * output volume Σ_token C(df_prefix(token), 2) at each threshold, in ONE
-   * pass over the data (the per-threshold prefix membership of a token at
-   * 0-based position p in a set of size n is just p <= n - ⌈τ·n⌉, so a
-   * single posexplode serves every τ). Over-counts pairs sharing several
-   * prefix tokens and ignores the length/positional filters — exactly
-   * proportional to the join's dominant cost (raw candidate rows), which
-   * is what a planner needs. Used by MultiField to pick the cheapest
-   * provably-complete blocking plan.
+   * output volume Σ_token C(df_prefix(token), 2) per (table, threshold), for
+   * every table in ONE Spark job (the per-threshold prefix membership of a
+   * token at 0-based position p in a set of size n is just
+   * p <= n - ⌈τ·n⌉, so a single posexplode serves every τ). Over-counts
+   * pairs sharing several prefix tokens and ignores the length/positional
+   * filters — proportional to the join's dominant cost (raw candidate rows),
+   * which is what MultiField's planner needs. The same `sorted` caches then
+   * feed the chosen [[joinFromTable]], so the tokenize → token-df →
+   * per-id-sort chain runs once, not twice.
    */
-  def candidatePairEstimates(d0: DataFrame, thresholds: Seq[Double]): Map[Double, BigInt] =
-    candidatePairEstimatesMulti(Seq(("_", d0, thresholds)))
-      .map { case ((_, t), v) => t -> v }
-
-  /**
-   * Multi-table form: estimates for several (name, table, thresholds)
-   * triples in ONE Spark job — the per-table position rows are tagged and
-   * unioned, so a planner comparing K field plans pays one pass over all
-   * fields instead of K.
-   */
-  def candidatePairEstimatesMulti(
-      tables: Seq[(String, DataFrame, Seq[Double])]): Map[(String, Double), BigInt] =
-    estimateFromTables(tables.map { case (name, d0, ts) =>
-      // standalone form: one estimate job, nothing reused afterwards — the
-      // prefix tables are built un-persisted
-      (name, prefixTable(d0, persist = false), ts)
-    })
-
-  /** Estimate over prebuilt [[PrefixTable]]s — the planner path: the same
-    * `sorted` caches then feed the chosen [[joinFromTable]], so the
-    * tokenize → token-df → per-id-sort chain runs once, not twice. */
   private[operators] def estimateFromTables(
       tables: Seq[(String, PrefixTable, Seq[Double])]): Map[(String, Double), BigInt] = {
     require(tables.nonEmpty, "at least one table")

@@ -18,12 +18,17 @@ import org.apache.spark.sql.SparkSession
  *
  * Prints one parseable line per measured run:
  *   [scalec] cores=<total> execs=<n> pages=<n> dps=<v>
+ * and, with the third argument `profile` (scripts/scaling_one.sh), the
+ * run's per-job / per-stage decomposition from Measure's listener.
+ *
+ * Usage: ScalingCluster [nPages] [reps] [profile]
  */
 object ScalingCluster {
 
   def main(args: Array[String]): Unit = {
     val nPages = if (args.length > 0) args(0).toInt else 120000
     val reps = if (args.length > 1) args(1).toInt else 1
+    require(args.length <= 2 || args(2) == "profile", "third argument must be 'profile'")
     val spark = SparkSession.builder()
       .appName("graft-scaling-cluster")
       .config("spark.sql.session.timeZone", "UTC")
@@ -44,15 +49,13 @@ object ScalingCluster {
     graft.Bench.pipelineDocsPerSec(spark, 2000)
     spark.catalog.clearCache()
 
-    val profile = sys.env.get("GRAFT_SCALE_PROFILE").contains("1")
-    val listener = new JobProfile.L
-    if (profile) spark.sparkContext.addSparkListener(listener)
+    val profiler = if (args.length > 2) Some(Measure.attach(spark)) else None
 
     graft.Bench.loadProbeMs(); graft.Bench.loadProbeMs() // JIT the probe loop
     graft.Bench.memProbeMs(); graft.Bench.memProbeMs()
 
     (1 to reps).foreach { _ =>
-      listener.jobs.clear()
+      profiler.foreach(_.reset())
       // same fixed-work calibration probes as graft.Bench: ALU probe for
       // CPU-scheduler drag, memory probe for DRAM-bandwidth contention
       // (the failure mode the ALU probe is blind to — see memProbeMs).
@@ -64,22 +67,7 @@ object ScalingCluster {
       val wall = (System.nanoTime() - t0) / 1e9
       val execs = spark.sparkContext.statusTracker.getExecutorInfos.length - 1 // minus driver
       println(f"[scalec] cores=$cores execs=$execs pages=$nPages rows=$n dps=$dps%.1f probeMs=$probe%.1f memMs=$mem%.1f")
-      if (profile) {
-        Thread.sleep(500)
-        val js = listener.jobs.toSeq
-        val jobWall = js.map { case (_, j) => (j.end - j.start) / 1e3 }.sum
-        println(f"[scalec] jobs=${js.size} jobWallSum=$jobWall%.1f wall=$wall%.1f betweenJobs=${wall - jobWall}%.1f")
-        js.sortBy { case (_, j) => -(j.end - j.start) }.take(14).foreach { case (id, j) =>
-          val w = (j.end - j.start) / 1e3
-          val t = j.taskMs / 1e3
-          // attribution columns: where 4-executor per-core inflation goes —
-          // cpu (executorCpuTime), gc, shuffle fetch-wait, shuffle write
-          // time, shuffle bytes read/written (cross-JVM serde + copy cost
-          // that a single executor pays in-process)
-          println(f"[scalec] job $id%3d wall=$w%7.2f s taskSum=$t%8.2f s tasks=${j.tasks}%4d par=${t / math.max(w, 0.001)}%5.2f" +
-            f" cpu=${j.cpuNs / 1e9}%7.2f gc=${j.gcMs / 1e3}%5.2f fw=${j.fetchWaitMs / 1e3}%5.2f sw=${j.shuffleWriteNs / 1e9}%5.2f srMB=${j.shuffleReadBytes / 1e6}%7.1f swMB=${j.shuffleWriteBytes / 1e6}%7.1f")
-        }
-      }
+      profiler.foreach { p => p.drain(); Measure.report("[scalec]", "profile", wall, p) }
       spark.catalog.clearCache()
     }
     spark.stop()
