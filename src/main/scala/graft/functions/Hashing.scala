@@ -5,13 +5,11 @@ package graft.functions
  * sandbox), seeded, allocation-light — everything the signature kernel needs.
  *
  * splitmix64 finalizer (public domain, Steele et al. / Vigna) gives full
- * avalanche over the rolling polynomial pre-hash; MinHash permutations are
- * the standard universal-hash family h(x) = (a*x + b) mod (2^61 - 1).
+ * avalanche over the rolling polynomial pre-hash. The MinHash permutations
+ * built from [[stream]] are the wraparound family a*x + b over Z/2^64 with
+ * odd a (see TextSignatures.perms).
  */
 object Hashing {
-
-  /** Mersenne prime 2^61 - 1 — modulus for the MinHash permutation family. */
-  val MersennePrime: Long = (1L << 61) - 1
 
   /** splitmix64 finalizer: full-avalanche bijective mix of a 64-bit value. */
   @inline def mix64(z0: Long): Long = {
@@ -46,36 +44,6 @@ object Hashing {
       i += 1
     }
     mix64(h)
-  }
-
-  /** Hash a full string (UTF-16 code units, deterministic across JVMs). */
-  def hashString(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) {
-      h = h * 0x100000001b3L + s.charAt(i)
-      i += 1
-    }
-    mix64(h)
-  }
-
-  /**
-   * (x * 2^64) mod (2^61 - 1) arithmetic: multiply two 61-bit residues
-   * without overflow using 128-bit via Math.multiplyHigh (JDK 9+).
-   */
-  @inline def mulMod61(a: Long, b: Long): Long = {
-    val hi = Math.multiplyHigh(a, b)
-    val lo = a * b
-    // (hi * 2^64 + lo) mod (2^61 - 1); 2^64 ≡ 8 (mod 2^61-1)
-    var r = (hi << 3 | lo >>> 61) + (lo & MersennePrime)
-    if (r >= MersennePrime) r -= MersennePrime
-    r
-  }
-
-  @inline def addMod61(a: Long, b: Long): Long = {
-    var r = a + b
-    if (r >= MersennePrime) r -= MersennePrime
-    r
   }
 
   /**

@@ -27,7 +27,8 @@ object TextSignatures {
     * resume can never mix signatures from two hash families (round-5
     * advisor finding): v1 = a*h+b mod 2^61-1 MinHash family (rounds 1-4),
     * v2 = the wraparound odd-multiplier family (round 5+). Bump on any
-    * change that alters minhash/band/simhash/span key VALUES. */
+    * change that alters minhash/band/simhash/span key VALUES, including a
+    * change to a GraftConfig signature constant. */
   val formatVersion: Int = 2
 
   final case class Sig(
@@ -64,7 +65,8 @@ object TextSignatures {
     val simhashOnly: SigParts = SigParts(minhash = false, spans = false)
   }
 
-  /** Permutation parameters derived deterministically from the config seed.
+  /** Permutation parameters derived deterministically from the seed
+    * constant (one table: the signature constants are fixed, see GraftConfig).
     *
     * Hash family (round-5 change, 10x on the kernel's dominant loop): the
     * per-perm map is v = a*h + b over Z/2^64 with ODD a, compared in the
@@ -78,14 +80,11 @@ object TextSignatures {
     * min-wise quality is validated empirically by the statistical
     * agreement spec and the pipeline's recall >= 0.99 gates (the mod-prime
     * family is only approximately min-wise independent too). */
-  final class Perms(cfg: GraftConfig) {
-    val a: Array[Long] = stream(cfg.seed, cfg.numPerm).map(_ | 1L)
-    val b: Array[Long] = stream(cfg.seed + 0x5ee1e5eedL, cfg.numPerm)
+  private object perms {
+    private val c = GraftConfig.default
+    val a: Array[Long] = stream(c.seed, c.numPerm).map(_ | 1L)
+    val b: Array[Long] = stream(c.seed + 0x5ee1e5eedL, c.numPerm)
   }
-
-  private val permCache = new java.util.concurrent.ConcurrentHashMap[GraftConfig, Perms]()
-  def permsFor(cfg: GraftConfig): Perms =
-    permCache.computeIfAbsent(cfg, c => new Perms(c))
 
   /**
    * Per-thread scratch buffers. The kernel runs once per document on an
@@ -150,49 +149,43 @@ object TextSignatures {
     set.toSortedArray
   }
 
-  /** Distinct whitespace-token hashes of a normalized char array, sorted —
-    * the word-token analog of [[shingleSet]] (normalize() collapsed all
+  /** Calls `f` with the hash of each word token of a normalized char array,
+    * in order, and returns the token count. normalize() collapsed all
     * whitespace runs to single spaces, so token spans are the gaps between
-    * ' ' chars). Empty input → empty array. */
-  def tokenHashSet(cs: Array[Char]): Array[Long] = {
-    if (cs.length == 0) return Array.empty
-    val set = scratch.get().shingles
-    set.clear()
+    * ' ' chars. The one token walk: [[tokenHashSet]] and the SimHash vote. */
+  private def foreachTokenHash(cs: Array[Char])(f: Long => Unit): Int = {
+    var n = 0
     var start = 0
     var i = 0
     while (i <= cs.length) {
       if (i == cs.length || cs(i) == ' ') {
-        if (i > start) set.add(hashChars(cs, start, i))
+        if (i > start) { f(hashChars(cs, start, i)); n += 1 }
         start = i + 1
       }
       i += 1
     }
+    n
+  }
+
+  /** Distinct word-token hashes of a normalized char array, sorted — the
+    * word-token analog of [[shingleSet]]. Empty input → empty array. */
+  def tokenHashSet(cs: Array[Char]): Array[Long] = {
+    if (cs.length == 0) return Array.empty
+    val set = scratch.get().shingles
+    set.clear()
+    foreachTokenHash(cs)(h => set.add(h))
     set.toSortedArray
   }
 
   /** Full signature bundle; single pass over the text. emitShingles = false
     * skips materializing the sorted shingle array (set size still counted) —
-    * for pipelines whose verify tier recomputes Jaccard from text. */
-  def compute(text: String, cfg: GraftConfig, emitShingles: Boolean = true): Sig =
-    compute(text, cfg, emitShingles, Tokenize.kernel(cfg.tokenizer))
-
-  /** Variant taking a pre-resolved tokenizer: callers that run on executors
-    * (the signature UDF) resolve the kernel ONCE on the driver and capture
-    * the function in the task closure — name-registry entries registered on
-    * the driver then work on a real cluster, where the executor-side
-    * registry only contains the built-ins. (Registered kernels must be
-    * serializable — Scala lambdas are; the closure cleaner fails fast on
-    * the driver otherwise.) */
-  def compute(text: String, cfg: GraftConfig, emitShingles: Boolean,
-      kernelTok: Tokenize.KernelTokenizer): Sig =
-    compute(text, cfg, emitShingles, kernelTok, SigParts.all)
-
-  def compute(text: String, cfg: GraftConfig, emitShingles: Boolean,
-      kernelTok: Tokenize.KernelTokenizer, parts: SigParts): Sig = {
+    * for pipelines whose verify tier recomputes Jaccard from text. `parts`
+    * limits which signature families are computed (see SigParts). */
+  def compute(text: String, cfg: GraftConfig, emitShingles: Boolean = true,
+      parts: SigParts = SigParts.all): Sig = {
     if (text == null) return empty
     val cs = normalize(text)
     if (cs.length < cfg.shingleK) return empty
-    val perms = permsFor(cfg)
 
     // --- distinct shingle hashes + streaming MinHash (the 128-perm inner
     //     loop — the kernel's dominant cost — runs only when the MinHash
@@ -212,7 +205,7 @@ object TextSignatures {
       val h = hashChars(cs, i, i + k)
       if (set.add(h) && wantMinhash) {
         // sig holds SIGN-FLIPPED values during the scan (unsigned min via
-        // signed compare); unflipped in one pass below — see Perms doc
+        // signed compare); unflipped in one pass below — see perms doc
         var p = 0
         while (p < cfg.numPerm) {
           val v = (pa(p) * h + pb(p)) ^ Long.MinValue
@@ -247,25 +240,18 @@ object TextSignatures {
       bk
     }
 
-    // --- SimHash over word tokens. The tokenizer is the kernel's injection
-    //     point (reference's pluggable tokenizer, field_config_parser.py:
-    //     23-26): cfg.tokenizer names a registered span tokenizer; the
-    //     default "whitespace" reproduces the normalize-split exactly. ---
+    // --- SimHash over word tokens (every occurrence votes) ---
     var simhash = 0L
     var nTokens = 0
     var chunks = Array.emptyLongArray
     if (parts.simhash) {
       val votes = new Array[Int](64)
-      val spans = kernelTok(cs)
-      while (spans.hasNext) {
-        val span = spans.nextSpan()
-        val th = hashChars(cs, Tokenize.spanStart(span), Tokenize.spanEnd(span))
+      nTokens = foreachTokenHash(cs) { th =>
         var bit = 0
         while (bit < 64) {
           if (((th >>> bit) & 1L) == 1L) votes(bit) += 1 else votes(bit) -= 1
           bit += 1
         }
-        nTokens += 1
       }
       var bit = 0
       while (bit < 64) {

@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
  * decimal digits); its complement-minus-whitespace keeps _ as punctuation.
  *
  * The tokenizer is the reference's pluggable extension point
- * (field_config_parser.py:23-26 dotted-path import) — mirrored here as any
- * `Column => Column` injected into the signature/profile operators.
+ * (field_config_parser.py:23-26 dotted-path import) — mirrored here as the
+ * `Column => Column` tokenizer parameter of StatsJobs and PairFeatures. The
+ * signature kernel has one fixed tokenization: the single-space gaps of
+ * TextSignatures.normalize.
  */
 object Tokenize {
 
@@ -23,118 +25,4 @@ object Tokenize {
   /** Reference-equivalent default tokenizer (lowercases like the configs do). */
   def default(text: Column): Column =
     regexp_extract_all(lower(text), lit(defaultPattern), lit(0))
-
-  /** Plain whitespace tokenizer. */
-  def whitespace(text: Column): Column =
-    filter(split(trim(text), "\\s+"), t => length(t) > 0)
-
-  // ---- kernel-level tokenizers (the signature kernel's injection point,
-  //      mirroring the reference's pluggable tokenizer
-  //      field_config_parser.py:23-26) ----
-
-  /** Token spans [start, end) over a NORMALIZED char array (lowercase,
-    * single-space separated — TextSignatures.normalize output), packed as
-    * (start << 32) | end. Must be allocation-light: this runs once per
-    * TOKEN inside the hottest projection in the engine, and a tuple-based
-    * Iterator[(Int, Int)] boxed two Ints per token (profiled at ~0.3 GB
-    * per 60k docs — pure write-bandwidth waste on the scaling-critical
-    * allocation path). */
-  trait SpanIterator {
-    def hasNext: Boolean
-    /** Next span packed as (start.toLong << 32) | end. */
-    def nextSpan(): Long
-  }
-  type KernelTokenizer = Array[Char] => SpanIterator
-
-  @inline def spanStart(packed: Long): Int = (packed >>> 32).toInt
-  @inline def spanEnd(packed: Long): Int = packed.toInt
-
-  private final val NoSpan = -1L
-
-  /** Split on the single spaces normalize produced (the default — identical
-    * to the historical inline loop, so existing signatures are unchanged). */
-  val kernelWhitespace: KernelTokenizer = cs => new SpanIterator {
-    private var start = 0
-    private var next0: Long = advance()
-    private def advance(): Long = {
-      while (start < cs.length && cs(start) == ' ') start += 1
-      if (start >= cs.length) NoSpan
-      else {
-        var end = start
-        while (end < cs.length && cs(end) != ' ') end += 1
-        val s = (start.toLong << 32) | end
-        start = end + 1
-        s
-      }
-    }
-    def hasNext: Boolean = next0 != NoSpan
-    def nextSpan(): Long = { val s = next0; next0 = advance(); s }
-  }
-
-  /** Reference default_tokenizer semantics (numericalizer.py:73-77): runs
-    * of unicode letters/digits, or runs of other non-space chars. */
-  val kernelAlnum: KernelTokenizer = cs => new SpanIterator {
-    private var start = 0
-    private def isWord(c: Char) = Character.isLetterOrDigit(c)
-    private var next0: Long = advance()
-    private def advance(): Long = {
-      while (start < cs.length && cs(start) == ' ') start += 1
-      if (start >= cs.length) NoSpan
-      else {
-        val word = isWord(cs(start))
-        var end = start
-        while (end < cs.length && cs(end) != ' ' && isWord(cs(end)) == word) end += 1
-        val s = (start.toLong << 32) | end
-        start = end
-        s
-      }
-    }
-    def hasNext: Boolean = next0 != NoSpan
-    def nextSpan(): Long = { val s = next0; next0 = advance(); s }
-  }
-
-  /**
-   * OPEN registry keyed by GraftConfig.tokenizer — the analog of the
-   * reference's pluggable tokenizer (field_config_parser.py:23-26, which
-   * `_import_function`s ANY dotted-path callable). Two resolution routes:
-   *  - a name registered via [[registerKernel]] (library users plug any
-   *    span tokenizer under a short name);
-   *  - a dotted JVM class name implementing `Array[Char] => SpanIterator`
-   *    with a no-arg constructor — loaded reflectively, exactly the
-   *    reference's import-by-path semantics.
-   */
-  private val kernels =
-    new java.util.concurrent.ConcurrentHashMap[String, KernelTokenizer]()
-  kernels.put("whitespace", kernelWhitespace)
-  kernels.put("alnum", kernelAlnum)
-
-  def registerKernel(name: String, kt: KernelTokenizer): Unit =
-    kernels.put(name, kt)
-
-  def kernel(name: String): KernelTokenizer = {
-    val found = kernels.get(name)
-    if (found != null) found
-    else if (name.contains(".")) {
-      // cache the reflective load: the kernel is resolved once per driver
-      // (captured into the signature UDF closure) but kernel() must also
-      // stay cheap if called per document
-      kernels.computeIfAbsent(name, { n =>
-        try Class.forName(n).getDeclaredConstructor().newInstance()
-          .asInstanceOf[KernelTokenizer]
-        catch {
-          case e: Exception => throw new IllegalArgumentException(
-            s"cannot load tokenizer class '$n': $e")
-        }
-      })
-    } else {
-      val names = {
-        val it = kernels.keys()
-        val b = Seq.newBuilder[String]
-        while (it.hasMoreElements) b += it.nextElement()
-        b.result().sorted.mkString(", ")
-      }
-      throw new IllegalArgumentException(
-        s"unknown tokenizer '$name' (available: $names, or a class name)")
-    }
-  }
 }

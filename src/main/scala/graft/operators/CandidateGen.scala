@@ -74,7 +74,7 @@ object CandidateGen {
   /**
    * Substring stage (north-rule "suffix-array substring stage"): winnowing
    * fingerprints guarantee that any exact common substring of length >=
-   * winnowWindow + spanGramLen - 1 (<= minSpanLen, enforced by GraftConfig)
+   * winnowWindow + spanGramLen - 1 (<= minSpanLen, pinned by the GraftConfig constants)
    * shares a selected fingerprint, so the single-hit equi-join on
    * fingerprints is a complete blocker for spans >= minSpanLen (the
    * minSpanHits >= 2 corroboration below trades that completeness for a

@@ -98,20 +98,6 @@ object Dedup {
     out
     }
 
-  /** SimHash Hamming-ball near-dup pairs (token-level semantic near-dup). */
-  def simhashDupPairs(docs: DataFrame, cfg: GraftConfig,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sigs = Signatures.compute(docs, cfg, idCol, textCol, emitShingles = false,
-      parts = graft.functions.TextSignatures.SigParts.simhashOnly)
-    val cands = CandidateGen.simhashStage(sigs, cfg)
-    val fp = sigs.select(col("id"), col("simhash"))
-    cands.candidates
-      .join(fp.select(col("id").as("id1"), col("simhash").as("sh1")), "id1")
-      .join(fp.select(col("id").as("id2"), col("simhash").as("sh2")), "id2")
-      .select(col("id1"), col("id2"),
-        bit_count(col("sh1").bitwiseXOR(col("sh2"))).as("hamming"))
-  }
-
   /**
    * Embedding-cosine near-dup pairs over an (id, embedding Array[Float])
    * table: brute-force O(n²) with the dot product expressed via

@@ -351,14 +351,25 @@ object MultiField {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cands = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(candsCached)
 
-    // weighted rescore: per-field contribution rows, summed per pair. The
-    // per-field set arrays come from the SAME prefix tables (pt.d's `h` is
-    // the sorted distinct hash array — intersection/union SIZES over it are
-    // identical to the raw gram array's, so scores are unchanged).
-    val contrib = specs.zip(fieldTables).map { case (sp, pt) =>
+    // weighted rescore over the SAME prefix tables (pt.d's `h` is the
+    // sorted distinct hash array — intersection/union SIZES over it are
+    // identical to the raw gram array's, so scores are unchanged)
+    val out = weightedScore(cands, specs.zip(fieldTables).map { case (sp, pt) =>
+      (sp.weight, pt.d.select(col("id"), col("h").as("g")))
+    }, threshold)
+    (out, fieldTablesCached.flatMap(_.caches) :+ candsCached)
+  }
+
+  /** Σ_f w_f · jaccard_f / Σ_f w_f per candidate (id1, id2), rounded to 6
+    * and filtered at `threshold`: one contribution row per pair and field,
+    * summed per pair. `fields` holds each field's weight and its (id, g)
+    * set table; a pair missing a field's set scores 0 for it. */
+  private def weightedScore(cands: DataFrame, fields: Seq[(Double, DataFrame)],
+      threshold: Double): DataFrame = {
+    val contrib = fields.map { case (w, d) =>
       cands
-        .join(pt.d.select(col("id").as("id1"), col("h").as("g1")), Seq("id1"), "left")
-        .join(pt.d.select(col("id").as("id2"), col("h").as("g2")), Seq("id2"), "left")
+        .join(d.select(col("id").as("id1"), col("g").as("g1")), Seq("id1"), "left")
+        .join(d.select(col("id").as("id2"), col("g").as("g2")), Seq("id2"), "left")
         .select(col("id1"), col("id2"),
           // try_divide: an empty-vs-empty field is 0/0 → null → 0 (the
           // reference's empty-field zeroing; ANSI mode would error on /0)
@@ -366,13 +377,11 @@ object MultiField {
             try_divide(
               size(array_intersect(col("g1"), col("g2"))).cast("double"),
               size(array_union(col("g1"), col("g2")))),
-            lit(0.0)) * sp.weight).as("wj"))
+            lit(0.0)) * w).as("wj"))
     }.reduce(_ unionByName _)
-
-    val out = contrib.groupBy("id1", "id2")
-      .agg(round(sum(col("wj")) / totalW, 6).as("score"))
+    contrib.groupBy("id1", "id2")
+      .agg(round(sum(col("wj")) / fields.map(_._1).sum, 6).as("score"))
       .filter(col("score") >= threshold)
-    (out, fieldTablesCached.flatMap(_.caches) :+ candsCached)
   }
 
   /**
@@ -417,22 +426,8 @@ object MultiField {
   /** Weighted rescore of an externally-supplied candidate set (the verify
     * half of dedupPairs, shared by the exact and LSH paths). */
   def rescore(cands: DataFrame, records: DataFrame, specs: Seq[FieldSpec],
-      threshold: Double, idCol: String = "id"): DataFrame = {
-    val totalW = specs.map(_.weight).sum
-    val contrib = specs.map { sp =>
-      val d = records.select(col(idCol).as("id"), gramCol(col(sp.source), sp).as("g"))
-      cands.select("id1", "id2")
-        .join(d.select(col("id").as("id1"), col("g").as("g1")), Seq("id1"), "left")
-        .join(d.select(col("id").as("id2"), col("g").as("g2")), Seq("id2"), "left")
-        .select(col("id1"), col("id2"),
-          (coalesce(
-            try_divide(
-              size(array_intersect(col("g1"), col("g2"))).cast("double"),
-              size(array_union(col("g1"), col("g2")))),
-            lit(0.0)) * sp.weight).as("wj"))
-    }.reduce(_ unionByName _)
-    contrib.groupBy("id1", "id2")
-      .agg(round(sum(col("wj")) / totalW, 6).as("score"))
-      .filter(col("score") >= threshold)
-  }
+      threshold: Double, idCol: String = "id"): DataFrame =
+    weightedScore(cands.select("id1", "id2"), specs.map { sp =>
+      (sp.weight, records.select(col(idCol).as("id"), gramCol(col(sp.source), sp).as("g")))
+    }, threshold)
 }

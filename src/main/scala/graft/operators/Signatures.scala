@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.config.GraftConfig
 import graft.functions.TextSignatures
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -28,15 +28,11 @@ object Signatures {
       n_shingles: Int,
       n_tokens: Int)
 
-  /** Column-level signature UDF (one pass; see TextSignatures.compute).
-    * The tokenizer is resolved HERE, on the driver, and captured in the
-    * closure — a name registered via Tokenize.registerKernel on the driver
-    * would not exist in executor JVMs' registries on a real cluster. */
+  /** Column-level signature UDF (one pass; see TextSignatures.compute). */
   def sigUdf(cfg: GraftConfig, emitShingles: Boolean = true,
-      parts: TextSignatures.SigParts = TextSignatures.SigParts.all) = {
-    val kernelTok = graft.functions.Tokenize.kernel(cfg.tokenizer)
+      parts: TextSignatures.SigParts = TextSignatures.SigParts.all) =
     udf { (text: String) =>
-    val s = TextSignatures.compute(text, cfg, emitShingles, kernelTok, parts)
+    val s = TextSignatures.compute(text, cfg, emitShingles, parts)
     SigRow(s.shingles,
       if (emitShingles) s.minhash else Array.emptyLongArray, // narrow mode:
       // tier-1 runs on the packed lanes; the full 1KB signature is never
@@ -44,7 +40,6 @@ object Signatures {
       s.minhash8, s.bandKeys, s.simhash, s.simhashChunks,
       s.spanKeys, s.nShingles, s.nTokens)
     }
-  }
 
   /**
    * df(id, text, ...) -> df(id, shingles, band_keys, simhash, simhash_chunks,
@@ -69,10 +64,4 @@ object Signatures {
       .select(col("id"), col("sig.*"))
     if (emitShingles) out else out.drop("shingles").drop("minhash")
   }
-
-  /** Jaccard of two sorted distinct shingle-hash arrays — native Catalyst
-    * expression (codegen'd, zero-copy over ArrayData); null → null, dropped
-    * by the downstream threshold filter. */
-  def jaccard(a: Column, b: Column): Column =
-    graft.expressions.SimilarityExpressions.jaccardSorted(a, b)
 }

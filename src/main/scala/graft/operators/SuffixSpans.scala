@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
  *
  * Distributed shape: winnowing fingerprints (TextSignatures.winnow) guarantee
  * any common substring of length >= winnowWindow + spanGramLen - 1
- * (<= minSpanLen, enforced by GraftConfig) shares a selected fingerprint,
+ * (<= minSpanLen, pinned by the GraftConfig constants) shares a selected fingerprint,
  * so docs are exploded by
  * fingerprint, co-shuffled into fingerprint groups (each group small — the
  * fingerprint is 64-bit content-derived), and a per-group suffix array

@@ -1,8 +1,10 @@
 package graft.streaming
 
 import graft.config.GraftConfig
+import graft.functions.TextSignatures.SigParts
 import graft.operators.Signatures
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -34,27 +36,29 @@ object IncrementalDedup {
     * page matching the band still links into the bucket's component through
     * the hub), and the capped buckets are available via [[oversizeLog]] —
     * no silent drops. */
-  def staticBandTable(pages: DataFrame, cfg: GraftConfig): DataFrame = {
-    val m = Signatures.compute(pages, cfg, emitShingles = false,
-      parts = graft.functions.TextSignatures.SigParts.minhashOnly)
-      .select(col("id"), explode(col("band_keys")).as("bucket"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("bucket")
-    m.withColumn("bucket_n", count(lit(1)).over(w))
-      .withColumn("bucket_min", min("id").over(w))
-      .filter(col("bucket_n") <= cfg.maxBandBucket || col("id") === col("bucket_min"))
-      .select(col("id"), col("bucket"))
-  }
+  def staticBandTable(pages: DataFrame, cfg: GraftConfig): DataFrame =
+    cappedMemberships(pages, cfg).select(col("id"), col("bucket"))
 
   /** Capped static bands (stage, bucket, bucket_n, policy) — the streaming
-    * analog of BucketJoin's oversize log. */
-  def oversizeLog(pages: DataFrame, cfg: GraftConfig): DataFrame = {
-    val m = Signatures.compute(pages, cfg, emitShingles = false,
-      parts = graft.functions.TextSignatures.SigParts.minhashOnly)
-      .select(col("id"), explode(col("band_keys")).as("bucket"))
-    m.groupBy("bucket").agg(count(lit(1)).as("bucket_n"))
+    * analog of BucketJoin's oversize log: the hub rows of the oversize
+    * buckets. */
+  def oversizeLog(pages: DataFrame, cfg: GraftConfig): DataFrame =
+    cappedMemberships(pages, cfg)
       .filter(col("bucket_n") > cfg.maxBandBucket)
       .select(lit("stream_static_bands").as("stage"), col("bucket"),
         col("bucket_n"), lit("Star").as("policy"))
+
+  /** Skew-capped band memberships (id, <payload>, bucket, bucket_n) of a
+    * static corpus: every member of a bucket of <= maxBandBucket ids, only
+    * the min-id hub of a larger one. */
+  private def cappedMemberships(pages: DataFrame, cfg: GraftConfig,
+      payload: String*): DataFrame = {
+    val w = Window.partitionBy("bucket")
+    Signatures.compute(pages, cfg, emitShingles = false, parts = SigParts.minhashOnly)
+      .select((col("id") +: payload.map(col)) :+ explode(col("band_keys")).as("bucket"): _*)
+      .withColumn("bucket_n", count(lit(1)).over(w))
+      .withColumn("bucket_min", min("id").over(w))
+      .filter(col("bucket_n") <= cfg.maxBandBucket || col("id") === col("bucket_min"))
   }
 
   /**
@@ -64,7 +68,7 @@ object IncrementalDedup {
   def candidates(streamingPages: DataFrame, staticBands: DataFrame,
       cfg: GraftConfig): DataFrame = {
     val newBands = Signatures.compute(streamingPages, cfg, emitShingles = false,
-      parts = graft.functions.TextSignatures.SigParts.minhashOnly)
+      parts = SigParts.minhashOnly)
       .select(col("id").as("new_id"), explode(col("band_keys")).as("bucket"))
     newBands.join(staticBands.withColumnRenamed("id", "existing_id"), "bucket")
       .filter(col("new_id") =!= col("existing_id"))
@@ -76,16 +80,9 @@ object IncrementalDedup {
     * along each membership row, so the stream-side verify is a plain
     * stream-static equi-join — no second lookup table. ~numPerm bytes per
     * membership row of extra payload. */
-  def staticScoredTable(pages: DataFrame, cfg: GraftConfig): DataFrame = {
-    val m = Signatures.compute(pages, cfg, emitShingles = false,
-      parts = graft.functions.TextSignatures.SigParts.minhashOnly)
-      .select(col("id"), col("minhash8"), explode(col("band_keys")).as("bucket"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("bucket")
-    m.withColumn("bucket_n", count(lit(1)).over(w))
-      .withColumn("bucket_min", min("id").over(w))
-      .filter(col("bucket_n") <= cfg.maxBandBucket || col("id") === col("bucket_min"))
+  def staticScoredTable(pages: DataFrame, cfg: GraftConfig): DataFrame =
+    cappedMemberships(pages, cfg, "minhash8")
       .select(col("id"), col("bucket"), col("minhash8"))
-  }
 
   /**
    * Streaming VERIFY tier: micro-batches emit SCORED pairs
@@ -109,7 +106,7 @@ object IncrementalDedup {
     val t = cfg.simThreshold
     val m = margin.getOrElse(3.5 * math.sqrt(t * (1 - t) / cfg.numPerm))
     val newBands = Signatures.compute(streamingPages, cfg, emitShingles = false,
-      parts = graft.functions.TextSignatures.SigParts.minhashOnly)
+      parts = SigParts.minhashOnly)
       .select(col("id").as("new_id"), col("minhash8").as("mh_new"),
         explode(col("band_keys")).as("bucket"))
     newBands

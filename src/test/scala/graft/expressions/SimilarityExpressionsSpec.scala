@@ -103,18 +103,21 @@ class SimilarityExpressionsSpec extends SparkSuite {
       .select(SimilarityExpressions.minhashAgreementPacked($"pa", $"pb", cfg.numPerm))
       .head().getDouble(0)
     assert(one == 1.0)
-    // numPerm NOT a multiple of 8: the padded tail lanes are excluded —
-    // disjoint 100-perm signatures must score 0.0, not 4/104
-    val cfg100 = cfg.copy(numPerm = 100, bands = 25, rowsPerBand = 4)
-    val x = graft.functions.TextSignatures.compute("alpha beta gamma delta epsilon", cfg100)
-    val y = graft.functions.TextSignatures.compute("zz qq ww ee rr tt yy uu", cfg100)
-    val frac = Seq((x.minhash8, y.minhash8)).toDF("pa", "pb")
+    // numPerm NOT a multiple of 8: the padded tail lanes are excluded.
+    // Synthetic 100-lane signatures packed like Sig.minhash8 (13 longs, the
+    // last 4 lanes zero padding on both sides): lanes 0..24 agree, the rest
+    // differ, so the score is 25/100 — not 29/104 from the padding.
+    def pack(lane: Int => Long): Array[Long] = {
+      val pk = new Array[Long]((100 + 7) / 8)
+      (0 until 100).foreach(p => pk(p >>> 3) |= (lane(p) & 0xFFL) << ((p & 7) * 8))
+      pk
+    }
+    val x = pack(p => p + 1)
+    val y = pack(p => if (p < 25) p + 1 else p + 101)
+    def packed100(a: Array[Long], b: Array[Long]) = Seq((a, b)).toDF("pa", "pb")
       .select(SimilarityExpressions.minhashAgreementPacked($"pa", $"pb", 100))
       .head().getDouble(0)
-    val fullAgree = x.minhash.zip(y.minhash).count { case (p, q) => p == q }
-    // packed-over-100-lanes can only exceed full agreement via real 8-bit
-    // collisions, never via the 4 phantom padding lanes
-    assert(frac * 100 >= fullAgree && frac * 100 <= fullAgree + 3,
-      s"frac=$frac full=$fullAgree")
+    assert(packed100(x, y) == 0.25)
+    assert(packed100(x, pack(p => p + 150)) == 0.0) // disjoint: 0.0, not 4/104
   }
 }

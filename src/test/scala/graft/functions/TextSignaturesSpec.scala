@@ -73,72 +73,48 @@ class TextSignaturesSpec extends AnyFunSuite {
     assert(Hashing.jaccardSorted(Array(1L, 2L), Array(2L, 3L)) == 1.0 / 3.0)
   }
 
-  test("mulMod61 matches BigInt arithmetic") {
-    val rnd = new scala.util.Random(7)
-    for (_ <- 1 to 1000) {
-      val a = rnd.nextLong().abs % Hashing.MersennePrime
-      val b = rnd.nextLong().abs % Hashing.MersennePrime
-      val expected = (BigInt(a) * BigInt(b) % BigInt(Hashing.MersennePrime)).toLong
-      assert(Hashing.mulMod61(a, b) == expected, s"a=$a b=$b")
+  test("golden signatures: fixed texts pin every signature family") {
+    // Recorded at formatVersion 2. If one of these changes, signature values
+    // changed and TextSignatures.formatVersion must be bumped with it.
+    def digest(a: Array[Long]): Long = a.foldLeft(a.length.toLong)((h, x) => h * 1000003L + x)
+    // text -> (simhash, n_tokens, n_shingles, digests of band_keys, span_keys, minhash8)
+    val golden = Seq(
+      "  Hello   WORLD x " ->
+        (8205082429629239435L, 3, 9, -782672531576688717L, 0L, -44031731564584524L),
+      "" -> (0L, 0, 0, 0L, 0L, 0L),
+      "alpha-beta gamma, delta!" ->
+        (1973604812745100922L, 3, 20, -2990601973084568868L, -6897542178163277475L,
+          5034188284346481487L),
+      "tab\tseparated\nlines\r\n  here" ->
+        (5548875414268879492L, 4, 20, -8759705651382107075L, -1386687246500818282L,
+          6768453642776515430L),
+      // NBSP is not whitespace (Character.isWhitespace): "non breaking" is one token
+      "non\u00a0breaking space" ->
+        (158753093587601L, 2, 14, 6346657154630471539L, 0L, -7961021427057269361L),
+      "abc" -> (0L, 0, 0, 0L, 0L, 0L), // shorter than shingleK: no signatures
+      "The quick brown fox jumps over the lazy dog, then naps in the warm afternoon sun." ->
+        (2272096523324627813L, 16, 76, -3584822760366774979L, 4897078875542317159L,
+          -5301979491178601546L))
+    assert(TextSignatures.formatVersion == 2)
+    golden.foreach { case (text, want) =>
+      val s = TextSignatures.compute(text, cfg)
+      assert((s.simhash, s.nTokens, s.nShingles, digest(s.bandKeys), digest(s.spanKeys),
+        digest(s.minhash8)) == want, text)
+      // word tokens are the single-space gaps of normalize: the same set as a
+      // plain whitespace split of the lowercased text
+      val words = text.toLowerCase.split("[ \t\n\r]+").filter(_.nonEmpty)
+      val cs = TextSignatures.normalize(text)
+      assert(TextSignatures.tokenHashSet(cs).toSeq ==
+        words.map(w => Hashing.hashChars(w.toCharArray, 0, w.length)).distinct.sorted.toSeq, text)
+      if (cs.length >= cfg.shingleK) assert(s.nTokens == words.length, text)
     }
   }
 
-  test("kernel tokenizers: whitespace spans == historical split; alnum splits punctuation") {
-    def toks(name: String, s: String): Seq[String] = {
-      val cs = TextSignatures.normalize(s)
-      val it = Tokenize.kernel(name)(cs)
-      val out = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val sp = it.nextSpan()
-        val a = Tokenize.spanStart(sp); val b = Tokenize.spanEnd(sp)
-        out += new String(cs, a, b - a)
-      }
-      out.result()
-    }
-    assert(toks("whitespace", "  Hello   WORLD x ") == Seq("hello", "world", "x"))
-    assert(toks("whitespace", "") == Seq.empty)
-    assert(toks("alnum", "foo-bar v2.1!") == Seq("foo", "-", "bar", "v2", ".", "1", "!"))
-    intercept[IllegalArgumentException](Tokenize.kernel("neural"))
-  }
-
-  test("tokenizer choice changes simhash tokens but whitespace default is unchanged") {
-    val cfg = GraftConfig.default
-    val text = "alpha-beta gamma, delta!"
-    val ws = TextSignatures.compute(text, cfg)
-    val al = TextSignatures.compute(text, cfg.copy(tokenizer = "alnum"))
-    assert(ws.nTokens == 3) // "alpha-beta", "gamma,", "delta!"
-    assert(al.nTokens == 7) // alpha,-,beta,gamma,",",delta,!
-    // shingle/minhash signatures are tokenizer-independent
-    assert(ws.minhash.toSeq == al.minhash.toSeq)
-    assert(ws.shingles.toSeq == al.shingles.toSeq)
-    assert(ws.simhash != al.simhash)
-  }
-
-  test("tokenizer registry is OPEN: registered kernels + dotted-path classes work") {
-    // register a custom kernel under a short name (the reference's
-    // pluggable-tokenizer extension point, field_config_parser.py:23-26)
-    Tokenize.registerKernel("everychar", cs => new Tokenize.SpanIterator {
-      private var i = 0
-      def hasNext: Boolean = i < cs.length
-      def nextSpan(): Long = { val s = (i.toLong << 32) | (i + 1); i += 1; s }
-    })
-    val cs = TextSignatures.normalize("ab c")
-    val it = Tokenize.kernel("everychar")(cs)
-    var n = 0
-    while (it.hasNext) { it.nextSpan(); n += 1 }
-    assert(n == 4) // "ab c" -> 4 chars incl the space
-    // a registered kernel is usable straight from the config
-    val sig = TextSignatures.compute("hello world of tokens",
-      graft.config.GraftConfig.default.copy(tokenizer = "everychar"))
-    assert(sig.nTokens == "hello world of tokens".length)
-    // unknown names list what IS available
-    val err = intercept[IllegalArgumentException](Tokenize.kernel("neural2"))
-    assert(err.getMessage.contains("everychar") && err.getMessage.contains("whitespace"))
-    // dotted path loads a class reflectively (reference _import_function parity)
-    val viaClass = Tokenize.kernel("graft.functions.TestKernelTokenizer")(cs)
-    var m = 0
-    while (viaClass.hasNext) { viaClass.nextSpan(); m += 1 }
-    assert(m == 2) // whitespace spans: "ab", "c"
-    intercept[IllegalArgumentException](Tokenize.kernel("no.such.Class"))
+  test("signature constants keep the blocking stages complete") {
+    assert(cfg.numPerm == cfg.bands * cfg.rowsPerBand)
+    assert(cfg.hammingRadius < cfg.simHashChunks) // pigeonhole over the chunks
+    assert(cfg.simHashBits == 64) // SimHash packs into one BIGINT
+    assert(cfg.winnowWindow + cfg.spanGramLen - 1 <= cfg.minSpanLen) // winnowing guarantee
+    intercept[IllegalArgumentException](GraftConfig(simThreshold = 1.5))
   }
 }

@@ -92,23 +92,23 @@ class IncrementalDedupSpec extends SparkSuite {
   }
 
   test("stream-static band join is skew-capped: hot static band emits hub-only pairs") {
-    // static corpus: 100 pages sharing one boilerplate band bucket would
-    // multiply every matching micro-batch row x100 uncapped. With the cap
-    // (maxBandBucket = 8 here), the static table keeps only the bucket's
+    // static corpus: 300 identical pages share every band bucket and would
+    // multiply every matching micro-batch row x300 uncapped. Above the cap
+    // (maxBandBucket = 256), the static table keeps only the bucket's
     // min-id hub for oversize buckets.
-    val small = cfg.copy(maxBandBucket = 8)
-    val base = PageCorpus.makeText(small.seed, 1, 0)
-    val staticDf = (0L until 100L).map(i => (i, base)).toDF("id", "text")
-    val bands = IncrementalDedup.staticBandTable(staticDf, small)
+    val base = PageCorpus.makeText(cfg.seed, 1, 0)
+    val staticDf = (0L until 300L).map(i => (i, base)).toDF("id", "text")
+    assert(300 > cfg.maxBandBucket)
+    val bands = IncrementalDedup.staticBandTable(staticDf, cfg)
     // identical docs share every band; all buckets oversize -> hub rows only
     val perBucket = bands.groupBy("bucket").count().agg(max("count")).head().getLong(0)
     assert(perBucket == 1, s"expected hub-only buckets, got max membership $perBucket")
     // the cap is logged, never silent
-    assert(IncrementalDedup.oversizeLog(staticDf, small).count() > 0)
+    assert(IncrementalDedup.oversizeLog(staticDf, cfg).count() > 0)
 
     val stream = MemoryStream[(Long, String)](spark)
     val streamDf = stream.toDF().select(col("_1").as("id"), col("_2").as("text"))
-    val cands = IncrementalDedup.candidates(streamDf, bands, small)
+    val cands = IncrementalDedup.candidates(streamDf, bands, cfg)
     val q = cands.writeStream.format("memory").queryName("inc_capped")
       .outputMode("append").start()
     stream.addData(Seq((5000L, base)))
@@ -116,7 +116,7 @@ class IncrementalDedupSpec extends SparkSuite {
     q.stop()
     val got = spark.table("inc_capped").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    // bounded: one pair per matching band bucket (the hub), not 100 per band
+    // bounded: one pair per matching band bucket (the hub), not 300 per band
     assert(got.nonEmpty && got.forall(_._2 == 0L),
       s"stream rows must link only to the bucket hub (min id 0): ${got.take(5).toSeq}")
   }
