@@ -48,6 +48,8 @@ import org.apache.spark.sql.functions._
  */
 object Cli {
 
+  private val Modes = Set("dedup", "linkage")
+
   final case class Args(
       mode: String = "dedup",
       input: String = "",
@@ -87,9 +89,12 @@ object Cli {
     val a = loop(Args(), argv.toList)
     require(a.input.nonEmpty, "--input is required")
     require(a.output.nonEmpty, "--output is required")
-    require(Set("dedup", "linkage")(a.mode), s"unknown --mode ${a.mode}")
+    requireMode(a)
     a
   }
+
+  private def requireMode(a: Args): Unit =
+    require(Modes(a.mode), s"unknown --mode ${a.mode} (one of ${Modes.mkString(", ")})")
 
   private def readInput(spark: SparkSession, a: Args): DataFrame = {
     val fmt =
@@ -118,6 +123,7 @@ object Cli {
 
   /** Run with an existing session (tests call this; main wraps it). */
   def run(spark: SparkSession, a: Args): Unit = {
+    requireMode(a)
     val cfg0 = GraftConfig.default
     // --sweep implies scoring down to min(sweep): pairs must be retained at
     // the lowest swept threshold or the sweep rows below it would count a
@@ -186,7 +192,7 @@ object Cli {
                 col("jaccard").as("score"))
         }
         (p, false)
-      case ("dedup", Some(json)) =>
+      case (_, Some(json)) => // dedup
         val specs = MultiField.bindStats(raw, MultiField.parseConfigs(json))
         def compute() = MultiField.dedupPairs(
           raw.withColumn(a.idCol, col(a.idCol).cast("long")), specs,
@@ -206,7 +212,7 @@ object Cli {
           case None => compute()
         }
         (p, true)
-      case ("dedup", None) =>
+      case (_, None) => // dedup
         val recs = raw.select(col(a.idCol).cast("long").as("id"),
           col(a.textCol).as("text"))
         // --checkpoint-dir: stage outputs land there (config-scoped, see

@@ -107,7 +107,7 @@ object PageCorpus {
 
   /** Deterministic page text for (cluster, variant); variant 0 = base. */
   def makeText(seed: Long, cluster: Long, variant: Int): String = {
-    val toks = scala.collection.mutable.ArrayBuffer(baseTokens(seed, cluster): _*)
+    val toks = scala.collection.mutable.ArrayBuffer.from(baseTokens(seed, cluster))
     if (variant > 0) {
       val rng = new Rng(seed, cluster, variant.toLong, 0x4011eL)
       // light seeded edit noise: ~4% of tokens touched — keeps char-shingle
@@ -162,9 +162,9 @@ object PageCorpus {
     val sp = spine(nPages, seed)
     val nPart = if (partitions > 0) partitions
       else math.max(spark.sparkContext.defaultParallelism, 1)
-    val spineDs = spark.createDataset(sp).repartition(nPart)
+    val spineDs = spark.createDataset(sp.toIndexedSeq).repartition(nPart)
     val pages = spineDs.map(s => makePage(seed, s))
-    val truth = spark.createDataset(sp.map(s =>
+    val truth = spark.createDataset(sp.toIndexedSeq.map(s =>
       TruthRow(s.id, s"https://${hostFor(seed, s.id)}/p/${s.cluster}/${s.variant}", s.cluster)))
     (pages, truth)
   }

@@ -37,9 +37,6 @@ final class UnionFind {
   def unionPairs(pairs: IterableOnce[(Long, Long)]): Unit =
     pairs.iterator.foreach { case (a, b) => union(a, b) }
 
-  /** component root per seen element. */
-  def componentOf(x: Long): Long = find(x)
-
   /** root -> sorted members, for every element ever touched. */
   def componentDict: Map[Long, Seq[Long]] =
     parent.keys.toSeq.groupBy(find).view.mapValues(_.sorted).toMap

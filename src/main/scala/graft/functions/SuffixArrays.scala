@@ -193,7 +193,7 @@ object SuffixArrays {
     // capped at SuffixSpans' groupCap (64), and beyond 1024 members
     // (2 x 4 MB) a map-based fallback keeps the public API safe for
     // arbitrary group sizes instead of overflowing nDocs*nDocs.
-    if (nDocs > 1024) return dupSpansMapped(docs, minLen, maxPairsPerGroup,
+    if (nDocs > 1024) return dupSpansMapped(minLen, maxPairsPerGroup,
       s, docOf, sa, lcps, rmq, ids)
     val bestLen = new Array[Int](nDocs * nDocs)
     val bestStart = new Array[Int](nDocs * nDocs)
@@ -247,10 +247,9 @@ object SuffixArrays {
 
   /** Fallback for groups too large for the flat-array accumulator: same
     * algorithm over a hash map bounded by maxPairsPerGroup. */
-  private def dupSpansMapped(docs: Seq[(Long, String)], minLen: Int,
-      maxPairsPerGroup: Int, s: Array[Int], docOf: Array[Int],
-      sa: Array[Int], lcps: Array[Int], rmq: Rmq,
-      ids: Array[Long]): Seq[SpanPair] = {
+  private def dupSpansMapped(minLen: Int, maxPairsPerGroup: Int,
+      s: Array[Int], docOf: Array[Int], sa: Array[Int], lcps: Array[Int],
+      rmq: Rmq, ids: Array[Long]): Seq[SpanPair] = {
     val best = scala.collection.mutable.HashMap.empty[(Long, Long), (Int, Int)]
     val lastSeen = scala.collection.mutable.HashMap.empty[Int, Int]
     var i = 1

@@ -49,20 +49,19 @@ object TextSignatures {
 
   val empty: Sig = Sig(Array.empty, Array.empty, Array.empty, Array.empty, 0L, Array.empty, Array.empty, 0, 0)
 
-  /** Which signature families to compute. At 10^12 documents the kernel is
-    * the hottest function in the engine — a consumer that only runs one
-    * blocking stage (e.g. MinHash-only dedup, the streaming band table)
-    * should not pay for the SimHash token vote or the winnowing pass.
-    * Disabled parts come back as empty arrays / zeros, which the
-    * explode-based blocking skips naturally. */
+  /** Which optional signature families to compute. At 10^12 documents the
+    * kernel is the hottest function in the engine — a consumer that only
+    * runs MinHash blocking (e.g. MinHash-only dedup) should not pay for the
+    * SimHash token vote or the winnowing pass. MinHash is always computed:
+    * every verify tier 1 scores its packed lanes. Disabled parts come back
+    * as empty arrays / zeros, which the explode-based blocking skips
+    * naturally. */
   final case class SigParts(
-      minhash: Boolean = true,
       simhash: Boolean = true,
       spans: Boolean = true)
   object SigParts {
     val all: SigParts = SigParts()
     val minhashOnly: SigParts = SigParts(simhash = false, spans = false)
-    val simhashOnly: SigParts = SigParts(minhash = false, spans = false)
   }
 
   /** Permutation parameters derived deterministically from the seed
@@ -188,22 +187,19 @@ object TextSignatures {
     if (cs.length < cfg.shingleK) return empty
 
     // --- distinct shingle hashes + streaming MinHash (the 128-perm inner
-    //     loop — the kernel's dominant cost — runs only when the MinHash
-    //     part is wanted; the dedup + count always runs: nShingles is part
-    //     of every bundle) ---
+    //     loop is the kernel's dominant cost) ---
     val k = cfg.shingleK
     val set = scratch.get().shingles
     set.clear()
-    val wantMinhash = parts.minhash
-    val sig = if (wantMinhash) new Array[Long](cfg.numPerm) else Array.emptyLongArray
-    if (wantMinhash) java.util.Arrays.fill(sig, Long.MaxValue)
+    val sig = new Array[Long](cfg.numPerm)
+    java.util.Arrays.fill(sig, Long.MaxValue)
     var i = 0
     val last = cs.length - k
     val pa = perms.a
     val pb = perms.b
     while (i <= last) {
       val h = hashChars(cs, i, i + k)
-      if (set.add(h) && wantMinhash) {
+      if (set.add(h)) {
         // sig holds SIGN-FLIPPED values during the scan (unsigned min via
         // signed compare); unflipped in one pass below — see perms doc
         var p = 0
@@ -215,29 +211,30 @@ object TextSignatures {
       }
       i += 1
     }
-    if (wantMinhash) {
-      var p = 0
-      while (p < cfg.numPerm) { sig(p) ^= Long.MinValue; p += 1 }
+    // unflip, and pack the 8-bit minhash lanes (see Sig.minhash8)
+    val packed = new Array[Long]((cfg.numPerm + 7) / 8)
+    var lane = 0
+    while (lane < cfg.numPerm) {
+      sig(lane) ^= Long.MinValue
+      packed(lane >>> 3) |= (sig(lane) & 0xFFL) << ((lane & 7) * 8)
+      lane += 1
     }
     val nShingles = set.size
     val shingles = if (emitShingles) set.toSortedArray else Array.emptyLongArray
 
     // --- LSH band keys: hash r consecutive sig rows per band, mix band idx
     //     so band 3's bucket space never collides with band 7's ---
-    val bandKeys = if (!wantMinhash) Array.emptyLongArray else {
-      val bk = new Array[Long](cfg.bands)
-      var bnd = 0
-      while (bnd < cfg.bands) {
-        var h = mix64(bnd.toLong + cfg.seed)
-        var r = 0
-        while (r < cfg.rowsPerBand) {
-          h = mix2(h, sig(bnd * cfg.rowsPerBand + r))
-          r += 1
-        }
-        bk(bnd) = h
-        bnd += 1
+    val bandKeys = new Array[Long](cfg.bands)
+    var bnd = 0
+    while (bnd < cfg.bands) {
+      var h = mix64(bnd.toLong + cfg.seed)
+      var r = 0
+      while (r < cfg.rowsPerBand) {
+        h = mix2(h, sig(bnd * cfg.rowsPerBand + r))
+        r += 1
       }
-      bk
+      bandKeys(bnd) = h
+      bnd += 1
     }
 
     // --- SimHash over word tokens (every occurrence votes) ---
@@ -275,17 +272,6 @@ object TextSignatures {
     val spanKeys =
       if (parts.spans) winnow(cs, cfg.spanGramLen, cfg.winnowWindow)
       else Array.emptyLongArray
-
-    // packed 8-bit minhash lanes (see Sig.minhash8)
-    val packed = if (!wantMinhash) Array.emptyLongArray else {
-      val pk = new Array[Long]((cfg.numPerm + 7) / 8)
-      var p = 0
-      while (p < cfg.numPerm) {
-        pk(p >>> 3) |= (sig(p) & 0xFFL) << ((p & 7) * 8)
-        p += 1
-      }
-      pk
-    }
 
     Sig(shingles, sig, packed, bandKeys, if (nTokens == 0) 0L else simhash,
       chunks, spanKeys, nShingles, nTokens)

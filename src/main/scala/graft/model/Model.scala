@@ -4,21 +4,14 @@ import java.sql.Timestamp
 
 /**
  * Input row per BASELINE.json::input_hint — an Iceberg-shaped table of
- * Common-Crawl-style web pages. `text` is the dedup payload and is NEVER
- * rewritten by any stage (per-row invariant: byte-identical extracted text
- * per url; derived columns only).
+ * Common-Crawl-style web pages with a stable numeric id (reference
+ * Enumerator, data_utils/utils.py:13-14). `text` is the dedup payload and is
+ * NEVER rewritten by any stage (per-row invariant: byte-identical extracted
+ * text per url; derived columns only).
  *
  * Reference analog: `record_dict` rows (reference: entity_embed/cli.py:34-49),
  * string payload fields only (docs/guide/field_types.rst:9).
  */
-final case class Page(
-    url: String,
-    warc_ts: Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String)
-
-/** Page + stable numeric id (reference Enumerator, data_utils/utils.py:13-14). */
 final case class IdPage(
     id: Long,
     url: String,
@@ -26,19 +19,6 @@ final case class IdPage(
     html: Array[Byte],
     text: String,
     lang: String)
-
-/**
- * Candidate / verified duplicate pair. Dedup-mode invariant `id1 < id2`
- * (reference: entity_embed/indexes.py:58-60); linkage mode orders
- * (leftId, rightId) instead (indexes.py:123-130).
- * `stage` records which candidate generator found the pair (lineage).
- */
-final case class Pair(id1: Long, id2: Long)
-
-final case class ScoredPair(id1: Long, id2: Long, jaccard: Double, stage: String)
-
-/** Cluster assignment (reference: utils.py:211-235). */
-final case class ClusterAssignment(id: Long, cluster: Long)
 
 /** Ground-truth row emitted by the synthetic corpus generator. */
 final case class TruthRow(id: Long, url: String, cluster: Long)

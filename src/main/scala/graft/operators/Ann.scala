@@ -189,12 +189,49 @@ object Ann {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Empty oversize log in the BucketJoin.Result shape. */
-  private def emptyOversizeLog(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.emptyDataFrame
-      .select(lit("").as("stage"), lit(0L).as("bucket"),
-        lit(0L).as("bucket_n"), lit("").as("policy")).limit(0)
+  /** Un-checkpointed plans + held caches (plan-shape tests assert on this).
+    *
+    * Regime planning (round-4 finding): at low thresholds the tuned scheme
+    * admits most of the corpus's random pairs ([[randomPairAdmission]]) —
+    * LSH then pays nTables× bucket explode + the capped bucket join to
+    * prune a small fraction of the rescore work, and a brute exact scan is
+    * strictly cheaper AND exact-recall. When predicted admission >=
+    * bruteAdmitCutoff the plan falls back to the brute form (logged). At
+    * near-dup thresholds (>= ~0.72 at the default cutoff) the LSH path runs
+    * and prunes aggressively. Neither form is sub-quadratic in the weak
+    * regime — that is inherent to low-threshold cosine joins, not a plan
+    * choice; the fallback just stops paying LSH overhead on top. */
+  private[graft] def lshCosinePairsLazy(emb: DataFrame, threshold: Double,
+      recallTarget: Double = 0.99, maxTables: Int = 32, seed: Long = 42L,
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      bucketCap: Int = 2048, bruteAdmitCutoff: Double = 0.3)
+      : (DataFrame, Seq[DataFrame]) = {
+    val (nPlanes, nTables) = tunePlanes(threshold, recallTarget, maxTables)
+    val pRand = randomPairAdmission(nPlanes, nTables)
+    // ONE prepped side, persisted (see lshTopKLazy), lineage-cut after
+    val eCached = prep(emb, idCol, vecCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(eCached)
+    if (pRand >= bruteAdmitCutoff) {
+      log.info(f"cosine pairs at t=$threshold%.2f: tuned ($nPlanes planes, " +
+        f"$nTables tables) would admit ${pRand * 100}%.0f%% of random " +
+        "pairs — brute exact scan instead (full recall)")
+      val out = e.as("a").join(e.as("b"), col("a.id") < col("b.id"))
+        .select(col("a.id").as("id1"), col("b.id").as("id2"),
+          cosine("a", "b").as("cosine"))
+        .filter(col("cosine") >= threshold)
+        .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
+      (out, Seq(eCached))
+    } else {
+      val dim = emb.select(size(col(vecCol))).head().getInt(0)
+      val buckets = hyperplaneBuckets(e, dim, nPlanes, nTables, seed)
+      val capped = BucketJoin.pairs(buckets, bucketCap, "cosine_lsh")
+      val out = rescorePairs(capped.pairs, e)
+        .filter(col("cosine") >= threshold)
+        .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
+      (out, Seq(eCached))
+    }
+  }
 
   /**
    * LSH-blocked threshold-cosine pairs — the SCALE path for reference J2's
@@ -212,80 +249,14 @@ object Ann {
    * force only materializes at high n. At near-dup thresholds (>= ~0.8,
    * the 100 TB use case) the tuned (nPlanes, nTables) prunes aggressively.
    */
-  final case class PairsResult(pairs: DataFrame, oversizeLog: DataFrame)
-
-  /** [[lshCosinePairs]] + the skew-cap log: buckets over bucketCap degrade
-    * to star pairs (BucketJoin policy), which costs recall inside that
-    * bucket — the log is the evidence (no silent caps); sink it alongside
-    * the pipeline's other oversize logs. */
-  def lshCosinePairsWithLog(emb: DataFrame, threshold: Double,
-      recallTarget: Double = 0.99, maxTables: Int = 32, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      bucketCap: Int = 2048, bruteAdmitCutoff: Double = 0.3): PairsResult =
-    ConfScope.smallInputScope(emb.sparkSession, emb) {
-      val (plan, caches) = lshCosinePairsLazy(emb, threshold, recallTarget,
-        maxTables, seed, idCol, vecCol, bucketCap, bruteAdmitCutoff)
-      // eager pairs + eager (tiny) log, then release the prepped cache
-      val out = plan.pairs.localCheckpoint()
-      val log = plan.oversizeLog.localCheckpoint()
-      caches.foreach(_.unpersist())
-      PairsResult(out, log)
-    }
-
-  /** Un-checkpointed plans + held caches (plan-shape tests assert on this).
-    *
-    * Regime planning (round-4 finding): at low thresholds the tuned scheme
-    * admits most of the corpus's random pairs ([[randomPairAdmission]]) —
-    * LSH then pays nTables× bucket explode + the capped bucket join to
-    * prune a small fraction of the rescore work, and a brute exact scan is
-    * strictly cheaper AND exact-recall. When predicted admission >=
-    * bruteAdmitCutoff the plan falls back to the brute form (logged). At
-    * near-dup thresholds (>= ~0.72 at the default cutoff) the LSH path runs
-    * and prunes aggressively. Neither form is sub-quadratic in the weak
-    * regime — that is inherent to low-threshold cosine joins, not a plan
-    * choice; the fallback just stops paying LSH overhead on top. */
-  private[graft] def lshCosinePairsLazy(emb: DataFrame, threshold: Double,
-      recallTarget: Double = 0.99, maxTables: Int = 32, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      bucketCap: Int = 2048, bruteAdmitCutoff: Double = 0.3)
-      : (PairsResult, Seq[DataFrame]) = {
-    val (nPlanes, nTables) = tunePlanes(threshold, recallTarget, maxTables)
-    val pRand = randomPairAdmission(nPlanes, nTables)
-    // ONE prepped side, persisted (see lshTopKLazy), lineage-cut after
-    val eCached = prep(emb, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val e = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(eCached)
-    if (pRand >= bruteAdmitCutoff) {
-      log.info(f"cosine pairs at t=$threshold%.2f: tuned ($nPlanes planes, " +
-        f"$nTables tables) would admit ${pRand * 100}%.0f%% of random " +
-        "pairs — brute exact scan instead (full recall)")
-      val out = e.as("a").join(e.as("b"), col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"),
-          cosine("a", "b").as("cosine"))
-        .filter(col("cosine") >= threshold)
-        .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
-      (PairsResult(out, emptyOversizeLog(emb.sparkSession)), Seq(eCached))
-    } else {
-      val dim = emb.select(size(col(vecCol))).head().getInt(0)
-      val buckets = hyperplaneBuckets(e, dim, nPlanes, nTables, seed)
-      val capped = BucketJoin.pairs(buckets, bucketCap, "cosine_lsh")
-      val out = rescorePairs(capped.pairs, e)
-        .filter(col("cosine") >= threshold)
-        .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
-      (PairsResult(out, capped.oversizeLog), Seq(eCached))
-    }
-  }
-
   def lshCosinePairs(emb: DataFrame, threshold: Double,
       recallTarget: Double = 0.99, maxTables: Int = 32, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       bucketCap: Int = 2048, bruteAdmitCutoff: Double = 0.3): DataFrame =
     ConfScope.smallInputScope(emb.sparkSession, emb) {
-      // direct lazy use: the log-carrying form pays one extra job to
-      // materialize the oversize log — skip it when the caller never looks
-      val (r, caches) = lshCosinePairsLazy(emb, threshold, recallTarget,
+      val (plan, caches) = lshCosinePairsLazy(emb, threshold, recallTarget,
         maxTables, seed, idCol, vecCol, bucketCap, bruteAdmitCutoff)
-      val out = r.pairs.localCheckpoint()
+      val out = plan.localCheckpoint()
       caches.foreach(_.unpersist())
       out
     }

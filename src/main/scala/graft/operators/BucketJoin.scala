@@ -49,14 +49,12 @@ object BucketJoin {
    * pairFilter receives the two join-side alias prefixes ("a", "b") and
    * builds a boolean Column over the payload columns, e.g.
    * (a, b) => bit_count(col(s"$a.fp") ^ col(s"$b.fp")) <= r.
-   */
-  /**
+   *
    * countHits = true: output carries a `hits` column (number of distinct
    * buckets the pair collided in) instead of plain distinct — same shuffle,
    * lets callers demand corroboration (e.g. >= 2 shared winnowing
    * fingerprints) to kill single-bucket coincidences.
-   */
-  /**
+   *
    * dedupe = false skips the final per-stage distinct: for callers that
    * union several stages' pairs into ONE downstream groupBy(id1, id2)
    * (CandidateGen.all), the per-stage exchange is redundant — the raw

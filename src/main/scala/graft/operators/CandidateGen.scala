@@ -23,15 +23,17 @@ object CandidateGen {
   type PairFilter = (String, String) => org.apache.spark.sql.Column
 
   /**
+   * MinHash LSH banding (SURVEY.md J1/J2): explode band keys → bucket join.
+   * `dedupe = false` (see BucketJoin.pairs) is for [[all]]'s union only.
+   *
    * `extra` columns ride along with each membership row and `pairFilter`
    * (over the "a"/"b" join aliases) is evaluated INSIDE the bucket join —
    * e.g. record linkage pushes source-disjointness here, so intra-source
    * collisions die streaming in the join task instead of being verified
    * and discarded afterwards (reference cross-source-only invariant,
-   * entity_embed/indexes.py:123-130).
+   * entity_embed/indexes.py:123-130). The same two parameters work the same
+   * way in every stage below.
    */
-  /** MinHash LSH banding (SURVEY.md J1/J2): explode band keys → bucket join.
-    * `dedupe = false` (see BucketJoin.pairs) is for [[all]]'s union only. */
   def minhashStage(sigs: DataFrame, cfg: GraftConfig,
       extra: Seq[String] = Nil, pairFilter: Option[PairFilter] = None,
       dedupe: Boolean = true): Result = {

@@ -13,9 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * user-tunable: its thresholds are the constants below.
  *
  * Three parts, each decided here only:
- *  - the small-input predicate: local mode, a non-streaming input, and its
- *    size — plan statistics ([[sizeOf]]), or for SuffixSpans the doc count
- *    it has already taken;
+ *  - the small-input predicate: local mode and the input's size — plan
+ *    statistics ([[sizeOf]]), or for SuffixSpans the doc count it has
+ *    already taken;
  *  - the width rule `min(session, max(8, units / perPart + 1))` — the
  *    session width always wins ([[width]]);
  *  - the AQE-off scope ([[aqeOff]]).
@@ -67,22 +67,18 @@ object ConfScope {
   def aqeOff[T](spark: SparkSession, parts: Option[Int] = None)(body: => T): T =
     withConfs(spark, ((Aqe -> "false") +: parts.map(p => Width -> p.toString).toSeq): _*)(body)
 
-  /** How the policy sees an input: NotLocal (a cluster session or a
-    * streaming input — session confs stay as they are), Unknown (some plan
-    * leaf reports the `spark.sql.defaultSizeInBytes` sentinel, e.g. a
-    * `createDataFrame(rdd)` frame, so the plan size says nothing), or its
-    * plan-statistics Bytes. */
+  /** How the policy sees an input: NotLocal (a cluster session — session
+    * confs stay as they are), Unknown (some plan leaf reports the
+    * `spark.sql.defaultSizeInBytes` sentinel, e.g. a `createDataFrame(rdd)`
+    * frame, so the plan size says nothing), or its plan-statistics Bytes. */
   private sealed trait Size
   private case object NotLocal extends Size
   private case object Unknown extends Size
   private final case class Bytes(n: BigInt) extends Size
 
-  private def local(spark: SparkSession, input: DataFrame): Boolean =
-    spark.sparkContext.isLocal && !input.isStreaming
-
   /** The small-input predicate's measure, from plan statistics (no job). */
   private def sizeOf(spark: SparkSession, input: DataFrame): Size =
-    if (!local(spark, input)) NotLocal
+    if (!spark.sparkContext.isLocal) NotLocal
     else {
       val plan = input.queryExecution.optimizedPlan
       val sentinel = spark.sessionState.conf.defaultSizeInBytes
@@ -100,9 +96,9 @@ object ConfScope {
    * reduce partitions vs 1.8 core-s / 0.22 s at 4 — identical results. An
    * input whose plan size is at most [[SmallJobBytes]] therefore plans its
    * shuffles at [[width]]`(bytes, `[[BytesPerPartition]]`)` instead of the session's
-   * cluster-sized default. A cluster session, a streaming input and an
-   * input of unknown size run at the session width. AQE stays as
-   * configured — runtime coalescing composes with a smaller initial width.
+   * cluster-sized default. A cluster session and an input of unknown size
+   * run at the session width. AQE stays as configured — runtime coalescing
+   * composes with a smaller initial width.
    */
   def smallInputScope[T](spark: SparkSession, input: DataFrame)(body: => T): T =
     sizeOf(spark, input) match {
@@ -127,8 +123,8 @@ object ConfScope {
   /** SuffixSpans' fast path: a local input of at most [[SpanFastPathDocs]]
     * docs (counted by the caller, which materializes it anyway) runs with
     * AQE off at [[width]]`(docs, `[[SpanDocsPerPartition]]`)`. */
-  def spanScope[T](spark: SparkSession, input: DataFrame, docs: Long)(body: => T): T =
-    if (local(spark, input) && docs <= SpanFastPathDocs)
+  def spanScope[T](spark: SparkSession, docs: Long)(body: => T): T =
+    if (spark.sparkContext.isLocal && docs <= SpanFastPathDocs)
       aqeOff(spark, Some(width(spark, docs, SpanDocsPerPartition)))(body)
     else body
 }

@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
  *     threshold − margin are dropped; margin = 3.5σ keeps the probability
  *     of dropping a true ≥ threshold pair under ~2·10⁻⁴ (recall gate is
  *     still measured empirically against the exact oracle).
- *   tier 2 — exact: only survivors (≈ true-pair volume) fetch shingle sets
- *     and get exact Jaccard; the final filter keeps exactness — NO false
- *     positives, ever.
+ *   tier 2 — exact: only survivors (≈ true-pair volume) fetch their texts
+ *     and get exact shingle Jaccard; the final filter keeps exactness — NO
+ *     false positives, ever.
  *
  * Both scorers are native codegen'd Catalyst expressions
  * (graft.expressions.SimilarityExpressions), zero-copy over ArrayData.
@@ -43,21 +43,23 @@ object JaccardVerify {
       .drop("s1", "s2")
 
   /**
-   * candidates(id1, id2, stage) x sigs(id, minhash, shingles) →
+   * candidates(id1, id2, stage) x sigs(id, minhash8 [, minhash]) →
    * (id1, id2, jaccard, stage) filtered at cfg.simThreshold.
    *
    * estimate = true: tier 1 only — the 100 TB mode; `jaccard` is the
-   * MinHash estimate (±σ), no shingle sets are ever shuffled.
+   * MinHash estimate (±σ), no text is ever shuffled.
    *
-   * texts = Some(df(id, text)): tier 2 recomputes the exact shingle Jaccard
-   * FROM THE TEXT per surviving pair (TextShingleJaccard — same kernel,
-   * bitwise-identical result) instead of joining stored shingle arrays.
-   * A shingle array is ~8 bytes per corpus char; the text is ~8x smaller,
-   * so this cuts tier-2 join traffic ~8x and lets the signature stage skip
-   * materializing shingle arrays entirely (Signatures.compute
-   * emitShingles=false). The CPU cost — re-shingling two documents per
-   * SURVIVING pair — is a few microseconds against tens of KB of saved
-   * memory/shuffle traffic, the resource that actually caps N→4N scaling.
+   * texts = Some(df(id, text)), required in exact mode: tier 2 recomputes
+   * the exact shingle Jaccard FROM THE TEXT per surviving pair
+   * (TextShingleJaccard — same kernel, bitwise-identical to
+   * Hashing.jaccardSorted over the shingle sets) instead of joining stored
+   * shingle arrays. A shingle array is ~8 bytes per corpus char; the text
+   * is ~8x smaller, so this cuts tier-2 join traffic ~8x and lets the
+   * signature stage skip materializing shingle arrays entirely
+   * (Signatures.compute emitShingles=false). The CPU cost — re-shingling
+   * two documents per SURVIVING pair — is a few microseconds against tens
+   * of KB of saved memory/shuffle traffic, the resource that actually caps
+   * N→4N scaling.
    *
    * Estimate-mode contract (estimate = true, tier 1 IS the output): the
    * returned `jaccard` is the UNBIASED numPerm-lane MinHash estimator when
@@ -81,14 +83,13 @@ object JaccardVerify {
       packedEstimate: Boolean = false,
       semiJoin: Boolean = false): DataFrame = {
     val t = cfg.simThreshold
-    // narrow bundles (Signatures.compute emitShingles = false) carry no
-    // shingle arrays: exact tier-2 scoring then REQUIRES the texts side —
-    // fail fast with the coupling spelled out instead of an analysis-time
-    // missing-column error (advisor finding)
-    require(estimate || texts.nonEmpty || sigs.columns.contains("shingles"),
-      "exact verify on a narrow signature bundle (emitShingles = false) " +
-        "needs texts = Some(df(id, text)) — the shingle sets are not stored; " +
-        "pass texts, or compute signatures with emitShingles = true")
+    // exact tier-2 scoring re-shingles the texts, whatever the bundle
+    // carries — fail fast with the coupling spelled out instead of a
+    // None.get deep in plan construction
+    require(estimate || texts.nonEmpty,
+      "exact verify (estimate = false) needs texts = Some(df(id, text)): " +
+        "tier 2 recomputes the exact Jaccard from the text; pass texts, " +
+        "or use estimate = true for tier-1 scores only")
     val hasPacked = sigs.columns.contains("minhash8")
     val hasFull = sigs.columns.contains("minhash")
     // tier-1 payload selection per the estimate-mode contract above
@@ -123,9 +124,7 @@ object JaccardVerify {
       // (GraftSqlBridge.truncateLineageLocal scaladoc).
       val spark = candidates.sparkSession
       val survivors =
-        if (spark.sparkContext.isLocal && !candidates.isStreaming &&
-            !sigs.isStreaming)
-          survivors0.localCheckpoint(eager = false)
+        if (spark.sparkContext.isLocal) survivors0.localCheckpoint(eager = false)
         else survivors0
       // tier-2 survivors ≈ true-pair volume; the heavy side is never
       // broadcast — survivors shuffle to it. Shuffle-volume note (measured:
@@ -142,21 +141,14 @@ object JaccardVerify {
       // non-participating docs either way; VerifyModesSpec pins it): off by
       // default because on the planted-dup bench corpus participation is
       // near-total and the extra distinct-ids pass buys nothing.
-      val (side0, score) = texts match {
-        case Some(d) =>
-          (d.select(col("id"), col("text").as("s")),
-            (s1: org.apache.spark.sql.Column, s2: org.apache.spark.sql.Column) =>
-              SimilarityExpressions.textShingleJaccard(s1, s2, cfg.shingleK))
-        case None =>
-          (sigs.select(col("id"), col("shingles").as("s")),
-            SimilarityExpressions.jaccardSorted _)
-      }
+      val side0 = texts.get.select(col("id"), col("text").as("s"))
       val side = if (!semiJoin) side0 else {
         val ids = survivors.select(col("id1").as("id"))
           .union(survivors.select(col("id2").as("id"))).distinct()
         side0.join(ids, Seq("id"), "left_semi")
       }
-      scorePairs(survivors, side, score, "jaccard")
+      scorePairs(survivors, side,
+        SimilarityExpressions.textShingleJaccard(_, _, cfg.shingleK), "jaccard")
         .filter(col("jaccard") >= t)
         .select(col("id1"), col("id2"), col("jaccard"), col("stage"))
     }

@@ -126,8 +126,7 @@ object MultiField {
    * ("Cannot compute ... Please make sure that field=... is a key...").
    * All fields' stats are computed in ONE aggregation job.
    */
-  def bindStats(records: DataFrame, specs: Seq[FieldSpec],
-      idCol: String = "id"): Seq[FieldSpec] = {
+  def bindStats(records: DataFrame, specs: Seq[FieldSpec]): Seq[FieldSpec] = {
     specs.foreach { sp =>
       if (!records.columns.contains(sp.source))
         throw new IllegalArgumentException(

@@ -51,15 +51,6 @@ object SetSimJoin {
     checkpointed
   }
 
-  /** Lazy plan + the internally persisted scratch tables — for plan-shape
-    * tests and callers that manage the cache lifecycle themselves.
-    *
-    * `extra` columns of d0 ride along on the prefix table and are visible to
-    * `pairFilter(aliasA, aliasB)` INSIDE the candidate equi-join — a
-    * predicate like cross-source disjointness (linkage) then kills pairs
-    * streaming in the join task, before the pair-distinct exchange, instead
-    * of after a full self-join output shuffle (same placement as
-    * BucketJoin's pairFilter hook). */
   /**
    * Shared per-field prefix machinery (round 6): BOTH the planner's cost
    * estimate and the join itself need the (hashed set table, df-sorted
@@ -163,6 +154,15 @@ object SetSimJoin {
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
   }
 
+  /** Lazy plan + the internally persisted scratch tables — for plan-shape
+    * tests and callers that manage the cache lifecycle themselves.
+    *
+    * `extra` columns of d0 ride along on the prefix table and are visible to
+    * `pairFilter(aliasA, aliasB)` INSIDE the candidate equi-join — a
+    * predicate like cross-source disjointness (linkage) then kills pairs
+    * streaming in the join task, before the pair-distinct exchange, instead
+    * of after a full self-join output shuffle (same placement as
+    * BucketJoin's pairFilter hook). */
   private[operators] def jaccardSelfJoinLazy(
       d0: DataFrame, threshold: Double, extra: Seq[String] = Nil,
       pairFilter: Option[(String, String) => Column] = None)

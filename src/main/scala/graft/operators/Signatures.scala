@@ -50,11 +50,12 @@ object Signatures {
    * the array in the kernel): ~8 bytes/char of corpus that the text-mode
    * verify tier (JaccardVerify texts=...) never needs — the signature
    * bundle shrinks ~7x, which is most of the stage's persist/cache traffic.
+   *
+   * `parts` limits which signature families the kernel computes (see
+   * TextSignatures.SigParts) — MinHash-only consumers (MinHash-only dedup,
+   * pairs mode with one blocking stage) skip the SimHash token vote and the
+   * winnowing pass entirely.
    */
-  /** `parts` limits which signature families the kernel computes (see
-    * TextSignatures.SigParts) — single-stage consumers (MinHash-only dedup,
-    * the streaming band tables) skip the SimHash token vote and the
-    * winnowing pass entirely. */
   def compute(df: DataFrame, cfg: GraftConfig,
       idCol: String = "id", textCol: String = "text",
       emitShingles: Boolean = true,

@@ -61,7 +61,6 @@ object SuffixSpans {
   private def impl(docs: DataFrame, cfg: GraftConfig, groupCap: Int,
       idCol: String, textCol: String, computeLog: Boolean): Result = {
     val spark = docs.sparkSession
-    import spark.implicits._
 
     val winnowUdf = udf { (text: String) =>
       if (text == null) Array.empty[Long]
@@ -88,7 +87,7 @@ object SuffixSpans {
     // AQE's coalescing starts earning its keep between 30k and 80k docs,
     // so the threshold sits at 40k.
     val nDocs = d.count()
-    ConfScope.spanScope(spark, d, nDocs)(
+    ConfScope.spanScope(spark, nDocs)(
       runChain(d, cfg, groupCap, computeLog, winnowUdf, spark))
   }
 

@@ -29,9 +29,6 @@ final class DedupPipeline(
     spark: SparkSession,
     cfg: GraftConfig = GraftConfig.default,
     checkpointDir: Option[String] = None,
-    estimateJaccard: Boolean = false,
-    normalizeClusterIds: Boolean = false,
-    hostSalts: Int = 8,
     tableIO: Option[graft.io.TableIO] = None) {
 
   import DedupPipeline._
@@ -78,8 +75,7 @@ final class DedupPipeline(
     * flattens the histogram. Purely physical — results are unchanged
     * (everything downstream re-shuffles on its own keys). */
   private def salted(pages: DataFrame): DataFrame =
-    if (hostSalts > 1 && pages.columns.contains("url"))
-      Salting.saltPagesByHost(pages, hostSalts)
+    if (pages.columns.contains("url")) Salting.saltPagesByHost(pages, HostSalts)
     else pages
 
   /** pages(id, text, ...) → (id, cluster) for every input page. */
@@ -116,12 +112,12 @@ final class DedupPipeline(
       r.candidates
     }
     val verified = stage("verified") {
-      JaccardVerify.verify(candStage, sigs, cfg, estimateJaccard,
+      JaccardVerify.verify(candStage, sigs, cfg,
         texts = Some(input.select(col("id"), col("text"))))
     }
     val assignments = stage("clusters") {
       val comps = ConnectedComponents.components(verified)
-      Clustering.assignAll(pages.select("id"), comps, normalizeClusterIds)
+      Clustering.assignAll(pages.select("id"), comps, normalizeIds = false)
     }
     Result(sigsCached, candStage, verified, assignments)
   }
@@ -139,14 +135,15 @@ final class DedupPipeline(
    * 100 TB prefilter-grade mode; one-sided bias documented in
    * JaccardVerify). Pass `exact = true` for the two-tier exact-Jaccard
    * variant (what `run` uses).
+   *
+   * Stage flags select the blocking paths; the signature kernel computes
+   * ONLY the families the enabled stages consume (SigParts — at 10^12 docs
+   * you do not pay the SimHash token vote or the winnowing pass for a
+   * MinHash-only job). `useMinhash = true, useSimhash = false,
+   * useSpans = false` is the reference-predict work shape exactly: ONE
+   * index per record (the reference searches one HNSW graph; the 3-stage
+   * union is this engine's higher-recall extension).
    */
-  /** Stage flags select the blocking paths; the signature kernel computes
-    * ONLY the families the enabled stages consume (SigParts — at 10^12 docs
-    * you do not pay the SimHash token vote or the winnowing pass for a
-    * MinHash-only job). `useMinhash = true, useSimhash = false,
-    * useSpans = false` is the reference-predict work shape exactly: ONE
-    * index per record (the reference searches one HNSW graph; the 3-stage
-    * union is this engine's higher-recall extension). */
   def runPairs(pages: DataFrame, exact: Boolean = false,
       useMinhash: Boolean = true, useSimhash: Boolean = true,
       useSpans: Boolean = true): DataFrame = planningScope(pages) { io match {
@@ -156,7 +153,7 @@ final class DedupPipeline(
       val out = plan.localCheckpoint()
       caches.foreach(_.unpersist())
       out
-    case Some(t) =>
+    case Some(_) =>
       // checkpoint/resume at the output granularity (same marker contract
       // as the staged pipeline): a completed `pairs` table short-circuits
       // the whole job. The parquet write IS the one materialization — no
@@ -177,9 +174,8 @@ final class DedupPipeline(
       useMinhash: Boolean, useSimhash: Boolean, useSpans: Boolean)
       : (DataFrame, Seq[DataFrame]) = {
     val input = salted(pages)
-    // tier-1 scoring always needs the MinHash part for minhash8
     val parts = graft.functions.TextSignatures.SigParts(
-      minhash = true, simhash = useSimhash, spans = useSpans)
+      simhash = useSimhash, spans = useSpans)
     val sigsCached = Signatures.compute(input, cfg, emitShingles = false, parts = parts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // same lineage cut as run(): blocking + verify each re-analyze the
@@ -204,8 +200,9 @@ final class DedupPipeline(
     * including the per-document signature UDF — once per consumer. At
     * cluster scale the checkpoint Parquet plays this role. Single-consumer
     * stages are left lazy (persisting them costs a full extra
-    * materialization for nothing). */
-  /** `versioned = true`: the stage's VALUES depend on the signature hash
+    * materialization for nothing).
+    *
+    * `versioned = true`: the stage's VALUES depend on the signature hash
     * family (the signatures table; the estimate-mode pairs table, whose
     * jaccard is a minhash-lane agreement). Completion then also writes a
     * `<name>_format` table stamped with TextSignatures.formatVersion, and a
@@ -266,6 +263,10 @@ final class DedupPipeline(
 }
 
 object DedupPipeline {
+  /** Salt buckets per host for the ingest exchange ([[DedupPipeline]]'s
+    * `salted`). */
+  val HostSalts = 8
+
   final case class Result(
       signatures: DataFrame,
       candidates: DataFrame,

@@ -87,6 +87,10 @@ class CliSpec extends SparkSuite {
       Cli.parseArgs(Array("--bogus", "x", "--input", "i", "--output", "o")))
     intercept[IllegalArgumentException](Cli.parseArgs(
       Array("--mode", "wat", "--input", "i", "--output", "o")))
+    // run is public too: an unknown mode fails before any input is read
+    val e = intercept[IllegalArgumentException](Cli.run(spark,
+      Cli.Args(mode = "wat", input = "/nonexistent/in.parquet", output = tmp("cli_bad_mode"))))
+    assert(e.getMessage.contains("--mode wat"), e.getMessage)
   }
 
   test("--sweep without --cluster-col is rejected loudly (round-5 defect)") {

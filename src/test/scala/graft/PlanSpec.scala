@@ -58,9 +58,11 @@ class PlanSpec extends SparkSuite {
 
   test("flagship pipeline plan contains no cartesian product") {
     val (pages, _) = graft.corpus.PageCorpus.generate(spark, 200, cfg.seed)
-    val sigs = Signatures.compute(pages.toDF(), cfg)
+    val sigs = Signatures.compute(pages.toDF(), cfg, emitShingles = false)
     val cands = CandidateGen.all(sigs, cfg).candidates
-    val verified = JaccardVerify.verify(cands, sigs, cfg)
+    // tier 2 scores from the texts, as DedupPipeline.run does
+    val verified = JaccardVerify.verify(cands, sigs, cfg,
+      texts = Some(pages.toDF().select(col("id"), col("text"))))
     val p = plan(verified)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
@@ -74,14 +76,14 @@ class PlanSpec extends SparkSuite {
     // bucket-join plan must hold with no cartesian anywhere
     val (r1, c1) = Ann.lshCosinePairsLazy(emb, 0.85)
     try {
-      val p1 = plan(r1.pairs)
+      val p1 = plan(r1)
       assert(!p1.contains("CartesianProduct") && !p1.contains("BroadcastNestedLoopJoin"), p1)
     } finally c1.foreach(_.unpersist())
     // t=0.5 is the documented weak regime (admission ~74%): the planner
     // must select the brute exact scan — LSH overhead prunes almost nothing
     val (r1b, c1b) = Ann.lshCosinePairsLazy(emb, 0.5)
     try {
-      val p1b = plan(r1b.pairs)
+      val p1b = plan(r1b)
       assert(p1b.contains("CartesianProduct") || p1b.contains("BroadcastNestedLoopJoin"),
         s"weak-regime cosine pairs should use the brute scan plan: $p1b")
     } finally c1b.foreach(_.unpersist())

@@ -1,7 +1,6 @@
 package graft.expressions
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 class SimilarityExpressionsSpec extends SparkSuite {
   import spark.implicits._

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** LSH-blocked threshold-cosine pairs (reference J2 threshold semantics,
   * indexes.py:40) — the scale path replacing the brute-force O(n²) form. */

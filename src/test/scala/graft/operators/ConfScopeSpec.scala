@@ -6,8 +6,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 /**
  * The local planning policy at its edges: session width below the floor of
- * 8, inputs without size statistics, streaming inputs, restoring prior conf
- * state (including "unset"), and nested scopes.
+ * 8, inputs without size statistics, restoring prior conf state (including
+ * "unset"), and nested scopes.
  */
 class ConfScopeSpec extends SparkSuite {
 
@@ -30,7 +30,7 @@ class ConfScopeSpec extends SparkSuite {
     assert(ConfScope.width(spark, BigInt(0), 1L) == 4)
     ConfScope.smallInputScope(spark, known)(assert(spark.conf.get(Width) == "4"))
     ConfScope.pipelineScope(spark, known)(assert(confs == ("false", "4")))
-    ConfScope.spanScope(spark, known, 100L)(assert(confs == ("false", "4")))
+    ConfScope.spanScope(spark, 100L)(assert(confs == ("false", "4")))
   }
 
   test("width rule: floor 8, then the session width caps it") {
@@ -52,16 +52,6 @@ class ConfScopeSpec extends SparkSuite {
         ConfScope.smallInputScope(spark, df)(assert(confs == ("true", "32")))
         ConfScope.pipelineScope(spark, df)(assert(confs == ("false", "32")))
       }
-    }
-  }
-
-  test("a streaming input leaves the session confs untouched") {
-    val stream = spark.readStream.format("rate").load()
-    assert(stream.isStreaming)
-    ConfScope.withConfs(spark, Aqe -> "true", Width -> "32") {
-      ConfScope.smallInputScope(spark, stream)(assert(confs == ("true", "32")))
-      ConfScope.pipelineScope(spark, stream)(assert(confs == ("true", "32")))
-      ConfScope.spanScope(spark, stream, 10L)(assert(confs == ("true", "32")))
     }
   }
 
@@ -90,12 +80,12 @@ class ConfScopeSpec extends SparkSuite {
     ConfScope.withConfs(spark, Aqe -> "true", Width -> "32") {
       ConfScope.pipelineScope(spark, statsless) {
         assert(confs == ("false", "32"))
-        ConfScope.spanScope(spark, known, 15000L) {
+        ConfScope.spanScope(spark, 15000L) {
           assert(confs == ("false", "11"))
         }
         assert(confs == ("false", "32"))
         // a span input above the fast-path threshold keeps the outer scope
-        ConfScope.spanScope(spark, known, ConfScope.SpanFastPathDocs + 1)(
+        ConfScope.spanScope(spark, ConfScope.SpanFastPathDocs + 1)(
           assert(confs == ("false", "32")))
       }
       assert(confs == ("true", "32"))

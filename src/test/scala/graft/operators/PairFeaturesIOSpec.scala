@@ -3,7 +3,6 @@ package graft.operators
 import graft.SparkSuite
 import graft.functions.Tokenize
 import graft.io.PairIO
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 class PairFeaturesIOSpec extends SparkSuite {

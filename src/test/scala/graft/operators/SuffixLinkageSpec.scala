@@ -3,7 +3,6 @@ package graft.operators
 import graft.SparkSuite
 import graft.config.GraftConfig
 import graft.functions.SuffixArrays
-import org.apache.spark.sql.functions._
 
 class SuffixLinkageSpec extends SparkSuite {
   import spark.implicits._

@@ -5,7 +5,7 @@ import graft.config.GraftConfig
 import graft.expressions.SimilarityExpressions
 import org.apache.spark.sql.functions._
 
-/** Round-4 advisor/verdict items: JaccardVerify narrow-bundle guard,
+/** Round-4 advisor/verdict items: JaccardVerify exact-mode texts guard,
   * estimate-mode estimator contract, SuffixSpans group-cap truncation log,
   * SparkEntry corpus-cache release. */
 class VerifyModesSpec extends SparkSuite {
@@ -21,16 +21,20 @@ class VerifyModesSpec extends SparkSuite {
 
   test("verify: narrow bundle without texts fails fast with the coupling spelled out") {
     val docs = toyDocs
-    val sigs = Signatures.compute(docs, cfg, emitShingles = false)
     val cands = Seq((1L, 2L, "minhash")).toDF("id1", "id2", "stage")
-    val e = intercept[IllegalArgumentException] {
-      JaccardVerify.verify(cands, sigs, cfg)
+    // exact mode scores from texts only: a wide bundle's stored shingle
+    // arrays do not stand in for them
+    for (emit <- Seq(false, true)) {
+      val sigs = Signatures.compute(docs, cfg, emitShingles = emit)
+      val e = intercept[IllegalArgumentException] {
+        JaccardVerify.verify(cands, sigs, cfg)
+      }
+      assert(e.getMessage.contains("texts"))
+      assert(e.getMessage.contains("estimate = true"))
+      // estimate mode needs no shingles and no texts — must NOT throw
+      assert(JaccardVerify.verify(cands, sigs, cfg, estimate = true).columns
+        .contains("jaccard"))
     }
-    assert(e.getMessage.contains("texts"))
-    assert(e.getMessage.contains("emitShingles"))
-    // estimate mode needs no shingles and no texts — must NOT throw
-    assert(JaccardVerify.verify(cands, sigs, cfg, estimate = true).columns
-      .contains("jaccard"))
   }
 
   test("verify estimate mode: unbiased full-lane estimator by default, packed on opt-in") {
@@ -104,6 +108,7 @@ class VerifyModesSpec extends SparkSuite {
   }
 
   test("SigParts: disabled families come back empty, enabled ones identical to full") {
+    // MinHash is always computed: minhashOnly drops SimHash and spans
     val docs = toyDocs
     val full = Signatures.compute(docs, cfg, emitShingles = false).collect()
       .map(r => r.getAs[Long]("id") -> r).toMap
@@ -115,15 +120,6 @@ class VerifyModesSpec extends SparkSuite {
       assert(r.getAs[scala.collection.Seq[Long]]("minhash8") == full(id).getAs[scala.collection.Seq[Long]]("minhash8"))
       assert(r.getAs[scala.collection.Seq[Long]]("span_keys").isEmpty)
       assert(r.getAs[scala.collection.Seq[Long]]("simhash_chunks").isEmpty)
-    }
-    val sh = Signatures.compute(docs, cfg, emitShingles = false,
-      parts = graft.functions.TextSignatures.SigParts.simhashOnly).collect()
-      .map(r => r.getAs[Long]("id") -> r).toMap
-    for ((id, r) <- sh) {
-      assert(r.getAs[Long]("simhash") == full(id).getAs[Long]("simhash"))
-      assert(r.getAs[scala.collection.Seq[Long]]("simhash_chunks") ==
-        full(id).getAs[scala.collection.Seq[Long]]("simhash_chunks"))
-      assert(r.getAs[scala.collection.Seq[Long]]("band_keys").isEmpty)
     }
   }
 

@@ -4,7 +4,6 @@ import graft.SparkSuite
 import graft.config.GraftConfig
 import graft.corpus.PageCorpus
 import graft.eval.BruteForceOracle
-import org.apache.spark.sql.functions._
 
 /**
  * The correctness gate (SURVEY.md §5, BASELINE.md): dup-pair recall >= 0.99
