@@ -112,29 +112,51 @@ object Ann {
   def lshTopK(emb: DataFrame, k: Int, nPlanes: Int = 12, nTables: Int = 6,
       seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding", bucketCap: Int = 2048): DataFrame =
-    ConfScope.smallInputScope(emb.sparkSession, emb) {
-      val (plan, caches) = lshTopKLazy(emb, k, nPlanes, nTables, seed, idCol,
-        vecCol, bucketCap)
-      // eager: one materialization, then release the prepped-embedding cache
-      // (same cache-lifecycle pattern as SetSimJoin/MultiField)
-      val out = plan.localCheckpoint()
-      caches.foreach(_.unpersist())
-      out
-    }
+    ConfScope.smallInputScope(emb.sparkSession, emb) { CacheScope.run { s =>
+      materialize(lshTopKPlan(s, emb, k, nPlanes, nTables, seed, idCol,
+        vecCol, bucketCap))
+    } }
 
-  /** Un-checkpointed plan + held caches (plan-shape tests assert on this). */
-  private[graft] def lshTopKLazy(emb: DataFrame, k: Int, nPlanes: Int = 12,
-      nTables: Int = 6, seed: Long = 42L, idCol: String = "vec_id",
-      vecCol: String = "embedding", bucketCap: Int = 2048)
-      : (DataFrame, Seq[DataFrame]) = {
-    // ONE prepped side, persisted: feeds the bucket UDF and both rescore
-    // joins (5 consumers of the scan + norm projection otherwise)
-    val eCached = prep(emb, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // lineage-cut after persist (5 consumers re-analyze it otherwise)
-    val e = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(eCached)
-    val dim = emb.select(size(col(vecCol))).head().getInt(0)
-    val buckets = hyperplaneBuckets(e, dim, nPlanes, nTables, seed)
+  /** A planned LSH result, un-checkpointed (plan-shape tests assert on
+    * `pairs`), and the bucket join's cap log when the bucket join ran. */
+  private[graft] final case class LshPlan(pairs: DataFrame, oversizeLog: Option[DataFrame])
+
+  /** Materialize `p` inside its scope, then log one WARN when the bucket
+    * join capped buckets (no silent caps): the stage, the number of capped
+    * buckets and the largest bucket_n. The count reads the kept prepped
+    * side as one small job — AQE off, since under AQE each of its
+    * exchanges would launch a job of its own. */
+  private def materialize(p: LshPlan): DataFrame = {
+    val out = p.pairs.localCheckpoint()
+    p.oversizeLog.foreach { o =>
+      val r = ConfScope.aqeOff(o.sparkSession)(
+        o.agg(count(lit(1)), max(col("bucket_n")), first(col("stage"))).head())
+      if (r.getLong(0) > 0)
+        log.warn(s"${r.getString(2)}: ${r.getLong(0)} buckets over the cap " +
+          s"degraded to star pairs (largest bucket_n ${r.getLong(1)})")
+    }
+    out
+  }
+
+  /** ONE prepped side, kept: feeds the bucket UDF and both rescore joins
+    * (5 consumers of the scan + norm projection otherwise); lineage-cut
+    * after the keep (5 consumers re-analyze it otherwise). */
+  private def prepKept(s: CacheScope, emb: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(
+      s.keep(prep(emb, idCol, vecCol)))
+
+  /** The embedding dimension, 0 for an empty table (whose plan then yields
+    * an empty result with the usual schema). */
+  private def dimOf(emb: DataFrame, vecCol: String): Int =
+    emb.select(size(col(vecCol))).head(1).headOption.fold(0)(_.getInt(0))
+
+  private[graft] def lshTopKPlan(s: CacheScope, emb: DataFrame, k: Int,
+      nPlanes: Int = 12, nTables: Int = 6, seed: Long = 42L,
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      bucketCap: Int = 2048): LshPlan = {
+    val e = prepKept(s, emb, idCol, vecCol)
+    val buckets = hyperplaneBuckets(e, dimOf(emb, vecCol), nPlanes, nTables, seed)
     // capped bucket join (same machinery as every blocking stage): a dense
     // embedding region would otherwise make one mega-bucket emit O(n²)
     // candidate rows. Oversize buckets degrade to star pairs around the
@@ -150,8 +172,8 @@ object Ann {
       .union(scored
         .select(col("id2").as("id"), col("id1").as("neighbor"), col("cosine")))
     val w = Window.partitionBy("id").orderBy(desc("cosine"), asc("neighbor"))
-    (directed.withColumn("rank", row_number().over(w)).filter(col("rank") <= k),
-      Seq(eCached))
+    LshPlan(directed.withColumn("rank", row_number().over(w)).filter(col("rank") <= k),
+      Some(capped.oversizeLog))
   }
 
   /**
@@ -189,9 +211,7 @@ object Ann {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Un-checkpointed plans + held caches (plan-shape tests assert on this).
-    *
-    * Regime planning (round-4 finding): at low thresholds the tuned scheme
+  /** Regime planning (round-4 finding): at low thresholds the tuned scheme
     * admits most of the corpus's random pairs ([[randomPairAdmission]]) —
     * LSH then pays nTables× bucket explode + the capped bucket join to
     * prune a small fraction of the rescore work, and a brute exact scan is
@@ -201,17 +221,13 @@ object Ann {
     * and prunes aggressively. Neither form is sub-quadratic in the weak
     * regime — that is inherent to low-threshold cosine joins, not a plan
     * choice; the fallback just stops paying LSH overhead on top. */
-  private[graft] def lshCosinePairsLazy(emb: DataFrame, threshold: Double,
-      recallTarget: Double = 0.99, maxTables: Int = 32, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      bucketCap: Int = 2048, bruteAdmitCutoff: Double = 0.3)
-      : (DataFrame, Seq[DataFrame]) = {
+  private[graft] def lshCosinePairsPlan(s: CacheScope, emb: DataFrame,
+      threshold: Double, recallTarget: Double = 0.99, maxTables: Int = 32,
+      seed: Long = 42L, idCol: String = "vec_id", vecCol: String = "embedding",
+      bucketCap: Int = 2048, bruteAdmitCutoff: Double = 0.3): LshPlan = {
     val (nPlanes, nTables) = tunePlanes(threshold, recallTarget, maxTables)
     val pRand = randomPairAdmission(nPlanes, nTables)
-    // ONE prepped side, persisted (see lshTopKLazy), lineage-cut after
-    val eCached = prep(emb, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val e = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(eCached)
+    val e = prepKept(s, emb, idCol, vecCol)
     if (pRand >= bruteAdmitCutoff) {
       log.info(f"cosine pairs at t=$threshold%.2f: tuned ($nPlanes planes, " +
         f"$nTables tables) would admit ${pRand * 100}%.0f%% of random " +
@@ -221,15 +237,14 @@ object Ann {
           cosine("a", "b").as("cosine"))
         .filter(col("cosine") >= threshold)
         .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
-      (out, Seq(eCached))
+      LshPlan(out, None)
     } else {
-      val dim = emb.select(size(col(vecCol))).head().getInt(0)
-      val buckets = hyperplaneBuckets(e, dim, nPlanes, nTables, seed)
+      val buckets = hyperplaneBuckets(e, dimOf(emb, vecCol), nPlanes, nTables, seed)
       val capped = BucketJoin.pairs(buckets, bucketCap, "cosine_lsh")
       val out = rescorePairs(capped.pairs, e)
         .filter(col("cosine") >= threshold)
         .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
-      (out, Seq(eCached))
+      LshPlan(out, Some(capped.oversizeLog))
     }
   }
 
@@ -253,11 +268,8 @@ object Ann {
       recallTarget: Double = 0.99, maxTables: Int = 32, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       bucketCap: Int = 2048, bruteAdmitCutoff: Double = 0.3): DataFrame =
-    ConfScope.smallInputScope(emb.sparkSession, emb) {
-      val (plan, caches) = lshCosinePairsLazy(emb, threshold, recallTarget,
-        maxTables, seed, idCol, vecCol, bucketCap, bruteAdmitCutoff)
-      val out = plan.localCheckpoint()
-      caches.foreach(_.unpersist())
-      out
-    }
+    ConfScope.smallInputScope(emb.sparkSession, emb) { CacheScope.run { s =>
+      materialize(lshCosinePairsPlan(s, emb, threshold, recallTarget,
+        maxTables, seed, idCol, vecCol, bucketCap, bruteAdmitCutoff))
+    } }
 }

@@ -80,23 +80,18 @@ object Dedup {
   /** MinHash+LSH near-dup pairs over any (id, text) table — the scale path. */
   def minhashDupPairs(docs: DataFrame, cfg: GraftConfig,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    ConfScope.smallInputScope(docs.sparkSession, docs) {
-    // persisted: consumed by the banding stage and twice by the verify
-    // joins; narrow bundle (no shingle arrays — exact verify recomputes
-    // from text, bitwise-identical)
-    val sigs = Signatures.compute(docs, cfg, idCol, textCol, emitShingles = false,
-        parts = graft.functions.TextSignatures.SigParts.minhashOnly)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    ConfScope.smallInputScope(docs.sparkSession, docs) { CacheScope.run { s =>
+    // kept: consumed by the banding stage and twice by the verify joins;
+    // narrow bundle (no shingle arrays — exact verify recomputes from text,
+    // bitwise-identical)
+    val sigs = s.keep(Signatures.compute(docs, cfg, idCol, textCol, emitShingles = false,
+        parts = graft.functions.TextSignatures.SigParts.minhashOnly))
     val cands = CandidateGen.minhashStage(sigs, cfg)
     val texts = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    val out = JaccardVerify.verify(cands.candidates, sigs, cfg, texts = Some(texts))
+    JaccardVerify.verify(cands.candidates, sigs, cfg, texts = Some(texts))
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
-      // eager: release the signature cache instead of leaking it (see
-      // SetSimJoin.jaccardSelfJoin)
       .localCheckpoint()
-    sigs.unpersist()
-    out
-    }
+    } }
 
   /**
    * Embedding-cosine near-dup pairs over an (id, embedding Array[Float])

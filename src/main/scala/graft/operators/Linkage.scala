@@ -26,15 +26,14 @@ object Linkage {
   def linkagePairs(records: DataFrame, cfg: GraftConfig, leftSource: String,
       idCol: String = "id", textCol: String = "text",
       sourceCol: String = "source"): DataFrame =
-    ConfScope.smallInputScope(records.sparkSession, records) {
+    ConfScope.smallInputScope(records.sparkSession, records) { CacheScope.run { s =>
     val src = records.select(col(idCol).cast("long").as("id"),
       col(sourceCol).as("source"))
-    val sigsCached = Signatures.compute(records, cfg, idCol, textCol, emitShingles = false)
-      .join(src, "id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // lineage-cut after persist: blocking + verify re-analyze this subtree
+    // lineage-cut after keep: blocking + verify re-analyze this subtree
     // per consumer otherwise (GraftSqlBridge.truncateLineage scaladoc)
-    val sigs = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(sigsCached)
+    val sigs = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(s.keep(
+      Signatures.compute(records, cfg, idCol, textCol, emitShingles = false)
+        .join(src, "id")))
     // source-disjointness evaluated INSIDE the bucket join (pairFilter hook):
     // intra-source collisions — ~half of all pairs on balanced sources —
     // never reach the pair exchange or the verify stage. Star pairs from
@@ -47,7 +46,7 @@ object Linkage {
     val texts = records.select(col(idCol).cast("long").as("id"),
       col(textCol).as("text"))
     val verified = JaccardVerify.verify(cands, sigs, cfg, texts = Some(texts))
-    val out = verified
+    verified
       .join(src.select(col("id").as("id1"), col("source").as("src1")), "id1")
       .join(src.select(col("id").as("id2"), col("source").as("src2")), "id2")
       .filter(col("src1") =!= col("src2"))
@@ -57,10 +56,6 @@ object Linkage {
         when(col("src1") === leftSource, col("id2")).otherwise(col("id1")).as("right_id"),
         col("jaccard"))
       .filter(col("left_id").isNotNull && col("right_id").isNotNull)
-      // eager: release the signature cache instead of leaking it (see
-      // SetSimJoin.jaccardSelfJoin)
       .localCheckpoint()
-    sigsCached.unpersist()
-    out
-    }
+    } }
 }

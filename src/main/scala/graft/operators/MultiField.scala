@@ -219,14 +219,9 @@ object MultiField {
 
   def dedupPairs(records: DataFrame, specs: Seq[FieldSpec], threshold: Double,
       idCol: String = "id"): DataFrame =
-    ConfScope.smallInputScope(records.sparkSession, records) {
-      val (plan, caches) = dedupPairsPlan(records, specs, threshold, idCol)
-      // eager: release the per-field gram caches + candidate cache instead
-      // of leaking them for the session (see SetSimJoin.jaccardSelfJoin)
-      val out = plan.localCheckpoint()
-      caches.foreach(_.unpersist())
-      out
-    }
+    ConfScope.smallInputScope(records.sparkSession, records) { CacheScope.run { s =>
+      dedupPairsPlan(s, records, specs, threshold, idCol).localCheckpoint()
+    } }
 
   /**
    * Multi-field record LINKAGE — the reference's linkage mode over a field
@@ -246,16 +241,16 @@ object MultiField {
   def linkagePairs(records: DataFrame, specs: Seq[FieldSpec], threshold: Double,
       leftSource: String, idCol: String = "id",
       sourceCol: String = "source"): DataFrame =
-    ConfScope.smallInputScope(records.sparkSession, records) {
+    ConfScope.smallInputScope(records.sparkSession, records) { CacheScope.run { s =>
     require(records.columns.contains(sourceCol),
       s"linkage needs source column '$sourceCol'")
     val crossSource: (String, String) => Column =
       (a, b) => col(s"$a.$sourceCol") =!= col(s"$b.$sourceCol")
-    val (plan, caches) = dedupPairsPlan(records, specs, threshold, idCol,
+    val plan = dedupPairsPlan(s, records, specs, threshold, idCol,
       extra = Seq(sourceCol), pairFilter = Some(crossSource))
     val src = records.select(col(idCol).cast("long").as("id"),
       col(sourceCol).as("source"))
-    val oriented = plan
+    plan
       .join(src.select(col("id").as("id1"), col("source").as("src1")), "id1")
       .join(src.select(col("id").as("id2"), col("source").as("src2")), "id2")
       .filter(col("src1") =!= col("src2"))
@@ -264,40 +259,36 @@ object MultiField {
         when(col("src1") === leftSource, col("id1")).otherwise(col("id2")).as("left_id"),
         when(col("src1") === leftSource, col("id2")).otherwise(col("id1")).as("right_id"),
         col("score"))
-    val out = oriented.localCheckpoint()
-    caches.foreach(_.unpersist())
-    out
-    }
+      .localCheckpoint()
+    } }
 
-  /** The un-checkpointed join plan + the caches it holds — plan-shape tests
-    * assert on THIS (the public method's localCheckpoint collapses
+  /** The un-checkpointed join plan over caches kept in `s` — plan-shape
+    * tests assert on THIS (the public method's localCheckpoint collapses
     * executedPlan to a checkpoint-RDD scan, which would make a no-cartesian
-    * assertion vacuous); callers must unpersist the returned caches after
-    * materializing. */
-  private[graft] def dedupPairsPlan(records: DataFrame, specs: Seq[FieldSpec],
-      threshold: Double, idCol: String = "id", extra: Seq[String] = Nil,
-      pairFilter: Option[(String, String) => Column] = None)
-      : (DataFrame, Seq[DataFrame]) = {
+    * assertion vacuous). */
+  private[graft] def dedupPairsPlan(s: CacheScope, records: DataFrame,
+      specs: Seq[FieldSpec], threshold: Double, idCol: String = "id",
+      extra: Seq[String] = Nil,
+      pairFilter: Option[(String, String) => Column] = None): DataFrame = {
     require(specs.nonEmpty, "at least one field spec required")
     val totalW = specs.map(_.weight).sum
 
     // ONE prefix table per field (SetSimJoin.PrefixTable: hashed-set side +
-    // df-sorted token lists, both persisted) — shared by the planner's cost
+    // df-sorted token lists, both kept) — shared by the planner's cost
     // estimate, the chosen candidate join(s) AND the rescore below. Round-6
     // restructure: the estimate previously re-derived the tokenize →
     // token-df → per-id-sort chain from the raw gram tables, duplicating
     // the operator's most expensive shuffles; sharing the table removes a
-    // full pass over every field. Lineage-cut after the persist: with N
+    // full pass over every field. Lineage-cut after the keep: with N
     // fields x 3 consumers, Catalyst would otherwise re-analyze every
     // subtree per downstream Dataset (GraftSqlBridge scaladoc).
-    val fieldTablesCached = specs.map { sp =>
-      SetSimJoin.prefixTable(
+    val cut = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal _
+    val fieldTables = specs.map { sp =>
+      val pt = SetSimJoin.prefixTable(s,
         records.select(col(idCol).as("id") +: extra.map(col) :+
           gramCol(col(sp.source), sp).as("g"): _*), extra)
+      SetSimJoin.PrefixTable(cut(pt.d), cut(pt.sorted))
     }
-    val cut = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal _
-    val fieldTables = fieldTablesCached.map(pt =>
-      SetSimJoin.PrefixTable(cut(pt.d), cut(pt.sorted)))
     // NOT worth it (measured): eagerly materializing the per-field caches
     // as concurrent count() jobs before the estimate — AQE already overlaps
     // the independent per-field stages inside the estimate job, and the
@@ -346,17 +337,14 @@ object MultiField {
           unionPlan()
         }
       }
-    val candsCached = planned
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(candsCached)
+    val cands = cut(s.keep(planned))
 
     // weighted rescore over the SAME prefix tables (pt.d's `h` is the
     // sorted distinct hash array — intersection/union SIZES over it are
     // identical to the raw gram array's, so scores are unchanged)
-    val out = weightedScore(cands, specs.zip(fieldTables).map { case (sp, pt) =>
+    weightedScore(cands, specs.zip(fieldTables).map { case (sp, pt) =>
       (sp.weight, pt.d.select(col("id"), col("h").as("g")))
     }, threshold)
-    (out, fieldTablesCached.flatMap(_.caches) :+ candsCached)
   }
 
   /** Σ_f w_f · jaccard_f / Σ_f w_f per candidate (id1, id2), rounded to 6

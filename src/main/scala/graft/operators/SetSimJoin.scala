@@ -37,19 +37,21 @@ object SetSimJoin {
    * (use array_distinct upstream). Returns (id1, id2, jaccard) with
    * id1 < id2 and jaccard >= threshold, jaccard rounded to 6 places
    * (byte-compatible with the brute-force oracle form).
+   *
+   * `extra` columns of d0 ride along on the prefix table and are visible to
+   * `pairFilter(aliasA, aliasB)` INSIDE the candidate equi-join — a
+   * predicate like cross-source disjointness (linkage) then kills pairs
+   * streaming in the join task, before the pair-distinct exchange, instead
+   * of after a full self-join output shuffle (same placement as
+   * BucketJoin's pairFilter hook).
    */
   def jaccardSelfJoin(d0: DataFrame, threshold: Double,
       extra: Seq[String] = Nil,
-      pairFilter: Option[(String, String) => Column] = None): DataFrame = {
-    val (out, scratch) = jaccardSelfJoinLazy(d0, threshold, extra, pairFilter)
-    // EAGER: materialize the (small) pair result, then release the scratch
-    // caches — returning the lazy plan would leak two MEMORY_AND_DISK
-    // tables per call for the session lifetime (library callers have no
-    // clearCache hook; same pattern as SuffixSpans)
-    val checkpointed = out.localCheckpoint()
-    scratch.foreach(_.unpersist())
-    checkpointed
-  }
+      pairFilter: Option[(String, String) => Column] = None): DataFrame =
+    CacheScope.run { s =>
+      joinFromTable(prefixTable(s, d0, extra), threshold, extra, pairFilter)
+        .localCheckpoint()
+    }
 
   /**
    * Shared per-field prefix machinery (round 6): BOTH the planner's cost
@@ -63,14 +65,14 @@ object SetSimJoin {
    *  - d: (id [,extra...], h sorted distinct hash array) — the verify side;
    *  - sorted: (id, st array<struct<df,tok>>, n [,extra...]) — the df-sorted
    *    token list every prefix derivation slices.
-   * Both persisted (the pfx table that `sorted` replaces was persisted for
-   * the same reason: consumed by both sides of the candidate self-join).
+   * Both kept in the caller's scope (the pfx table that `sorted` replaces
+   * was persisted for the same reason: consumed by both sides of the
+   * candidate self-join).
    */
-  private[operators] final case class PrefixTable(d: DataFrame, sorted: DataFrame) {
-    def caches: Seq[DataFrame] = Seq(d, sorted)
-  }
+  private[operators] final case class PrefixTable(d: DataFrame, sorted: DataFrame)
 
-  private[operators] def prefixTable(d0: DataFrame, extra: Seq[String] = Nil): PrefixTable = {
+  private[operators] def prefixTable(s: CacheScope, d0: DataFrame,
+      extra: Seq[String] = Nil): PrefixTable = {
     extra.foreach(c => require(d0.columns.contains(c), s"extra column '$c' missing"))
     // Tokens ride as 64-bit hashes end to end (the engine-wide convention):
     // distinct/intersection counts over the hashes equal the counts over
@@ -90,9 +92,8 @@ object SetSimJoin {
     // scan + tokenize + gram projection re-executes per consumer, which
     // measured as ~4x the cost of every join stage combined. At cluster
     // scale this is the stage checkpoint.
-    val d = d0.select(col("id") +: extra.map(col) :+
-      array_sort(array_distinct(hashed)).as("h"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val d = s.keep(d0.select(col("id") +: extra.map(col) :+
+      array_sort(array_distinct(hashed)).as("h"): _*))
 
     // 1 shuffle: global token order key = (document frequency, token hash).
     // Rarest-first prefixes minimize join fan-out: a token with df=k
@@ -106,11 +107,10 @@ object SetSimJoin {
     // consumed by BOTH sides of the candidate self-join (the prefix slice
     // below is a cheap cache-read projection per side) and by the planner's
     // estimate job.
-    val sorted = toks.join(dfreq, "tok")
+    val sorted = s.keep(toks.join(dfreq, "tok")
       .groupBy("id")
       .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("st"),
-        (count(lit(1)).as("n") +: extra.map(c => first(col(c)).as(c))): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (count(lit(1)).as("n") +: extra.map(c => first(col(c)).as(c))): _*))
     PrefixTable(d, sorted)
   }
 
@@ -152,23 +152,6 @@ object SetSimJoin {
         graft.expressions.SimilarityExpressions.jaccardSorted(col("h1"), col("h2")))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** Lazy plan + the internally persisted scratch tables — for plan-shape
-    * tests and callers that manage the cache lifecycle themselves.
-    *
-    * `extra` columns of d0 ride along on the prefix table and are visible to
-    * `pairFilter(aliasA, aliasB)` INSIDE the candidate equi-join — a
-    * predicate like cross-source disjointness (linkage) then kills pairs
-    * streaming in the join task, before the pair-distinct exchange, instead
-    * of after a full self-join output shuffle (same placement as
-    * BucketJoin's pairFilter hook). */
-  private[operators] def jaccardSelfJoinLazy(
-      d0: DataFrame, threshold: Double, extra: Seq[String] = Nil,
-      pairFilter: Option[(String, String) => Column] = None)
-      : (DataFrame, Seq[DataFrame]) = {
-    val pt = prefixTable(d0, extra)
-    (joinFromTable(pt, threshold, extra, pairFilter), pt.caches)
   }
 
   /**

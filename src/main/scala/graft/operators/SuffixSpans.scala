@@ -59,7 +59,8 @@ object SuffixSpans {
     impl(docs, cfg, groupCap, idCol, textCol, computeLog = true)
 
   private def impl(docs: DataFrame, cfg: GraftConfig, groupCap: Int,
-      idCol: String, textCol: String, computeLog: Boolean): Result = {
+      idCol: String, textCol: String, computeLog: Boolean): Result =
+    CacheScope.run { s =>
     val spark = docs.sparkSession
 
     val winnowUdf = udf { (text: String) =>
@@ -71,9 +72,8 @@ object SuffixSpans {
       if (text == null) "" else new String(TextSignatures.normalize(text))
     }
 
-    val d = docs.select(col(idCol).cast("long").as("id"),
-      normUdf(col(textCol)).as("ntext"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val d = s.keep(docs.select(col(idCol).cast("long").as("id"),
+      normUdf(col(textCol)).as("ntext")))
 
     // materializes the cache the chain reads 2-3 times anyway, and sizes
     // the small-input fast path (ConfScope.spanScope): at or below
@@ -88,10 +88,10 @@ object SuffixSpans {
     // so the threshold sits at 40k.
     val nDocs = d.count()
     ConfScope.spanScope(spark, nDocs)(
-      runChain(d, cfg, groupCap, computeLog, winnowUdf, spark))
-  }
+      runChain(s, d, cfg, groupCap, computeLog, winnowUdf, spark))
+    }
 
-  private def runChain(d: DataFrame, cfg: GraftConfig, groupCap: Int,
+  private def runChain(s: CacheScope, d: DataFrame, cfg: GraftConfig, groupCap: Int,
       computeLog: Boolean,
       winnowUdf: org.apache.spark.sql.expressions.UserDefinedFunction,
       spark: org.apache.spark.sql.SparkSession): Result = {
@@ -112,7 +112,7 @@ object SuffixSpans {
     // fingerprint group, same shape as BucketJoin's oversize log. Computed
     // only when requested (spansWithLog) — it is one extra window-count job
     // over the ids-only membership table, eagerly materialized so it stays
-    // valid after the normalized-docs cache below is released.
+    // valid after the scope releases the normalized-docs cache.
     val oversize =
       if (!computeLog)
         spark.emptyDataFrame
@@ -131,12 +131,11 @@ object SuffixSpans {
     // saver (observed ~10x on the bench corpus). A 64-bit group-key
     // collision would only merge two groups into one SA run — output spans
     // stay exact.
-    val sets = capped.groupBy("bucket")
+    val sets = s.keep(capped.groupBy("bucket")
       .agg(sort_array(collect_list(col("id"))).as("members"))
       .filter(size(col("members")) >= 2)
       .select(col("members")).distinct()
-      .select(xxhash64(col("members")).as("gkey"), col("members"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(xxhash64(col("members")).as("gkey"), col("members")))
 
     // STRICT-SUBSET PRUNE: a group fully contained in another contributes
     // only pairs its superset re-derives — per-pair span extents are exact
@@ -182,9 +181,6 @@ object SuffixSpans {
           .iterator.map(p => SpanRow(p.id1, p.id2, p.spanLen, p.span))
       }
 
-    // eager: materialize the (small) span-pair result, then release the
-    // cached normalized-docs blocks — persisting `d` across calls would
-    // leak storage memory within a session (advisor finding).
     // max over (span_len, span) struct: keeps the longest span's content,
     // deterministic tie-break on the span string itself.
     val out = grouped.toDF()
@@ -193,8 +189,6 @@ object SuffixSpans {
       .select(col("id1"), col("id2"),
         col("m.span_len").as("span_len"), col("m.span").as("span"))
       .localCheckpoint()
-    d.unpersist()
-    sets.unpersist()
     Result(out, oversize)
   }
 }

@@ -146,50 +146,36 @@ final class DedupPipeline(
    */
   def runPairs(pages: DataFrame, exact: Boolean = false,
       useMinhash: Boolean = true, useSimhash: Boolean = true,
-      useSpans: Boolean = true): DataFrame = planningScope(pages) { io match {
-    case None =>
-      val (plan, caches) = runPairsPlan(pages, exact, useMinhash, useSimhash, useSpans)
-      // eager: one materialization, then release the signature cache
-      val out = plan.localCheckpoint()
-      caches.foreach(_.unpersist())
-      out
-    case Some(_) =>
-      // checkpoint/resume at the output granularity (same marker contract
-      // as the staged pipeline): a completed `pairs` table short-circuits
-      // the whole job. The parquet write IS the one materialization — no
-      // localCheckpoint first (that would run the verify job twice).
-      // versioned resume (estimate-mode jaccard is a minhash-lane
-      // agreement — format-dependent; see stage()):
-      var caches: Seq[DataFrame] = Nil
-      val out = stage("pairs", versioned = true) {
-        val (plan, cs) = runPairsPlan(pages, exact, useMinhash, useSimhash, useSpans)
-        caches = cs
-        plan
-      }
-      caches.foreach(_.unpersist())
-      out
+      useSpans: Boolean = true): DataFrame = planningScope(pages) { CacheScope.run { s =>
+    // checkpoint/resume at the output granularity (same marker contract as
+    // the staged pipeline): a completed `pairs` table short-circuits the
+    // whole job, and the parquet write IS the one materialization — no
+    // localCheckpoint first (that would run the verify job twice).
+    // Versioned resume: estimate-mode jaccard is a minhash-lane agreement,
+    // format-dependent (see stage()).
+    val out = stage("pairs", versioned = true) {
+      runPairsPlan(s, pages, exact, useMinhash, useSimhash, useSpans)
+    }
+    if (io.isEmpty) out.localCheckpoint() else out
   } }
 
-  private def runPairsPlan(pages: DataFrame, exact: Boolean,
-      useMinhash: Boolean, useSimhash: Boolean, useSpans: Boolean)
-      : (DataFrame, Seq[DataFrame]) = {
+  private def runPairsPlan(s: CacheScope, pages: DataFrame, exact: Boolean,
+      useMinhash: Boolean, useSimhash: Boolean, useSpans: Boolean): DataFrame = {
     val input = salted(pages)
     val parts = graft.functions.TextSignatures.SigParts(
       simhash = useSimhash, spans = useSpans)
-    val sigsCached = Signatures.compute(input, cfg, emitShingles = false, parts = parts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // same lineage cut as run(): blocking + verify each re-analyze the
     // signature subtree otherwise (see GraftSqlBridge.truncateLineage)
-    val sigs = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(sigsCached)
+    val sigs = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(
+      s.keep(Signatures.compute(input, cfg, emitShingles = false, parts = parts)))
     val r = CandidateGen.all(sigs, cfg,
       useMinhash = useMinhash, useSimhash = useSimhash, useSpans = useSpans)
     // no silent caps in pairs mode either: skew-cap hits land in the same
     // oversize sink run() uses (no-op without a checkpoint dir)
     sideSink("oversize", r.oversizeLog)
-    val out = JaccardVerify.verify(r.candidates, sigs, cfg, estimate = !exact,
+    JaccardVerify.verify(r.candidates, sigs, cfg, estimate = !exact,
       texts = if (exact) Some(input.select(col("id"), col("text"))) else None,
       packedEstimate = !exact)
-    (out, Seq(sigsCached))
   }
 
   /** Run a stage, or load it from checkpoint if already completed.

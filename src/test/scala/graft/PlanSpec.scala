@@ -69,29 +69,26 @@ class PlanSpec extends SparkSuite {
   }
 
   test("cosine LSH pairs + pairs-mode plans contain no cartesian product") {
-    // lazy variants: the public forms eagerly checkpoint (cache hygiene),
+    // lazy plans: the public forms eagerly checkpoint (cache hygiene),
     // which would collapse executedPlan to a checkpoint-RDD scan
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     // t=0.85 is the LSH regime (predicted random-pair admission ~3%): the
     // bucket-join plan must hold with no cartesian anywhere
-    val (r1, c1) = Ann.lshCosinePairsLazy(emb, 0.85)
-    try {
-      val p1 = plan(r1)
+    CacheScope.run { s =>
+      val p1 = plan(Ann.lshCosinePairsPlan(s, emb, 0.85).pairs)
       assert(!p1.contains("CartesianProduct") && !p1.contains("BroadcastNestedLoopJoin"), p1)
-    } finally c1.foreach(_.unpersist())
+    }
     // t=0.5 is the documented weak regime (admission ~74%): the planner
     // must select the brute exact scan — LSH overhead prunes almost nothing
-    val (r1b, c1b) = Ann.lshCosinePairsLazy(emb, 0.5)
-    try {
-      val p1b = plan(r1b)
+    CacheScope.run { s =>
+      val p1b = plan(Ann.lshCosinePairsPlan(s, emb, 0.5).pairs)
       assert(p1b.contains("CartesianProduct") || p1b.contains("BroadcastNestedLoopJoin"),
         s"weak-regime cosine pairs should use the brute scan plan: $p1b")
-    } finally c1b.foreach(_.unpersist())
-    val (r2, c2) = Ann.lshTopKLazy(emb, 3)
-    try {
-      val p2 = plan(r2)
+    }
+    CacheScope.run { s =>
+      val p2 = plan(Ann.lshTopKPlan(s, emb, 3).pairs)
       assert(!p2.contains("CartesianProduct") && !p2.contains("BroadcastNestedLoopJoin"), p2)
-    } finally c2.foreach(_.unpersist())
+    }
   }
 
   test("whole-stage codegen covers the signature projection") {

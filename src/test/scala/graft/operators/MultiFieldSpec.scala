@@ -137,12 +137,12 @@ class MultiFieldSpec extends SparkSuite {
     // lazy variant: the public form eagerly checkpoints (cache hygiene),
     // which collapses executedPlan to a checkpoint-RDD scan and would make
     // this assertion vacuous (advisor finding)
-    val (lazyPlan, caches) = MultiField.dedupPairsPlan(d, specs, 0.5)
-    try {
-      val plan = lazyPlan.queryExecution.executedPlan.toString
+    CacheScope.run { s =>
+      val plan = MultiField.dedupPairsPlan(s, d, specs, 0.5)
+        .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"))
       assert(!plan.contains("BroadcastNestedLoopJoin"))
-    } finally caches.foreach(_.unpersist())
+    }
   }
 
   test("linkagePairs: cross-source only, oriented, == brute-force weighted score") {

@@ -62,10 +62,12 @@ class SetSimJoinSpec extends SparkSuite {
 
   test("plan has no cartesian / nested-loop join") {
     val d = corpus(30)
-    // lazy variant: the public form eagerly checkpoints (cache hygiene),
+    // lazy plan: the public form eagerly checkpoints (cache hygiene),
     // which would hide the join plan from inspection
-    val plan = SetSimJoin.jaccardSelfJoinLazy(d, 0.5)._1
-      .queryExecution.executedPlan.toString
+    val plan = CacheScope.run { s =>
+      SetSimJoin.joinFromTable(SetSimJoin.prefixTable(s, d), 0.5)
+        .queryExecution.executedPlan.toString
+    }
     assert(!plan.contains("CartesianProduct"), "cartesian in plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested-loop join in plan")
   }
