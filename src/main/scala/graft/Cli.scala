@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
  *   --mode dedup --input /data/pages.parquet --output /out \
  *   [--threshold 0.6] [--field-config fields.json] [--estimate] \
  *   [--id-col id] [--text-col text] [--cluster-col cluster] \
- *   [--checkpoint-dir /ckpt]                  # stage resume (dedup pipeline)
+ *   [--checkpoint-dir /ckpt]   # stage (dedup pipeline) or pairs resume
  *   [--source-col source --left-source left]           # linkage mode
  *   [--sweep 0.3,0.5,0.7]   # evaluation mode: one metrics row per threshold
  * }}}
@@ -35,9 +35,9 @@ import org.apache.spark.sql.functions._
  *    blocking → two-tier verify; --estimate keeps tier 1 only) over
  *    (--id-col, --text-col).
  *  - dedup, --field-config: multi-field ER — the JSON is parsed with the
- *    reference's field_config semantics (MultiField.parseConfigs), stats
- *    are bound (bindStats), and pairs come from the selectivity-planned
- *    exact weighted join (MultiField.dedupPairs) at --threshold.
+ *    reference's field_config semantics (MultiField.parseConfigs), and
+ *    pairs come from the selectivity-planned exact weighted join
+ *    (MultiField.dedupPairs) at --threshold.
  *  - linkage: cross-source pairs only (--source-col / --left-source),
  *    oriented (left_id, right_id) — reference ANNLinkageIndex semantics.
  *    With --field-config: multi-field linkage (MultiField.linkagePairs),
@@ -113,12 +113,24 @@ object Cli {
     * a silent ANSI cast error (or, with ANSI off, null-ed ids and an empty
     * result) deep in a join is the alternative. The reference renumbers
     * non-integer ids (Enumerator, benchmarks/base.py:107); so should the
-    * caller (Splits.enumerate / Benchmarks.load). */
+    * caller. */
   private def requireIntegralIds(df: DataFrame, idCol: String): Unit = {
     val bad = df.filter(col(idCol).isNotNull &&
       expr(s"try_cast(`$idCol` AS LONG)").isNull).count()
     require(bad == 0, s"$bad rows of '$idCol' are not integral ids — " +
-      "renumber first (graft.operators.Splits.enumerate or graft.io.Benchmarks)")
+      "renumber first, e.g. row_number() over the natural key")
+  }
+
+  /** Pairs-granularity checkpoint (same marker contract as the pipeline
+    * path): with a checkpoint scope, read its completed `pairs` table, else
+    * compute, write, mark and read it back. */
+  private def checkpointedPairs(spark: SparkSession, ckpt: Option[String])(
+      compute: => DataFrame): DataFrame = ckpt match {
+    case Some(dir) =>
+      val t = new graft.io.ParquetTables(spark, dir)
+      if (!t.isComplete("pairs")) { t.write(compute, "pairs"); t.markComplete("pairs") }
+      t.read("pairs")
+    case None => compute
   }
 
   /** Run with an existing session (tests call this; main wraps it). */
@@ -160,14 +172,15 @@ object Cli {
         java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
     }
     // config-scoped checkpoint root: a rerun with a different threshold /
-    // estimate / mode / field config can never be served another config's
-    // stage outputs. Input identity remains the caller's contract.
+    // estimate / mode / field config / linkage sources can never be served
+    // another config's stage outputs. Input identity remains the caller's
+    // contract.
     val ckpt = a.checkpointDir.map { d =>
       // signature format version in the scope: a jar whose hash family
       // changed (round 5: mod-prime -> wraparound) must never resume stage
       // outputs written by the old family (round-5 advisor finding)
       val h = (a.mode, cfg.simThreshold, a.estimate, fieldJson,
-        graft.functions.TextSignatures.formatVersion).##
+        a.sourceCol, a.leftSource, graft.functions.TextSignatures.formatVersion).##
       f"$d/cfg_${h & 0xffffffffL}%08x"
     }
 
@@ -176,13 +189,12 @@ object Cli {
         require(raw.columns.contains(a.sourceCol),
           s"linkage mode needs --source-col '${a.sourceCol}' in the input")
         val recs = raw.withColumn(a.idCol, col(a.idCol).cast("long"))
-        val p = fj match {
+        val p = checkpointedPairs(spark, ckpt)(fj match {
           case Some(json) =>
             // multi-field linkage: the reference's flagship linkage shape
             // (field config over two catalogs, Record-Linkage-Example)
-            val specs = MultiField.bindStats(raw, MultiField.parseConfigs(json))
-            MultiField.linkagePairs(recs, specs, cfg.simThreshold,
-              a.leftSource, a.idCol, a.sourceCol)
+            MultiField.linkagePairs(recs, MultiField.parseConfigs(json),
+              cfg.simThreshold, a.leftSource, a.idCol, a.sourceCol)
               .select(col("left_id").as("id1"), col("right_id").as("id2"),
                 col("score"))
           case None =>
@@ -190,27 +202,16 @@ object Cli {
               a.idCol, a.textCol, a.sourceCol)
               .select(col("left_id").as("id1"), col("right_id").as("id2"),
                 col("jaccard").as("score"))
-        }
+        })
         (p, false)
       case (_, Some(json)) => // dedup
-        val specs = MultiField.bindStats(raw, MultiField.parseConfigs(json))
-        def compute() = MultiField.dedupPairs(
-          raw.withColumn(a.idCol, col(a.idCol).cast("long")), specs,
-          cfg.simThreshold, a.idCol)
-        // checkpoint at the pairs granularity (same marker contract as the
-        // pipeline path). The scope hash covers the field-config CONTENT:
+        // the checkpoint scope hash covers the field-config CONTENT:
         // editing fields.json in place and rerunning with the same
         // --checkpoint-dir recomputes under a fresh scope instead of
-        // silently serving pairs scored under the old config.
-        val p = ckpt match {
-          case Some(dir) =>
-            val t = new graft.io.ParquetTables(spark, dir)
-            if (!t.isComplete("pairs")) {
-              t.write(compute(), "pairs"); t.markComplete("pairs")
-            }
-            t.read("pairs")
-          case None => compute()
-        }
+        // silently serving pairs scored under the old config
+        val p = checkpointedPairs(spark, ckpt)(MultiField.dedupPairs(
+          raw.withColumn(a.idCol, col(a.idCol).cast("long")),
+          MultiField.parseConfigs(json), cfg.simThreshold, a.idCol))
         (p, true)
       case (_, None) => // dedup
         val recs = raw.select(col(a.idCol).cast("long").as("id"),

@@ -56,14 +56,6 @@ object SimilarityExpressions {
   def dotProduct(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProduct(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** Register SQL names (optional convenience for spark.sql users). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaccard_sorted", exprs => JaccardSorted(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_agreement", exprs => MinHashAgreement(exprs(0), exprs(1)), "scala_udf")
-  }
 }
 
 case class JaccardSorted(left: Expression, right: Expression)

@@ -160,9 +160,10 @@ object SuffixArrays {
    * (which under-reports when a run extends with weaker suffixes). Emits
    * each doc pair once with its longest span's length AND content (the
    * content makes results externally checkable by substring containment).
+   * At most 1024 docs: the per-pair accumulator is quadratic in group size.
    */
-  def dupSpans(docs: Seq[(Long, String)], minLen: Int,
-      maxPairsPerGroup: Int = 100000): Seq[SpanPair] = {
+  def dupSpans(docs: Seq[(Long, String)], minLen: Int): Seq[SpanPair] = {
+    require(docs.size <= 1024, s"dupSpans takes at most 1024 docs, got ${docs.size}")
     if (docs.size < 2) return Nil
     val totalLen = docs.map(_._2.length).sum + docs.size
     val s = new Array[Int](totalLen)
@@ -189,16 +190,11 @@ object SuffixArrays {
     // di < dj by id order) into flat int arrays — the boxed
     // HashMap[(Long,Long),(Int,Int)] form allocated two tuples per
     // candidate update across ~10^5 updates/group. The flat form is
-    // quadratic in group size, so it is bounded: in-engine groups are
-    // capped at SuffixSpans' groupCap (64), and beyond 1024 members
-    // (2 x 4 MB) a map-based fallback keeps the public API safe for
-    // arbitrary group sizes instead of overflowing nDocs*nDocs.
-    if (nDocs > 1024) return dupSpansMapped(minLen, maxPairsPerGroup,
-      s, docOf, sa, lcps, rmq, ids)
+    // quadratic in group size, hence the 1024-doc bound (2 x 4 MB); engine
+    // groups are capped at SuffixSpans' groupCap.
     val bestLen = new Array[Int](nDocs * nDocs)
     val bestStart = new Array[Int](nDocs * nDocs)
     val lastSeen = new Array[Int](nDocs)
-    var nPairs = 0
     var i = 1
     while (i < sa.length) {
       if (lcps(i) >= minLen) {
@@ -207,22 +203,19 @@ object SuffixArrays {
         lastSeen(docOf(sa(i - 1))) = i - 1
         while (i < sa.length && lcps(i) >= minLen) {
           val di = docOf(sa(i))
-          if (nPairs < maxPairsPerGroup) {
-            var dj = 0
-            while (dj < nDocs) {
-              val j = lastSeen(dj)
-              if (j >= 0 && dj != di) {
-                // exact pair span = min lcp over the pair's own SA interval
-                val len = rmq.min(j + 1, i)
-                val key = if (ids(di) < ids(dj)) di * nDocs + dj else dj * nDocs + di
-                if (ids(di) != ids(dj) && len > bestLen(key)) {
-                  if (bestLen(key) == 0) nPairs += 1
-                  bestLen(key) = len
-                  bestStart(key) = sa(i)
-                }
+          var dj = 0
+          while (dj < nDocs) {
+            val j = lastSeen(dj)
+            if (j >= 0 && dj != di) {
+              // exact pair span = min lcp over the pair's own SA interval
+              val len = rmq.min(j + 1, i)
+              val key = if (ids(di) < ids(dj)) di * nDocs + dj else dj * nDocs + di
+              if (ids(di) != ids(dj) && len > bestLen(key)) {
+                bestLen(key) = len
+                bestStart(key) = sa(i)
               }
-              dj += 1
             }
+            dj += 1
           }
           lastSeen(di) = i
           i += 1
@@ -243,43 +236,5 @@ object SuffixArrays {
       key += 1
     }
     out.result().sortBy(p => (p.id1, p.id2))
-  }
-
-  /** Fallback for groups too large for the flat-array accumulator: same
-    * algorithm over a hash map bounded by maxPairsPerGroup. */
-  private def dupSpansMapped(minLen: Int, maxPairsPerGroup: Int,
-      s: Array[Int], docOf: Array[Int], sa: Array[Int], lcps: Array[Int],
-      rmq: Rmq, ids: Array[Long]): Seq[SpanPair] = {
-    val best = scala.collection.mutable.HashMap.empty[(Long, Long), (Int, Int)]
-    val lastSeen = scala.collection.mutable.HashMap.empty[Int, Int]
-    var i = 1
-    while (i < sa.length) {
-      if (lcps(i) >= minLen) {
-        lastSeen.clear()
-        lastSeen(docOf(sa(i - 1))) = i - 1
-        while (i < sa.length && lcps(i) >= minLen) {
-          val di = docOf(sa(i))
-          if (best.size < maxPairsPerGroup) {
-            lastSeen.foreachEntry { (dj, j) =>
-              if (dj != di) {
-                val len = rmq.min(j + 1, i)
-                val k = if (ids(di) < ids(dj)) (ids(di), ids(dj))
-                  else (ids(dj), ids(di))
-                if (k._1 != k._2 && len > best.getOrElse(k, (0, 0))._1)
-                  best(k) = (len, sa(i))
-              }
-            }
-          }
-          lastSeen(di) = i
-          i += 1
-        }
-      } else i += 1
-    }
-    best.iterator.map { case ((a, b), (len, start)) =>
-      val chars = new Array[Char](len)
-      var j = 0
-      while (j < len) { chars(j) = (s(start + j) - 1).toChar; j += 1 }
-      SpanPair(a, b, len, new String(chars))
-    }.toSeq.sortBy(p => (p.id1, p.id2))
   }
 }

@@ -1,30 +1,10 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/**
- * Pair sources/sinks + file-based evaluation.
- *
- *  - S5 pair sink (reference: cli.py:424-426 `_write_json` — JSON list of
- *    [id1, id2]): Parquet is the native sink at scale; JSON kept for the
- *    reference's interchange shape.
- *  - S3 labeled-pair scan (benchmarks/base.py:112-128): (ltable_id,
- *    rtable_id, label) CSV split into pos/neg pair sets.
- *  - S2 two-source scan (benchmarks/base.py:93-110): two tables tagged with
- *    a source column, unioned.
- *  - M5 file-based evaluation (evaluation.py:33-55): recompute metrics from
- *    a written pair sink + ground-truth pairs.
- */
+/** Record CSV source for the Cli (S1). */
 object PairIO {
-
-  /** S5: write canonical pairs. format: "parquet" (default) or "json". */
-  def writePairs(pairs: DataFrame, path: String, format: String = "parquet"): Unit =
-    pairs.select(col("id1").cast("long"), col("id2").cast("long"))
-      .write.mode(SaveMode.Overwrite).format(format).save(path)
-
-  def readPairs(spark: SparkSession, path: String, format: String = "parquet"): DataFrame =
-    spark.read.format(format).load(path).select(col("id1"), col("id2"))
 
   /**
    * S1: record CSV scan with the reference's coercion semantics
@@ -46,29 +26,5 @@ object PairIO {
       case _ => withId
     }
     coerced
-  }
-
-  /** S3: labeled pair CSV (ltable_id, rtable_id, label) → (pos, neg). */
-  def readLabeledPairs(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val df = spark.read.option("header", "true").csv(path)
-      .select(col("ltable_id").cast("long").as("id1"),
-        col("rtable_id").cast("long").as("id2"),
-        col("label").cast("int").as("label"))
-    (df.filter(col("label") === 1).drop("label"),
-      df.filter(col("label") === 0).drop("label"))
-  }
-
-  /** S2: tag and union two sources (ids must already be disjoint). */
-  def unionTagged(left: DataFrame, right: DataFrame,
-      leftSource: String, rightSource: String): DataFrame =
-    left.withColumn("source", lit(leftSource))
-      .unionByName(right.withColumn("source", lit(rightSource)))
-
-  /** M5: metrics from a pair sink + ground truth pair set on disk. */
-  def evaluateOutput(spark: SparkSession, foundPath: String, posPath: String,
-      nRecords: Long, threshold: Double = 0.0): graft.model.PairMetrics = {
-    val found = readPairs(spark, foundPath)
-    val pos = readPairs(spark, posPath)
-    graft.operators.Metrics.evaluate(found, pos, nRecords, threshold)
   }
 }

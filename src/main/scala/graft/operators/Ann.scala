@@ -121,20 +121,12 @@ object Ann {
     * `pairs`), and the bucket join's cap log when the bucket join ran. */
   private[graft] final case class LshPlan(pairs: DataFrame, oversizeLog: Option[DataFrame])
 
-  /** Materialize `p` inside its scope, then log one WARN when the bucket
-    * join capped buckets (no silent caps): the stage, the number of capped
-    * buckets and the largest bucket_n. The count reads the kept prepped
-    * side as one small job — AQE off, since under AQE each of its
-    * exchanges would launch a job of its own. */
+  /** Materialize `p` inside its scope, then WARN when the bucket join
+    * capped buckets ([[BucketJoin.warnOversize]], reading the kept
+    * prepped side). */
   private def materialize(p: LshPlan): DataFrame = {
     val out = p.pairs.localCheckpoint()
-    p.oversizeLog.foreach { o =>
-      val r = ConfScope.aqeOff(o.sparkSession)(
-        o.agg(count(lit(1)), max(col("bucket_n")), first(col("stage"))).head())
-      if (r.getLong(0) > 0)
-        log.warn(s"${r.getString(2)}: ${r.getLong(0)} buckets over the cap " +
-          s"degraded to star pairs (largest bucket_n ${r.getLong(1)})")
-    }
+    p.oversizeLog.foreach(BucketJoin.warnOversize)
     out
   }
 

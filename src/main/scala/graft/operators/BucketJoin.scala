@@ -126,4 +126,21 @@ object BucketJoin {
       else all
     Result(out, oversizeLog)
   }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** No silent caps: one WARN per stage of `oversizeLog` (a
+    * [[Result.oversizeLog]]-shaped table, or a union of several) that
+    * capped buckets — the stage, its policy, the number of capped buckets
+    * and the largest bucket_n. One small job, AQE off, since under AQE each
+    * of its exchanges would launch a job of its own. Call it while the
+    * caches the log reads are still kept. */
+  def warnOversize(oversizeLog: DataFrame): Unit =
+    ConfScope.aqeOff(oversizeLog.sparkSession)(
+      oversizeLog.groupBy("stage", "policy")
+        .agg(count(lit(1)), max(col("bucket_n"))).collect()
+    ).foreach { r =>
+      log.warn(s"${r.getString(0)}: ${r.getLong(2)} buckets over the cap, " +
+        s"policy ${r.getString(1)} (largest bucket_n ${r.getLong(3)})")
+    }
 }

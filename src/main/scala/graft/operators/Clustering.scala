@@ -75,11 +75,4 @@ object Clustering {
    */
   def writeback(records: DataFrame, assignments: DataFrame): DataFrame =
     records.join(assignments, Seq("id"), "left")
-
-  /** Top-N largest clusters (W2, Deduplication-Example.ipynb cell 61). */
-  def topClusters(assignments: DataFrame, n: Int): DataFrame =
-    assignments.groupBy("cluster").agg(count(lit(1)).as("size"),
-        min("id").as("min_id"))
-      .orderBy(desc("size"), asc("min_id"))
-      .limit(n)
 }

@@ -11,20 +11,6 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  /**
-   * Exact duplicate groups: one row per text value occurring > 1 time, with
-   * the canonical (minimum) id and the duplicate count. Scale note: grouping
-   * by xxhash64(text) instead of the full text keeps shuffle payload at 8
-   * bytes/row; the full-text groupBy here is the oracle-friendly exact form
-   * and Catalyst still map-side-combines it.
-   */
-  def exactDupGroups(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    docs.groupBy(col(textCol))
-      .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("dup_count"))
-      .filter(col("dup_count") > 1)
-      .select(col("canonical_id"), col("dup_count"))
-
   /** Exact duplicate pairs (id1 < id2), scale form: the self-join moves
     * only (id, xxhash64(text), length(text)) — 24 bytes/row — through the
     * exchange; full text is compared ONLY for hash+length-colliding
@@ -88,9 +74,11 @@ object Dedup {
         parts = graft.functions.TextSignatures.SigParts.minhashOnly))
     val cands = CandidateGen.minhashStage(sigs, cfg)
     val texts = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    JaccardVerify.verify(cands.candidates, sigs, cfg, texts = Some(texts))
+    val out = JaccardVerify.verify(cands.candidates, sigs, cfg, texts = Some(texts))
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
       .localCheckpoint()
+    BucketJoin.warnOversize(cands.oversizeLog)
+    out
     } }
 
   /**

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
  * construction — one join, both directions covered (SURVEY.md J3).
  *
  * Ids must be globally unique across both sources (the reference renumbers
- * with its Enumerator, benchmarks/base.py:107; use Splits.enumerate).
+ * with its Enumerator, benchmarks/base.py:107): renumber first, e.g. with
+ * `row_number()` over the natural key.
  */
 object Linkage {
 
@@ -42,11 +43,10 @@ object Linkage {
     val crossSource: CandidateGen.PairFilter = (a, b) =>
       col(s"$a.source") =!= col(s"$b.source")
     val cands = CandidateGen.all(sigs, cfg,
-      extra = Seq("source"), pairFilter = Some(crossSource)).candidates
+      extra = Seq("source"), pairFilter = Some(crossSource))
     val texts = records.select(col(idCol).cast("long").as("id"),
       col(textCol).as("text"))
-    val verified = JaccardVerify.verify(cands, sigs, cfg, texts = Some(texts))
-    verified
+    val out = JaccardVerify.verify(cands.candidates, sigs, cfg, texts = Some(texts))
       .join(src.select(col("id").as("id1"), col("source").as("src1")), "id1")
       .join(src.select(col("id").as("id2"), col("source").as("src2")), "id2")
       .filter(col("src1") =!= col("src2"))
@@ -57,5 +57,7 @@ object Linkage {
         col("jaccard"))
       .filter(col("left_id").isNotNull && col("right_id").isNotNull)
       .localCheckpoint()
+    BucketJoin.warnOversize(cands.oversizeLog)
+    out
     } }
 }

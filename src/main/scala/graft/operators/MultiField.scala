@@ -27,19 +27,13 @@ import org.apache.spark.sql.functions._
 object MultiField {
 
   /** One field's signature config. `source` is the input column (defaults to
-    * the field name — override to define several configs over one column).
-    * `maxStrLen` / `vocabSize` are derived stats bound by [[bindStats]]
-    * (the reference's stats pass, field_config_parser.py:75-118) — None
-    * until bound, exactly like the reference's `max_str_len: None` configs
-    * (tests/test_data_utils_helpers.py:31-47). */
+    * the field name — override to define several configs over one column). */
   final case class FieldSpec(
       field: String,
       source: String,
       sigType: String, // "syntactic" (char shingles) | "semantic" (word tokens)
       weight: Double,
-      shingleK: Int = 5,
-      maxStrLen: Option[Long] = None,
-      vocabSize: Option[Long] = None)
+      shingleK: Int = 5)
 
   val sigTypes: Set[String] = Set("syntactic", "semantic")
 
@@ -48,6 +42,8 @@ object MultiField {
    * field_config_parser.py error semantics):
    * {"title": {"sig_type": "syntactic", "weight": 2.0},
    *  "title_tokens": {"source": "title", "sig_type": "semantic"}}
+   * Other keys (the reference's neural-model settings such as
+   * `max_str_len`) are ignored.
    */
   def parseConfigs(json: String): Seq[FieldSpec] = {
     import org.json4s._
@@ -95,16 +91,7 @@ object MultiField {
         }
         if (k < 1) throw new IllegalArgumentException(
           s"""field "$field": shingle_k must be >= 1, got $k""")
-        // explicit max_str_len wins over the computed stats pass, and an
-        // explicit null means "compute it" — the reference's config shape
-        // ({"max_str_len": None}, tests/test_data_utils_helpers.py:47)
-        val msl = m.get("max_str_len") match {
-          case Some(JInt(v)) => Some(v.toLong)
-          case None | Some(JNull) => None
-          case Some(other) => throw new IllegalArgumentException(
-            s"""field "$field": max_str_len must be an int or null, got $other""")
-        }
-        FieldSpec(field, source, sigType, weight, k, maxStrLen = msl)
+        FieldSpec(field, source, sigType, weight, k)
       case (field, JNull) => throw new IllegalArgumentException(
         s"""Please set the value of "$field" in the field config dict""")
       case (field, other) => throw new IllegalArgumentException(
@@ -113,63 +100,6 @@ object MultiField {
     val dup = specs.groupBy(_.field).collectFirst { case (f, ss) if ss.size > 1 => f }
     dup.foreach(f => throw new IllegalArgumentException(s"""duplicate field "$f""""))
     specs
-  }
-
-  /**
-   * The reference's pre-execution STATS PASS bound into the configs
-   * (field_config_parser.py:75-118 driving utils.py:179-208): every
-   * syntactic (STRING-like) field without an explicit max_str_len gets the
-   * corpus maximum normalized length rounded up to even (utils.py:193-198);
-   * every semantic (vocab-typed) field gets its vocabulary size
-   * (compute_vocab_counter, utils.py:203-208). A `source` column missing
-   * from the records raises with the reference's error shape
-   * ("Cannot compute ... Please make sure that field=... is a key...").
-   * All fields' stats are computed in ONE aggregation job.
-   */
-  def bindStats(records: DataFrame, specs: Seq[FieldSpec]): Seq[FieldSpec] = {
-    specs.foreach { sp =>
-      if (!records.columns.contains(sp.source))
-        throw new IllegalArgumentException(
-          s"Cannot compute stats for field=${sp.source}. Please make sure " +
-          s"""that field=${sp.field} is a key in every record of the input """ +
-          "or define source in the field config")
-    }
-    def norm(sp: FieldSpec) =
-      trim(regexp_replace(lower(col(sp.source)), "\\s+", " "))
-
-    // job 1 — all unbound max lengths in one aggregation (STRING-like
-    // fields only, mirroring field_config_parser.py:99 — semantic fields
-    // never get a max_str_len)
-    val lenUnbound = specs.filter(s => s.maxStrLen.isEmpty && s.sigType != "semantic")
-    val lens: Map[String, Long] =
-      if (lenUnbound.isEmpty) Map.empty
-      else {
-        val aggs = lenUnbound.map { sp =>
-          val raw = coalesce(max(length(norm(sp))), lit(0)).cast("long")
-          // even-rounding (utils.py:193-198)
-          (raw + pmod(raw, lit(2L))).as(s"len_${sp.field}")
-        }
-        val row = records.agg(aggs.head, aggs.tail: _*).head()
-        lenUnbound.zipWithIndex.map { case (sp, i) => sp.field -> row.getLong(i) }.toMap
-      }
-
-    // job 2 — all unbound vocab sizes from one tagged token union
-    // (compute_vocab_counter is semantic-field-only in the reference)
-    val vocabUnbound = specs.filter(s => s.vocabSize.isEmpty && s.sigType == "semantic")
-    val vocabs: Map[String, Long] =
-      if (vocabUnbound.isEmpty) Map.empty
-      else vocabUnbound.map { sp =>
-        records.select(lit(sp.field).as("f"), explode(split(norm(sp), " ")).as("t"))
-          .filter(length(col("t")) > 0)
-      }.reduce(_ unionByName _)
-        .groupBy("f").agg(count_distinct(col("t")).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    specs.map { sp =>
-      sp.copy(
-        maxStrLen = sp.maxStrLen.orElse(lens.get(sp.field)),
-        vocabSize = sp.vocabSize.orElse(vocabs.get(sp.field)))
-    }
   }
 
   /** Distinct token-set column for one field: char k-shingles (syntactic)
@@ -271,6 +201,8 @@ object MultiField {
       extra: Seq[String] = Nil,
       pairFilter: Option[(String, String) => Column] = None): DataFrame = {
     require(specs.nonEmpty, "at least one field spec required")
+    specs.foreach(sp => require(records.columns.contains(sp.source),
+      s"""field "${sp.field}": source column "${sp.source}" not in the input"""))
     val totalW = specs.map(_.weight).sum
 
     // ONE prefix table per field (SetSimJoin.PrefixTable: hashed-set side +

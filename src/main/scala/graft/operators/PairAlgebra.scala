@@ -11,14 +11,6 @@ object PairAlgebra {
 
   private val keys = Seq("id1", "id2")
 
-  /** Canonicalize arbitrary pair rows: id1 < id2, self-pairs dropped, distinct. */
-  def canonical(pairs: DataFrame): DataFrame =
-    pairs.select(
-      least(col("id1"), col("id2")).as("id1"),
-      greatest(col("id1"), col("id2")).as("id2"))
-      .filter(col("id1") =!= col("id2"))
-      .distinct()
-
   /**
    * Cluster → all intra-cluster pairs, smaller id first (A4, utils.py:47-66).
    * assignments(id, cluster). Null clusters excluded.
@@ -54,18 +46,4 @@ object PairAlgebra {
   /** found ∩ pos (SET1 true positives). */
   def truePositives(found: DataFrame, pos: DataFrame): DataFrame =
     found.select(keys.map(col): _*).join(pos.select(keys.map(col): _*), keys, "left_semi")
-
-  /** found − pos (SET1 false positives). */
-  def falsePositives(found: DataFrame, pos: DataFrame): DataFrame =
-    found.select(keys.map(col): _*).join(pos.select(keys.map(col): _*), keys, "left_anti")
-
-  /** pos − found (false negatives). */
-  def falseNegatives(found: DataFrame, pos: DataFrame): DataFrame =
-    falsePositives(pos, found)
-
-  /** Universe restriction: found ∩ (pos ∪ neg) (evaluation.py:17-19). */
-  def restrictToUniverse(found: DataFrame, pos: DataFrame, neg: DataFrame): DataFrame =
-    found.join(
-      pos.select(keys.map(col): _*).union(neg.select(keys.map(col): _*)).distinct(),
-      keys, "left_semi")
 }

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
  * Corpus profiling jobs — the reference's pre-execution stats pass
  * (entity_embed/data_utils/utils.py:179-208, driven by
  * field_config_parser.py:75-118): global max string length (rounded up to
- * even, utils.py:193-198) and token vocabulary counts. Bound into field
- * configs by MultiField.bindStats (the reference's binding step); also
- * usable standalone as corpus profiling.
+ * even, utils.py:193-198) and token vocabulary counts, as standalone corpus
+ * profiling (no field config is bound to them: this engine has no neural
+ * model to size).
  */
 object StatsJobs {
 

@@ -30,36 +30,19 @@ object SuffixSpans {
 
   final case class SpanRow(id1: Long, id2: Long, span_len: Int, span: String)
 
-  /** spans + the truncation log (stage, bucket, bucket_n, policy) — one row
-    * per fingerprint group capped at groupCap, matching the shape of
-    * BucketJoin.Result.oversizeLog so callers can union it into the
-    * pipeline's oversize sink. */
-  final case class Result(spans: DataFrame, oversizeLog: DataFrame)
-
   /**
    * docs(id, text) → (id1, id2, span_len, span) for every pair sharing an
-   * exact normalized substring >= cfg.minSpanLen. groupCap bounds degenerate
-   * fingerprint groups (identical boilerplate across millions of pages):
-   * larger groups are truncated to the first groupCap members by id
-   * (deterministic) — star-connectivity for those is still provided by the
-   * MinHash stage. Truncated groups are REPORTED in
-   * [[spansWithLog]].oversizeLog (north rule: no silent caps); this
-   * spans-only form is for callers that sink the log elsewhere or accept
-   * the documented cap.
+   * exact normalized substring >= cfg.minSpanLen. groupCap (2..1024, the
+   * SuffixArrays.dupSpans bound) bounds degenerate fingerprint groups
+   * (identical boilerplate across millions of pages): larger groups are
+   * truncated to the first groupCap members by id (deterministic) —
+   * star-connectivity for those is still provided by the MinHash stage.
+   * Truncated groups are logged as one WARN (north rule: no silent caps;
+   * BucketJoin.warnOversize over a log shaped like BucketJoin's).
    */
   def spans(docs: DataFrame, cfg: GraftConfig, groupCap: Int = 64,
-      idCol: String = "id", textCol: String = "text"): DataFrame =
-    impl(docs, cfg, groupCap, idCol, textCol, computeLog = false).spans
-
-  /** See [[spans]]; additionally emits the group-cap truncation log
-    * (eagerly materialized — it is tiny — so it survives the internal cache
-    * release). */
-  def spansWithLog(docs: DataFrame, cfg: GraftConfig, groupCap: Int = 64,
-      idCol: String = "id", textCol: String = "text"): Result =
-    impl(docs, cfg, groupCap, idCol, textCol, computeLog = true)
-
-  private def impl(docs: DataFrame, cfg: GraftConfig, groupCap: Int,
-      idCol: String, textCol: String, computeLog: Boolean): Result =
+      idCol: String = "id", textCol: String = "text"): DataFrame = {
+    require(groupCap >= 2 && groupCap <= 1024, s"groupCap in 2..1024, got $groupCap")
     CacheScope.run { s =>
     val spark = docs.sparkSession
 
@@ -88,13 +71,13 @@ object SuffixSpans {
     // so the threshold sits at 40k.
     val nDocs = d.count()
     ConfScope.spanScope(spark, nDocs)(
-      runChain(s, d, cfg, groupCap, computeLog, winnowUdf, spark))
+      runChain(s, d, cfg, groupCap, winnowUdf, spark))
     }
+  }
 
   private def runChain(s: CacheScope, d: DataFrame, cfg: GraftConfig, groupCap: Int,
-      computeLog: Boolean,
       winnowUdf: org.apache.spark.sql.expressions.UserDefinedFunction,
-      spark: org.apache.spark.sql.SparkSession): Result = {
+      spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
 
     // (id, fingerprint) memberships — ids only, text stays out of this shuffle
@@ -109,21 +92,12 @@ object SuffixSpans {
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= groupCap)
 
     // truncation log (north rule: no silent caps): one row per capped
-    // fingerprint group, same shape as BucketJoin's oversize log. Computed
-    // only when requested (spansWithLog) — it is one extra window-count job
-    // over the ids-only membership table, eagerly materialized so it stays
-    // valid after the scope releases the normalized-docs cache.
-    val oversize =
-      if (!computeLog)
-        spark.emptyDataFrame
-          .select(lit("").as("stage"), lit(0L).as("bucket"),
-            lit(0L).as("bucket_n"), lit("").as("policy")).limit(0)
-      else memberships.groupBy("bucket")
-        .agg(count(lit(1)).as("bucket_n"))
-        .filter(col("bucket_n") > groupCap)
-        .select(lit("suffix_span_groups").as("stage"), col("bucket"),
-          col("bucket_n"), lit("Truncate").as("policy"))
-        .localCheckpoint()
+    // fingerprint group, same shape as BucketJoin's oversize log
+    val oversize = memberships.groupBy("bucket")
+      .agg(count(lit(1)).as("bucket_n"))
+      .filter(col("bucket_n") > groupCap)
+      .select(lit("suffix_span_groups").as("stage"), col("bucket"),
+        col("bucket_n"), lit("Truncate").as("policy"))
 
     // Many fingerprints of the same near-dup doc group produce the SAME
     // member set (every shared boilerplate yields dozens of fingerprints) —
@@ -189,6 +163,7 @@ object SuffixSpans {
       .select(col("id1"), col("id2"),
         col("m.span_len").as("span_len"), col("m.span").as("span"))
       .localCheckpoint()
-    Result(out, oversize)
+    BucketJoin.warnOversize(oversize)
+    out
   }
 }

@@ -90,9 +90,10 @@ object TextAnalysis {
       lang -> ms.map(m => markerCount(text, m)).reduce(_ + _)
     }
     val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    scores.foldLeft(lit("und")) { case (acc, (lang, s)) =>
-      // first language (in fixed order) achieving the max wins ties
-      when(acc === "und" && s > 0 && s === best, lit(lang)).otherwise(acc)
+    // the first language (in fixed order) is the outermost `when`, so it
+    // wins ties for the max
+    scores.foldRight(lit("und")) { case ((lang, s), rest) =>
+      when(s > 0 && s === best, lit(lang)).otherwise(rest)
     }
   }
 

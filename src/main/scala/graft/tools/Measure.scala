@@ -126,14 +126,24 @@ object Measure {
     p
   }
 
-  /** `head` with wall, job count, summed job walls, the time between jobs
-    * (driver-serial work) and the total; then each job in launch order,
-    * with its stages of at least 50 ms task time below it. */
+  /** Seconds covered by the union of the jobs' [start, end] intervals:
+    * jobs that AQE runs at the same time overlap, so their walls do not
+    * add up. */
+  def jobSpanSec(jobs: Seq[Job]): Double =
+    jobs.map(j => (j.start, j.end)).sortBy(_._1)
+      .foldLeft((0L, Long.MinValue)) { case ((ms, reach), (s, e)) =>
+        (ms + math.max(0L, e - math.max(s, reach)), math.max(reach, e))
+      }._1 / 1e3
+
+  /** `head` with wall, job count, summed job walls, the time no job ran
+    * (driver-serial work: wall minus [[jobSpanSec]]) and the total; then
+    * each job in launch order, with its stages of at least 50 ms task time
+    * below it. */
   def report(tag: String, head: String, wall: Double, p: Profiler): Unit = {
     val js = p.jobs.toSeq.sortBy(_._1)
     val jobWall = js.map(_._2.wallSec).sum
     println(f"$tag $head wall=$wall%.2f s jobs=${js.size} jobWallSum=$jobWall%.2f s " +
-      f"betweenJobs=${wall - jobWall}%.2f s ${p.total}")
+      f"betweenJobs=${wall - jobSpanSec(js.map(_._2))}%.2f s ${p.total}")
     js.foreach { case (id, j) =>
       println(f"$tag   job $id%4d wall=${j.wallSec}%7.2f s $j " +
         f"par=${j.taskSec / math.max(j.wallSec, 0.001)}%5.2f  ${j.name.take(80)}")

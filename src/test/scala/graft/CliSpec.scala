@@ -81,6 +81,33 @@ class CliSpec extends SparkSuite {
     assert(!Files.exists(java.nio.file.Paths.get(out, "clusters")))
   }
 
+  test("linkage mode with --checkpoint-dir: pairs checkpointed, rerun reads them") {
+    val in = tmp("cli_in3c")
+    val out = tmp("cli_out3c")
+    val ckpt = tmp("cli_ckpt3c")
+    val shared = "identical catalog description shared across both sources " +
+      "word for word with enough length to shingle"
+    val csv = writeCsv(in, "id,text,source", Seq(
+      s"""20,"$shared",left""", s"""21,"$shared",right"""))
+    val args = Array("--mode", "linkage", "--input", csv, "--output", out,
+      "--checkpoint-dir", ckpt)
+    Cli.run(spark, Cli.parseArgs(args))
+    val scopes = new java.io.File(ckpt).listFiles()
+    assert(scopes != null && scopes.length == 1 && scopes.head.getName.startsWith("cfg_"))
+    val t = new graft.io.ParquetTables(spark, scopes.head.getPath)
+    assert(t.isComplete("pairs"))
+    assert(t.read("pairs").collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((20L, 21L)))
+    // replace the checkpointed pairs: the rerun must serve them, not recompute
+    val spark2 = spark
+    import spark2.implicits._
+    t.write(Seq((7L, 8L, 0.5)).toDF("id1", "id2", "score"), "pairs")
+    t.markComplete("pairs")
+    Cli.run(spark, Cli.parseArgs(args))
+    assert(spark.read.parquet(s"$out/pairs")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((7L, 8L)))
+  }
+
   test("argument validation") {
     intercept[IllegalArgumentException](Cli.parseArgs(Array("--mode", "dedup")))
     intercept[IllegalArgumentException](

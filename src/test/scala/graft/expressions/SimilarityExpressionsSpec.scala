@@ -60,13 +60,6 @@ class SimilarityExpressionsSpec extends SparkSuite {
       .head().getDouble(0) == 0.5)
   }
 
-  test("SQL registration works") {
-    SimilarityExpressions.register(spark)
-    Seq((Array(1L, 2L), Array(2L, 3L))).toDF("a", "b").createOrReplaceTempView("jt")
-    val v = spark.sql("SELECT jaccard_sorted(a, b) FROM jt").head().getDouble(0)
-    assert(v == 1.0 / 3.0)
-  }
-
   test("null inputs yield null (dropped by threshold filters)") {
     val df = Seq((Some(Array(1L, 2L)), Option.empty[Array[Long]])).toDF("a", "b")
     val r = df.select(SimilarityExpressions.jaccardSorted($"a", $"b")).head()

@@ -73,33 +73,14 @@ class AnnCosinePairsSpec extends SparkSuite {
   }
 
   test("capped LSH buckets are logged: one WARN per call (no silent caps)") {
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("ann-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(ev: LogEvent): Unit =
-        if (ev.getLevel == org.apache.logging.log4j.Level.WARN)
-          warns.add(ev.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
-      .getLogger(Ann.getClass.getName)
-    logger.addAppender(appender)
     val e = corpus(250)
-    try {
+    val (_, got) = warnings(BucketJoin.getClass.getName) {
       // cap 1: every bucket holding a planted near-dup pair is capped
       Ann.lshCosinePairs(e, 0.85, bucketCap = 1).collect()
       Ann.lshTopK(e, 3, bucketCap = 1).collect()
       // default cap: nothing capped, nothing logged
       Ann.lshCosinePairs(e, 0.85).collect()
-    } finally {
-      logger.removeAppender(appender)
-      appender.stop()
     }
-    val got = warns.toArray.map(_.toString).toSeq
     assert(got.size == 2, got)
     assert(got(0).startsWith("cosine_lsh: ") && got(1).startsWith("ann_lsh: "), got)
     assert(got.forall(_.contains("largest bucket_n")), got)

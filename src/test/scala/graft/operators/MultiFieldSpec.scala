@@ -108,6 +108,11 @@ class MultiFieldSpec extends SparkSuite {
     // token jaccard = 4/5 = 0.8; shingle jaccard is high too; score in (0.5, 1)
     val s = got.head._3
     assert(s > 0.5 && s < 1.0)
+    // a source column missing from the input fails fast, naming both
+    val err = intercept[IllegalArgumentException](MultiField.dedupPairs(d,
+      sp :+ FieldSpec("title_tok", "title", "semantic", 1.0), 0.5))
+    assert(err.getMessage.contains("\"title_tok\"") &&
+      err.getMessage.contains("\"title\""), err.getMessage)
   }
 
   test("LSH multi-field path: candidates cover the exact result (recall gate)") {
@@ -171,32 +176,5 @@ class MultiFieldSpec extends SparkSuite {
     assert(got == want, s"got ${got.size}, want ${want.size}")
     assert(got.forall { case (l, r, _) => src(l) == "left" && src(r) == "right" })
     d.unpersist()
-  }
-
-  test("bindStats: reference stats pass — even max_str_len + vocab binding (S4)") {
-    val d = Seq((1L, "Hello  World", "a b c"), (2L, "Wide", "a b d e"))
-      .toDF("id", "title", "body")
-    val sp = Seq(
-      FieldSpec("title", "title", "syntactic", 1.0),
-      FieldSpec("body", "body", "semantic", 1.0))
-    val bound = MultiField.bindStats(d, sp)
-    // "hello  world" normalizes to len 11 -> even-rounded 12 (utils.py:193-198)
-    assert(bound(0).maxStrLen.contains(12L))
-    // semantic fields never get a max_str_len (field_config_parser.py:99)
-    assert(bound(0).vocabSize.isEmpty && bound(1).maxStrLen.isEmpty)
-    // vocab = distinct tokens {a,b,c,d,e} (compute_vocab_counter semantics)
-    assert(bound(1).vocabSize.contains(5L))
-    // explicit max_str_len in the config wins over the computed value,
-    // and an explicit null means compute (tests/test_data_utils_helpers.py:31-47)
-    val explicit = MultiField.parseConfigs(
-      """{"title": {"max_str_len": 99}, "t2": {"source": "title", "max_str_len": null}}""")
-    val b2 = MultiField.bindStats(d, explicit)
-    assert(b2(0).maxStrLen.contains(99L))
-    assert(b2(1).maxStrLen.contains(12L))
-    // missing source column raises the reference's error shape
-    // (field_config_parser.py:103-110 "Cannot compute ... is a key")
-    val err = intercept[IllegalArgumentException](
-      MultiField.bindStats(d, Seq(FieldSpec("nope", "nope", "syntactic", 1.0))))
-    assert(err.getMessage.contains("Cannot compute"))
   }
 }

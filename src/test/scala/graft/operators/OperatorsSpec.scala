@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkSuite
 import graft.config.GraftConfig
-import org.apache.spark.sql.functions._
 
 class OperatorsSpec extends SparkSuite {
   import spark.implicits._
@@ -13,9 +12,6 @@ class OperatorsSpec extends SparkSuite {
     val docs = Seq(
       (1L, "alpha beta gamma"), (2L, "alpha beta gamma"), (3L, "delta"),
       (4L, "alpha beta gamma"), (5L, "delta"), (6L, "unique")).toDF("doc_id", "text")
-    val groups = Dedup.exactDupGroups(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(groups == Set((1L, 3L), (3L, 2L)))
     val pairs = Dedup.exactDupPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L), (1L, 4L), (2L, 4L), (3L, 5L)))
@@ -34,9 +30,20 @@ class OperatorsSpec extends SparkSuite {
     val nearDup = (1 to 100).map(i => if (i == 50) "CHANGED" else s"w$i").mkString(" ")
     val far = (1 to 100).map(i => s"z$i").mkString(" ")
     val docs = Seq((1L, base), (2L, nearDup), (3L, far)).toDF("doc_id", "text")
-    val pairs = Dedup.minhashDupPairs(docs, cfg).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (pairs, quiet) = warnings(BucketJoin.getClass.getName)(
+      Dedup.minhashDupPairs(docs, cfg).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(pairs == Set((1L, 2L)))
+    assert(quiet.isEmpty, quiet)
+    // 257 identical docs: every band bucket is over the 256 cap and
+    // degrades to star pairs around the min id — logged as one WARN
+    val same = (0L to 256L).map(i => (i, base)).toDF("doc_id", "text")
+    val (star, warns) = warnings(BucketJoin.getClass.getName)(
+      Dedup.minhashDupPairs(same, cfg).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet)
+    assert(star == (1L to 256L).map(j => (0L, j)).toSet)
+    assert(warns.size == 1 && warns.head.startsWith("minhash: "), warns)
+    assert(warns.head.contains("largest bucket_n 257"), warns)
   }
 
   test("Dedup.embeddingCosinePairs exact cosine") {
@@ -94,7 +101,9 @@ class OperatorsSpec extends SparkSuite {
       (2L, "Der Hund und die Katze ist gross und der Baum"),
       (3L, ""),
       (4L, "zz qq ww")).toDF("doc_id", "text")
-    val p = TextAnalysis.profile(docs).collect().map(r => r.getLong(0) -> r).toMap
+    val (p, warns) = warnings("")(
+      TextAnalysis.profile(docs).collect().map(r => r.getLong(0) -> r).toMap)
+    assert(!warns.exists(_.contains("trivially true")), warns)
     assert(p(1L).getAs[Long]("n_tokens_ws") == 10)
     assert(p(3L).getAs[Long]("n_tokens_ws") == 0)
     assert(p(1L).getAs[String]("lang_id") == "en")
@@ -114,36 +123,6 @@ class OperatorsSpec extends SparkSuite {
     val vc = StatsJobs.vocabCount(df, "t").collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(vc == Map("abcdefg" -> 1L, "xy" -> 1L, "abc" -> 1L, "de" -> 1L))
-  }
-
-  test("Splits: cluster-level, stratified, disjoint, deterministic") {
-    // 200 plural clusters (3 members) + 400 singletons — both strata present
-    val assign = ((0L until 600L).map(i => (i, i / 3)) ++
-      (600L until 1000L).map(i => (i, i + 10000L))).toDF("id", "cluster")
-    val s1 = Splits.stratifiedSplit(assign, 60, 20, seed = 42L)
-    val s2 = Splits.stratifiedSplit(assign, 60, 20, seed = 42L)
-    assert(s1.collect().toSet == s2.collect().toSet, "deterministic")
-    assert(Splits.splitsDisjoint(s1))
-    // no cluster straddles splits
-    val straddle = s1.groupBy("cluster").agg(countDistinct("split").as("n"))
-      .filter($"n" > 1).count()
-    assert(straddle == 0)
-    // truly stratified: EXACT 60/20/20 cluster proportions inside each
-    // stratum (singleton clusters vs plural), the reference's contract
-    // (utils.py:92-117) — not just proportional in expectation
-    val strata = s1.groupBy("cluster", "split").count()
-      .withColumn("stratum", when($"cluster" >= 10000L, "singleton").otherwise("plural"))
-      .groupBy("stratum", "split").agg(count(lit(1)).as("n"))
-      .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
-    assert(strata(("singleton", "train")) == 240 && strata(("singleton", "valid")) == 80
-      && strata(("singleton", "test")) == 80, s"singleton stratum off: $strata")
-    assert(strata(("plural", "train")) == 120 && strata(("plural", "valid")) == 40
-      && strata(("plural", "test")) == 40, s"plural stratum off: $strata")
-    // shuffle-free variant keeps the same invariants (approximate proportions)
-    val h = Splits.hashSplit(assign, 60, 20, seed = 42L)
-    assert(Splits.splitsDisjoint(h))
-    assert(h.groupBy("cluster").agg(countDistinct("split").as("n"))
-      .filter($"n" > 1).count() == 0)
   }
 
   test("PairAlgebra golden fixture: cluster → 19-pair expansion (reference test_utils.py:192-222)") {

@@ -42,30 +42,6 @@ class PairFeaturesIOSpec extends SparkSuite {
     assert(capped1.contains((1L, 2L)))
   }
 
-  test("PairIO: sink round-trip + labeled pairs + file-based evaluation (S3/S5/M5)") {
-    val dir = Files.createTempDirectory("graft_pairs").toString
-    val found = Seq((1L, 2L), (3L, 4L)).toDF("id1", "id2")
-    val pos = Seq((1L, 2L), (5L, 6L)).toDF("id1", "id2")
-    PairIO.writePairs(found, s"$dir/found")
-    PairIO.writePairs(pos, s"$dir/pos")
-    assert(PairIO.readPairs(spark, s"$dir/found").count() == 2)
-
-    val m = PairIO.evaluateOutput(spark, s"$dir/found", s"$dir/pos", nRecords = 6)
-    assert(m.truePositives == 1 && m.precision == 0.5 && m.recall == 0.5)
-
-    // labeled CSV
-    val csv = s"$dir/labeled.csv"
-    Files.writeString(java.nio.file.Paths.get(csv),
-      "ltable_id,rtable_id,label\n1,2,1\n3,4,0\n5,6,1\n")
-    val (p, n) = PairIO.readLabeledPairs(spark, csv)
-    assert(p.count() == 2 && n.count() == 1)
-
-    // two-source union (S2)
-    val u = PairIO.unionTagged(Seq((1L, "x")).toDF("id", "text"),
-      Seq((2L, "y")).toDF("id", "text"), "amazon", "google")
-    assert(u.groupBy("source").count().count() == 2)
-  }
-
   test("S1 record CSV scan: id/cluster int coercion + non-int raises (cli.py:34-49)") {
     val dir = Files.createTempDirectory("graft-s1").toString
 
@@ -105,18 +81,5 @@ class PairFeaturesIOSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       PairIO.readRecords(spark, noId)
     }
-  }
-
-  test("S2/SET3 unionTagged: tags both sources, keeps every row, aligns by name") {
-    import spark.implicits._
-    val left = Seq((1L, "a"), (2L, "b")).toDF("id", "text")
-    // columns deliberately reordered: unionByName must align by NAME
-    val right = Seq(("c", 10L), ("d", 11L)).toDF("text", "id")
-    val u = graft.io.PairIO.unionTagged(left, right, "L", "R")
-    assert(u.columns.sorted.toSeq == Seq("id", "source", "text"))
-    val rows = u.select("id", "text", "source").as[(Long, String, String)]
-      .collect().toSet
-    assert(rows == Set(
-      (1L, "a", "L"), (2L, "b", "L"), (10L, "c", "R"), (11L, "d", "R")))
   }
 }

@@ -31,6 +31,9 @@ class SuffixLinkageSpec extends SparkSuite {
     // emitted span content is a true common substring of the right length
     assert(spans.head.span.length == spans.head.spanLen)
     assert(docs(0)._2.contains(spans.head.span) && docs(1)._2.contains(spans.head.span))
+    // the per-pair accumulator is quadratic in group size: > 1024 docs is rejected
+    intercept[IllegalArgumentException](
+      SuffixArrays.dupSpans((0L to 1024L).map(i => (i, shared)), minLen = 20))
   }
 
   test("dupSpans: long-span pair inside a weak run reports its TRUE length (RMQ, not run-min)") {

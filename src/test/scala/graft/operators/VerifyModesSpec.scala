@@ -71,20 +71,16 @@ class VerifyModesSpec extends SparkSuite {
       "verbatim across every page of the site and is long enough to winnow"
     val docs = (1L to 8L).map(i => (i, s"unique lead $i $boiler unique tail $i"))
       .toDF("id", "text")
-    val r = SuffixSpans.spansWithLog(docs, cfg, groupCap = 4)
-    val log = r.oversizeLog.collect()
-    assert(log.nonEmpty, "capped fingerprint groups must be logged")
-    assert(log.forall(_.getAs[String]("policy") == "Truncate"))
-    assert(log.forall(_.getAs[Long]("bucket_n") > 4))
-    assert(log.forall(_.getAs[String]("stage") == "suffix_span_groups"))
+    val (spans, warns) = warnings(BucketJoin.getClass.getName)(
+      SuffixSpans.spans(docs, cfg, groupCap = 4).collect())
+    assert(warns.size == 1, warns)
+    assert(warns.head.startsWith("suffix_span_groups: ") &&
+      warns.head.contains("policy Truncate"), warns)
     // spans among the surviving members are still exact and cover the block
-    val spans = r.spans.collect()
     assert(spans.nonEmpty)
     assert(spans.forall(_.getAs[Int]("span_len") >= cfg.minSpanLen))
-    // spans-only form returns the identical span set (no extra log job)
-    val only = SuffixSpans.spans(docs, cfg, groupCap = 4).collect()
-    assert(only.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet ==
-      spans.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet)
+    // groupCap outside 2..1024 (the dupSpans bound) is rejected up front
+    intercept[IllegalArgumentException](SuffixSpans.spans(docs, cfg, groupCap = 1025))
   }
 
   test("runPairs minhash-only exact mode == minhashDupPairs (same stage, same result)") {

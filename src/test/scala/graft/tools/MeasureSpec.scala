@@ -77,6 +77,19 @@ class MeasureSpec extends SparkSuite {
     } finally spark.sparkContext.removeSparkListener(prof)
   }
 
+  test("betweenJobs is wall minus the union of job intervals, never negative") {
+    // jobs [0, 3] s and [1, 4] s overlap, [6, 7] s follows a gap: the
+    // walls sum to 7 s, but jobs cover only 5 s of a 10 s run
+    def job(id: Int, start: Long, end: Long) = {
+      val j = new Measure.Job(s"j$id", start); j.end = end; id -> j
+    }
+    val prof = new Measure.Profiler(spark.sparkContext)
+    prof.jobs ++= Seq(job(0, 0L, 3000L), job(1, 1000L, 4000L), job(2, 6000L, 7000L))
+    assert(Measure.jobSpanSec(prof.jobs.values.toSeq) == 5.0)
+    val out = captured(Measure.report("[t]", "q", 10.0, prof))
+    assert(out.head.contains("jobWallSum=7.00 s betweenJobs=5.00 s"), out)
+  }
+
   test("no product code outside graft/tools references graft.tools") {
     val root = new File("src/main/scala")
     assert(root.isDirectory, s"run from the project root (cwd ${new File(".").getAbsolutePath})")
