@@ -1,34 +1,47 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.{GraftSqlBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
 /**
- * Native Catalyst expressions for the pair-verification hot path.
+ * Column functions for the pair-verification hot path: each one calls a
+ * kernel object's static `compute` through Spark's built-in
+ * `StaticInvoke`.
  *
  * Why not Scala UDFs: a ScalaUDF over Array[Long] deserializes each
  * ArrayData into a fresh JVM array per call — at web scale the verify stage
  * evaluates one comparison per candidate pair (pair-entity ratio x corpus
- * size calls), so the two array copies per pair dominate. These expressions
- * read the unsafe ArrayData buffers directly and stay inside whole-stage
- * codegen via a static call (preference order per SURVEY.md §4: built-in <
- * custom Expression < UDF).
+ * size calls), so the two array copies per pair dominate. The kernels read
+ * the unsafe ArrayData/UTF8String buffers directly, and `StaticInvoke`
+ * keeps the call inside whole-stage codegen (one static method call per
+ * row; interpreted eval reflects on the same method). Preference order per
+ * SURVEY.md §4: built-in < custom Expression < UDF — the built-in here is
+ * `StaticInvoke`, so no custom Expression class is needed.
  */
 object SimilarityExpressions {
 
+  private val longs = ArrayType(LongType)
+  private val doubles = ArrayType(DoubleType)
+
+  /** `kernel.compute(args...)` as a non-null DOUBLE column; a null argument
+    * yields null (dropped by the threshold filters). `argTypes` is checked
+    * at analysis time. */
+  private def call(kernel: AnyRef, argTypes: Seq[DataType], args: Column*): Column =
+    ExpressionUtils.column(StaticInvoke(kernel.getClass, DoubleType, "compute",
+      args.map(ExpressionUtils.expression), inputTypes = argTypes,
+      returnNullable = false))
+
   /** Exact Jaccard of two SORTED distinct long arrays (merge-intersect). */
   def jaccardSorted(a: Column, b: Column): Column =
-    ExpressionUtils.column(JaccardSorted(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    call(JaccardSorted, Seq(longs, longs), a, b)
 
   /** Fraction of agreeing positions of two equal-length long arrays. */
   def minhashAgreement(a: Column, b: Column): Column =
-    ExpressionUtils.column(MinHashAgreement(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    call(MinHashAgreement, Seq(longs, longs), a, b)
 
   /** Agreement fraction over PACKED 8-bit minhash lanes (8 per long) —
     * the narrow tier-1 payload (TextSignatures.Sig.minhash8). `numPerm`
@@ -36,8 +49,7 @@ object SimilarityExpressions {
     * on BOTH sides and would otherwise count as phantom agreements when
     * numPerm is not a multiple of 8. */
   def minhashAgreementPacked(a: Column, b: Column, numPerm: Int): Column =
-    ExpressionUtils.column(MinHashAgreementPacked(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b), numPerm))
+    call(MinHashAgreementPacked, Seq(longs, longs, IntegerType), a, b, lit(numPerm))
 
   /** Exact k-shingle Jaccard recomputed from the two TEXTS (normalize →
     * shingle-hash, same kernel as TextSignatures) — bitwise-identical to
@@ -45,8 +57,7 @@ object SimilarityExpressions {
     * shuffling them (a shingle array is ~8 bytes/char of corpus; the text
     * itself is ~8x smaller). */
   def textShingleJaccard(a: Column, b: Column, k: Int): Column =
-    ExpressionUtils.column(TextShingleJaccard(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b), k))
+    call(TextShingleJaccard, Seq(StringType, StringType, IntegerType), a, b, lit(k))
 
   /** Dot product of two ARRAY<DOUBLE> columns — the embedding-similarity
     * hot path. The `aggregate(zip_with(...))` higher-order-function form is
@@ -54,36 +65,7 @@ object SimilarityExpressions {
     * rescore spent most of its wall in HOF eval); this is the same
     * left-to-right float summation order, bitwise-identical results. */
   def dotProduct(a: Column, b: Column): Column =
-    ExpressionUtils.column(DotProduct(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-}
-
-case class JaccardSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
-  // input typing enforced structurally: both children must be ARRAY<BIGINT>
-  // (AbstractDataType/ExpectsInputTypes are private[sql] in Spark 4)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt.isInstanceOf[ArrayType] &&
-      dt.asInstanceOf[ArrayType].elementType == LongType
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<BIGINT> arguments")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "jaccard_sorted"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    JaccardSorted.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.JaccardSorted.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaccardSorted =
-    copy(left = newLeft, right = newRight)
+    call(DotProduct, Seq(doubles, doubles), a, b)
 }
 
 object JaccardSorted {
@@ -103,34 +85,6 @@ object JaccardSorted {
   }
 }
 
-case class MinHashAgreement(left: Expression, right: Expression)
-    extends BinaryExpression {
-  // input typing enforced structurally: both children must be ARRAY<BIGINT>
-  // (AbstractDataType/ExpectsInputTypes are private[sql] in Spark 4)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt.isInstanceOf[ArrayType] &&
-      dt.asInstanceOf[ArrayType].elementType == LongType
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<BIGINT> arguments")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_agreement"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    MinHashAgreement.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.MinHashAgreement.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MinHashAgreement =
-    copy(left = newLeft, right = newRight)
-}
-
 object MinHashAgreement {
   def compute(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements()
@@ -142,31 +96,6 @@ object MinHashAgreement {
     }
     eq.toDouble / n
   }
-}
-
-case class TextShingleJaccard(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType && k >= 1)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two STRING arguments and k >= 1")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "text_shingle_jaccard"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextShingleJaccard.compute(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.TextShingleJaccard.compute($a, $b, $k)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TextShingleJaccard =
-    copy(left = newLeft, right = newRight)
 }
 
 object TextShingleJaccard {
@@ -260,59 +189,6 @@ object TextShingleJaccard {
     val union = na + nb - inter
     if (union == 0) 0.0 else inter.toDouble / union
   }
-}
-
-case class MinHashAgreementPacked(left: Expression, right: Expression,
-    numPerm: Int) extends BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt.isInstanceOf[ArrayType] &&
-      dt.asInstanceOf[ArrayType].elementType == LongType
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<BIGINT> arguments")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_agreement_packed"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    MinHashAgreementPacked.compute(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], numPerm)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.MinHashAgreementPacked.compute($a, $b, $numPerm)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MinHashAgreementPacked =
-    copy(left = newLeft, right = newRight)
-}
-
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt.isInstanceOf[ArrayType] &&
-      dt.asInstanceOf[ArrayType].elementType == DoubleType
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<DOUBLE> arguments")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "dot_product"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DotProduct.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.DotProduct.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
 }
 
 object DotProduct {

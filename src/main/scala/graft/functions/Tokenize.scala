@@ -12,11 +12,9 @@ import org.apache.spark.sql.functions._
  * classes are spelled out: \w minus _ == [\p{L}\p{Nd}] (unicode letters +
  * decimal digits); its complement-minus-whitespace keeps _ as punctuation.
  *
- * The tokenizer is the reference's pluggable extension point
- * (field_config_parser.py:23-26 dotted-path import) — mirrored here as the
- * `Column => Column` tokenizer parameter of StatsJobs and PairFeatures. The
- * signature kernel has one fixed tokenization: the single-space gaps of
- * TextSignatures.normalize.
+ * PairFeatures tokenizes with `default`; StatsJobs splits on whitespace
+ * runs. The signature kernel has one fixed tokenization: the single-space
+ * gaps of TextSignatures.normalize.
  */
 object Tokenize {
 

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 object Ann {
 
   /** Normalize + cast embedding to double, with L2 norm column. */
-  private def prep(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+  private[operators] def prep(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(col(idCol).as("id"),
         transform(col(vecCol), x => x.cast("double")).as("v"))
       .withColumn("norm",
@@ -27,6 +27,18 @@ object Ann {
   private def cosine = (a: String, b: String) =>
     graft.expressions.SimilarityExpressions.dotProduct(col(s"$a.v"), col(s"$b.v")) /
       (col(s"$a.norm") * col(s"$b.norm"))
+
+  /** Brute exact threshold-cosine pairs over a prepped side: the `a.id <
+    * b.id` self-join, scored and filtered at `threshold`, rounded to 6.
+    * Output: (id1, id2, cosine). O(n²) — shared by
+    * Dedup.embeddingCosinePairs and the weak-regime branch of
+    * [[lshCosinePairsPlan]]. */
+  private[operators] def bruteCosinePairs(e: DataFrame, threshold: Double): DataFrame =
+    e.as("a").join(e.as("b"), col("a.id") < col("b.id"))
+      .select(col("a.id").as("id1"), col("b.id").as("id2"),
+        cosine("a", "b").as("cosine"))
+      .filter(col("cosine") >= threshold)
+      .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
 
   /** Exact cosine rescore of candidate (id1, id2) pairs against a prepped
     * embedding side — shared by the top-k and threshold-pairs LSH paths so
@@ -224,12 +236,7 @@ object Ann {
       log.info(f"cosine pairs at t=$threshold%.2f: tuned ($nPlanes planes, " +
         f"$nTables tables) would admit ${pRand * 100}%.0f%% of random " +
         "pairs — brute exact scan instead (full recall)")
-      val out = e.as("a").join(e.as("b"), col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"),
-          cosine("a", "b").as("cosine"))
-        .filter(col("cosine") >= threshold)
-        .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
-      LshPlan(out, None)
+      LshPlan(bruteCosinePairs(e, threshold), None)
     } else {
       val buckets = hyperplaneBuckets(e, dimOf(emb, vecCol), nPlanes, nTables, seed)
       val capped = BucketJoin.pairs(buckets, bucketCap, "cosine_lsh")

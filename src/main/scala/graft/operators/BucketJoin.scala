@@ -114,8 +114,11 @@ object BucketJoin {
         Seq.empty[(Long, Long)].toDF("id1", "id2")
     }
 
-    val oversizeLog = joined.filter(col("bucket_n") > cap)
-      .select(col("bucket"), col("bucket_n")).distinct()
+    // the log is read after the pairs (warnOversize, the pipeline's
+    // oversize sink), so it must not re-run the window: a plain per-bucket
+    // count partial-aggregates map-side and gives the same rows
+    val oversizeLog = m.groupBy("bucket").agg(count(lit(1)).as("bucket_n"))
+      .filter(col("bucket_n") > cap)
       .select(lit(stage).as("stage"), col("bucket"), col("bucket_n"),
         lit(oversize.toString).as("policy"))
 

@@ -83,20 +83,10 @@ object Dedup {
 
   /**
    * Embedding-cosine near-dup pairs over an (id, embedding Array[Float])
-   * table: brute-force O(n²) with the dot product expressed via
-   * zip_with + aggregate (no UDF; stays in codegen). Scale path = Ann.lsh.
+   * table: brute-force O(n²) self-join scored with the dotProduct kernel
+   * (Ann.bruteCosinePairs). Scale path = Ann.lshCosinePairs.
    */
   def embeddingCosinePairs(emb: DataFrame, threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val dot = graft.expressions.SimilarityExpressions.dotProduct _
-    val e = emb.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("v"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-    e.as("a").join(e.as("b"), col("a.id") < col("b.id"))
-      .withColumn("cosine",
-        dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")))
-      .filter(col("cosine") >= threshold)
-      .select(col("a.id").as("id1"), col("b.id").as("id2"),
-        round(col("cosine"), 6).as("cosine"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    Ann.bruteCosinePairs(Ann.prep(emb, idCol, vecCol), threshold)
 }

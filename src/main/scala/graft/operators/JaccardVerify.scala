@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
  *     and get exact shingle Jaccard; the final filter keeps exactness — NO
  *     false positives, ever.
  *
- * Both scorers are native codegen'd Catalyst expressions
+ * Both scorers are static kernels called through StaticInvoke
  * (graft.expressions.SimilarityExpressions), zero-copy over ArrayData.
  */
 object JaccardVerify {
@@ -51,7 +51,7 @@ object JaccardVerify {
    *
    * texts = Some(df(id, text)), required in exact mode: tier 2 recomputes
    * the exact shingle Jaccard FROM THE TEXT per surviving pair
-   * (TextShingleJaccard — same kernel, bitwise-identical to
+   * (the TextShingleJaccard kernel — same shingling, bitwise-identical to
    * Hashing.jaccardSorted over the shingle sets) instead of joining stored
    * shingle arrays. A shingle array is ~8 bytes per corpus char; the text
    * is ~8x smaller, so this cuts tier-2 join traffic ~8x and lets the

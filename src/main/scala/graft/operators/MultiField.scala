@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.expressions.SimilarityExpressions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -282,7 +283,8 @@ object MultiField {
   /** Σ_f w_f · jaccard_f / Σ_f w_f per candidate (id1, id2), rounded to 6
     * and filtered at `threshold`: one contribution row per pair and field,
     * summed per pair. `fields` holds each field's weight and its (id, g)
-    * set table; a pair missing a field's set scores 0 for it. */
+    * table of SORTED distinct hash sets; a pair missing a field's set
+    * scores 0 for it. */
   private def weightedScore(cands: DataFrame, fields: Seq[(Double, DataFrame)],
       threshold: Double): DataFrame = {
     val contrib = fields.map { case (w, d) =>
@@ -290,12 +292,10 @@ object MultiField {
         .join(d.select(col("id").as("id1"), col("g").as("g1")), Seq("id1"), "left")
         .join(d.select(col("id").as("id2"), col("g").as("g2")), Seq("id2"), "left")
         .select(col("id1"), col("id2"),
-          // try_divide: an empty-vs-empty field is 0/0 → null → 0 (the
-          // reference's empty-field zeroing; ANSI mode would error on /0)
-          (coalesce(
-            try_divide(
-              size(array_intersect(col("g1"), col("g2"))).cast("double"),
-              size(array_union(col("g1"), col("g2")))),
+          // both callers' sets are sorted distinct hash arrays, the merge
+          // kernel's input; empty-vs-empty scores 0 in the kernel and a
+          // missing side is null → 0 (the reference's empty-field zeroing)
+          (coalesce(SimilarityExpressions.jaccardSorted(col("g1"), col("g2")),
             lit(0.0)) * w).as("wj"))
     }.reduce(_ unionByName _)
     contrib.groupBy("id1", "id2")

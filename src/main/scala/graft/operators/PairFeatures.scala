@@ -20,11 +20,9 @@ object PairFeatures {
    * joins shuffle by id which is the layout the verify stage already used.
    */
   def enrich(pairs: DataFrame, docs: DataFrame,
-      idCol: String = "id", textCol: String = "text",
-      tokenizer: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        Tokenize.default): DataFrame = {
+      idCol: String = "id", textCol: String = "text"): DataFrame = {
     val d = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-    val toks = (c: org.apache.spark.sql.Column) => array_distinct(tokenizer(c))
+    val toks = (c: org.apache.spark.sql.Column) => array_distinct(Tokenize.default(c))
     pairs.select(col("id1"), col("id2"))
       .join(d.select(col("id").as("id1"), col("t").as("t1")), "id1")
       .join(d.select(col("id").as("id2"), col("t").as("t2")), "id2")
@@ -64,15 +62,10 @@ object PairFeatures {
    * verify stage.
    */
   def tfidfCosine(pairs: DataFrame, docs: DataFrame,
-      idCol: String = "id", textCol: String = "text",
-      docCount: Option[Long] = None,
-      tokenizer: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        Tokenize.default): DataFrame = {
+      idCol: String = "id", textCol: String = "text"): DataFrame = {
     val d = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-    // idf needs the corpus size; callers that already know it (a pipeline
-    // that counted at ingest) pass it and skip this count job
-    val n = docCount.getOrElse(d.count())
-    val toks = d.select(col("id"), explode(tokenizer(col("t"))).as("tok"))
+    val n = d.count() // idf needs the corpus size
+    val toks = d.select(col("id"), explode(Tokenize.default(col("t"))).as("tok"))
       .groupBy("id", "tok").agg(count(lit(1)).as("tf"))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     val w = toks.join(dfreq, "tok")
@@ -102,13 +95,13 @@ object PairFeatures {
    * most k best-scoring partners per record — bounds pair-entity ratio
    * exactly like the reference's k-NN k. Applied symmetrically: a pair
    * survives if it is within the top-k of EITHER endpoint (HNSW semantics:
-   * found-by-either-side).
+   * found-by-either-side). `scored` carries (id1, id2, jaccard, ...); rows
+   * keep their columns.
    */
-  def capPairsPerRecord(scored: DataFrame, k: Int,
-      scoreCol: String = "jaccard"): DataFrame = {
+  def capPairsPerRecord(scored: DataFrame, k: Int): DataFrame = {
     val both = scored.select(col("id1").as("anchor"), col("id2").as("partner"),
-        col(scoreCol).as("s"))
-      .union(scored.select(col("id2"), col("id1"), col(scoreCol)))
+        col("jaccard").as("s"))
+      .union(scored.select(col("id2"), col("id1"), col("jaccard")))
     val w = Window.partitionBy("anchor").orderBy(desc("s"), asc("partner"))
     val kept = both.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .select(

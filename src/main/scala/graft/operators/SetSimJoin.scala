@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
  *     (pa, pb) bounds overlap by min(|a|−pa, |b|−pb), which must reach
  *     ⌈t/(1+t)·(|a|+|b|)⌉ — a pair's earliest-common-token row always
  *     satisfies this when the pair is a true match, so pruning is safe;
- *  4. exact verify: survivors re-join their full token arrays and compute
- *     true Jaccard via array_intersect/array_union (codegen'd built-ins).
+ *  4. exact verify: survivors re-join their sorted token-hash arrays and
+ *     compute true Jaccard with the jaccardSorted merge kernel.
  *
  * Scale shape: shuffles are all equi (token-df groupBy, per-id sort-agg,
  * prefix-token equi-join, pair distinct, two id-keyed verify joins); no
@@ -78,7 +78,7 @@ object SetSimJoin {
     // distinct/intersection counts over the hashes equal the counts over
     // the strings modulo 64-bit collisions, the shuffle payload is 8
     // bytes/token instead of a string, and verification runs in the
-    // codegen'd merge kernel (jaccard_sorted) instead of building a hash
+    // codegen'd merge kernel (jaccardSorted) instead of building a hash
     // set per pair. Callers that already hash (array<long> input) skip the
     // re-hash — the tokenize/gram projection is the hottest part of the
     // whole join and must not be paid twice.

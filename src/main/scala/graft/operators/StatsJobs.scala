@@ -13,28 +13,22 @@ import org.apache.spark.sql.functions._
  */
 object StatsJobs {
 
-  /** A1: max (token) string length over a column, rounded up to even.
-    * `tokenizer` is the reference's pluggable extension point
-    * (compute_max_str_len's tokenizer arg, utils.py:179) — any
-    * Column => Column producing an array of tokens. */
-  def maxStrLen(df: DataFrame, textCol: String, multitoken: Boolean,
-      tokenizer: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        c => split(trim(c), "\\s+")): DataFrame = {
+  /** A1: max (token) string length over a column, rounded up to even;
+    * multitoken splits on whitespace runs. */
+  def maxStrLen(df: DataFrame, textCol: String, multitoken: Boolean): DataFrame = {
     val base =
       if (multitoken)
-        df.select(explode(tokenizer(col(textCol))).as("t"))
+        df.select(explode(split(trim(col(textCol)), "\\s+")).as("t"))
           .agg(max(length(col("t"))).as("raw"))
       else df.agg(max(length(col(textCol))).as("raw"))
     // round up to even (utils.py:193-198)
     base.select((col("raw") + pmod(col("raw"), lit(2))).cast("long").as("max_str_len"))
   }
 
-  /** A2: token frequency table (vocab counter, utils.py:203-208);
-    * `tokenizer` as in maxStrLen (compute_vocab_counter's tokenizer arg). */
-  def vocabCount(df: DataFrame, textCol: String,
-      tokenizer: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        c => split(lower(trim(c)), "\\s+")): DataFrame =
-    df.select(explode(tokenizer(col(textCol))).as("token"))
+  /** A2: token frequency table (vocab counter, utils.py:203-208) over the
+    * lowercased whitespace tokens. */
+  def vocabCount(df: DataFrame, textCol: String): DataFrame =
+    df.select(explode(split(lower(trim(col(textCol))), "\\s+")).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy("token").agg(count(lit(1)).as("freq"))
 }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /**
  * Minimal bridge into Spark's private[sql] Column <-> Expression converters
  * (org.apache.spark.sql.classic.ExpressionUtils) — the standard pattern for
- * third-party libraries exposing native Catalyst expressions as Columns on
- * Spark 4 (cf. the session-extension ecosystem; Spark's own `package object
- * sql` does the same for its internal callers).
+ * third-party libraries exposing Catalyst expressions as Columns on Spark 4
+ * (Spark's own `package object sql` does the same for its internal
+ * callers). graft.expressions wraps its StaticInvoke kernel calls with it.
  */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

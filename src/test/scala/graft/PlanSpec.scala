@@ -66,6 +66,32 @@ class PlanSpec extends SparkSuite {
     val p = plan(verified)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    // every kernel call runs inside whole-stage codegen (final AQE plan):
+    // an interpreted fallback would reflect per row
+    verified.collect()
+    val calls = kernelCalls(verified.queryExecution.executedPlan, inCodegen = false)
+    assert(calls.map(_._1).contains("TextShingleJaccard"), calls)
+    assert(calls.forall(_._2), s"kernel call outside whole-stage codegen: $calls")
+  }
+
+  /** (kernel object, inside a WholeStageCodegenExec?) per plan node that
+    * calls a graft.expressions kernel, descending into AQE query stages. */
+  private def kernelCalls(p: org.apache.spark.sql.execution.SparkPlan,
+      inCodegen: Boolean): Seq[(String, Boolean)] = {
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution._
+    val here = p.expressions.flatMap(_.collect {
+      case si: StaticInvoke if si.staticObject.getName.startsWith("graft.expressions.") =>
+        (si.staticObject.getSimpleName.stripSuffix("$"), inCodegen)
+    })
+    val kids = p match {
+      case a: adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan -> false)
+      case q: adaptive.QueryStageExec => Seq(q.plan -> false)
+      case w: WholeStageCodegenExec => Seq(w.child -> true)
+      case i: InputAdapter => Seq(i.child -> false)
+      case _ => p.children.map(_ -> inCodegen)
+    }
+    here ++ kids.flatMap { case (c, f) => kernelCalls(c, f) }
   }
 
   test("cosine LSH pairs + pairs-mode plans contain no cartesian product") {

@@ -19,16 +19,21 @@ class SimilarityExpressionsSpec extends SparkSuite {
 
   test("interpreted eval matches codegen (both paths)") {
     val df = Seq((Array(1L, 5L, 9L), Array(5L, 9L, 11L))).toDF("a", "b")
-    val expected = 2.0 / 4.0
+    // jaccard 2/4; agreement 0/3; packed lanes over the first 16 of 24:
+    // 1, 5, 9 vs 5, 9, 11 agree on the upper zero lanes of each long only
+    val scores = Seq(
+      SimilarityExpressions.jaccardSorted($"a", $"b"),
+      SimilarityExpressions.minhashAgreement($"a", $"b"),
+      SimilarityExpressions.minhashAgreementPacked($"a", $"b", 16))
+    val expected = Seq(2.0 / 4.0, 0.0, 14.0 / 16.0)
+    def eval() = { val r = df.select(scores: _*).head(); scores.indices.map(r.getDouble) }
     // codegen path (wholestage on)
-    assert(df.select(SimilarityExpressions.jaccardSorted($"a", $"b"))
-      .head().getDouble(0) == expected)
+    assert(eval() == expected)
     // interpreted path
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
-      assert(df.select(SimilarityExpressions.jaccardSorted($"a", $"b"))
-        .head().getDouble(0) == expected)
+      assert(eval() == expected)
     } finally {
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
@@ -58,6 +63,17 @@ class SimilarityExpressionsSpec extends SparkSuite {
     val df = Seq((Array(1L, 2L, 3L, 4L), Array(1L, 9L, 3L, 7L))).toDF("a", "b")
     assert(df.select(SimilarityExpressions.minhashAgreement($"a", $"b"))
       .head().getDouble(0) == 0.5)
+  }
+
+  test("wrong-typed arguments fail at analysis") {
+    val df = Seq((Array("x"), Array("y"), 1.5)).toDF("a", "b", "d")
+    Seq(
+      SimilarityExpressions.jaccardSorted($"a", $"b"),
+      SimilarityExpressions.minhashAgreementPacked($"a", $"b", 8),
+      SimilarityExpressions.dotProduct($"d", $"d"),
+      SimilarityExpressions.textShingleJaccard($"a", $"b", 5)).foreach { c =>
+      intercept[org.apache.spark.sql.AnalysisException](df.select(c).collect())
+    }
   }
 
   test("null inputs yield null (dropped by threshold filters)") {

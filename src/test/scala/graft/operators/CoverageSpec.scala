@@ -1,10 +1,10 @@
 package graft.operators
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** Deterministic specs for the small operators the round-1 audit flagged as
-  * implemented-but-untested: A6 source partition, tokenizer injection. */
+  * implemented-but-untested: A6 source partition, the stats/feature
+  * tokenizers. */
 class CoverageSpec extends SparkSuite {
   import spark.implicits._
 
@@ -19,27 +19,16 @@ class CoverageSpec extends SparkSuite {
     assert(got == Set((1L, 2L), (1L, 3L)))
   }
 
-  test("Column-level tokenizer injection: stats jobs accept any tokenizer") {
-    import spark.implicits._
+  test("Stats jobs and pair features use their fixed default tokenizers") {
     val d = Seq((1L, "aa bb-cc"), (2L, "bb dd")).toDF("id", "text")
     // default whitespace: tokens aa, bb-cc, bb, dd
     val defVocab = StatsJobs.vocabCount(d, "text")
       .collect().map(_.getString(0)).toSet
     assert(defVocab == Set("aa", "bb-cc", "bb", "dd"))
-    // injected tokenizer: split on non-letters (the reference's pluggable
-    // tokenizer reaching the stats pass, utils.py:179/203)
-    val injected = StatsJobs.vocabCount(d, "text",
-      c => split(lower(c), "[^a-z]+"))
-      .collect().map(_.getString(0)).toSet
-    assert(injected == Set("aa", "bb", "cc", "dd"))
-    val msl = StatsJobs.maxStrLen(d, "text", multitoken = true,
-      c => split(c, "[^a-zA-Z]+")).head().getLong(0)
-    assert(msl == 2)
-    // pair features take the same injection point
-    val pairs = Seq((1L, 2L)).toDF("id1", "id2")
-    val feat = PairFeatures.enrich(pairs, d, tokenizer = c => split(lower(c), "[^a-z]+"))
-      .head()
-    // tokens {aa,bb,cc} vs {bb,dd}: jaccard 1/4
-    assert(feat.getAs[Double]("token_jaccard") == 0.25)
+    // longest whitespace token "bb-cc" (5), rounded up to even
+    assert(StatsJobs.maxStrLen(d, "text", multitoken = true).head().getLong(0) == 6)
+    // Tokenize.default splits punctuation off: {aa,bb,-,cc} vs {bb,dd} = 1/5
+    val feat = PairFeatures.enrich(Seq((1L, 2L)).toDF("id1", "id2"), d).head()
+    assert(feat.getAs[Double]("token_jaccard") == 0.2)
   }
 }

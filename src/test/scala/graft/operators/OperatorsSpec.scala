@@ -44,6 +44,13 @@ class OperatorsSpec extends SparkSuite {
     assert(star == (1L to 256L).map(j => (0L, j)).toSet)
     assert(warns.size == 1 && warns.head.startsWith("minhash: "), warns)
     assert(warns.head.contains("largest bucket_n 257"), warns)
+    // the log itself: one row per capped band bucket, counted over all 257
+    val log = CandidateGen.minhashStage(
+      Signatures.compute(same, cfg, "doc_id"), cfg).oversizeLog.collect()
+    assert(log.length == 32 && log.map(_.getAs[Long]("bucket")).distinct.length == 32)
+    assert(log.forall(r => r.getAs[Long]("bucket_n") == 257L &&
+      r.getAs[String]("stage") == "minhash" && r.getAs[String]("policy") == "Star"),
+      log.mkString("\n"))
   }
 
   test("Dedup.embeddingCosinePairs exact cosine") {
