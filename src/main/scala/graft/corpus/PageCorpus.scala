@@ -66,24 +66,24 @@ object PageCorpus {
     def nextDouble(): Double = (nextLong() >>> 11) * 1.1102230246251565e-16
   }
 
-  /** Zipf-ish cluster size: ~55% singletons, tail up to `maxSize`. */
-  private def clusterSize(rng: Rng, maxSize: Int): Int = {
+  /** Zipf-ish cluster size: ~55% singletons, tail up to 24. */
+  private def clusterSize(rng: Rng): Int = {
     val u = rng.nextDouble()
     if (u < 0.55) 1
     else if (u < 0.80) 2
     else if (u < 0.92) 3 + rng.nextInt(3) // 3-5
     else if (u < 0.985) 6 + rng.nextInt(5) // 6-10
-    else 11 + rng.nextInt(math.max(1, maxSize - 10)) // heavy tail
+    else 11 + rng.nextInt(14) // heavy tail, 11-24
   }
 
   /** Driver-side spine: one row per page, ids dense 0..n-1. */
-  def spine(nPages: Int, seed: Long, maxClusterSize: Int = 24): Array[Spine] = {
+  def spine(nPages: Int, seed: Long): Array[Spine] = {
     val out = new scala.collection.mutable.ArrayBuffer[Spine](nPages)
     val rng = new Rng(seed, 0xc1057e2L)
     var cluster = 0L
     var id = 0L
     while (out.length < nPages) {
-      val size = math.min(clusterSize(rng, maxClusterSize), nPages - out.length)
+      val size = math.min(clusterSize(rng), nPages - out.length)
       var v = 0
       while (v < size) {
         out += Spine(id, cluster, v)
@@ -155,14 +155,14 @@ object PageCorpus {
     IdPage(s.id, url, ts, html, text, lang)
   }
 
-  /** Distributed corpus: Dataset[IdPage] + planted ground truth. */
-  def generate(spark: SparkSession, nPages: Int, seed: Long = 42L,
-      partitions: Int = 0): (Dataset[IdPage], Dataset[TruthRow]) = {
+  /** Distributed corpus: Dataset[IdPage] + planted ground truth, one
+    * partition per default-parallelism slot. */
+  def generate(spark: SparkSession, nPages: Int,
+      seed: Long = 42L): (Dataset[IdPage], Dataset[TruthRow]) = {
     import spark.implicits._
     val sp = spine(nPages, seed)
-    val nPart = if (partitions > 0) partitions
-      else math.max(spark.sparkContext.defaultParallelism, 1)
-    val spineDs = spark.createDataset(sp.toIndexedSeq).repartition(nPart)
+    val spineDs = spark.createDataset(sp.toIndexedSeq)
+      .repartition(math.max(spark.sparkContext.defaultParallelism, 1))
     val pages = spineDs.map(s => makePage(seed, s))
     val truth = spark.createDataset(sp.toIndexedSeq.map(s =>
       TruthRow(s.id, s"https://${hostFor(seed, s.id)}/p/${s.cluster}/${s.variant}", s.cluster)))

@@ -191,7 +191,7 @@ object SuffixArrays {
     // HashMap[(Long,Long),(Int,Int)] form allocated two tuples per
     // candidate update across ~10^5 updates/group. The flat form is
     // quadratic in group size, hence the 1024-doc bound (2 x 4 MB); engine
-    // groups are capped at SuffixSpans' groupCap.
+    // groups are capped at SuffixSpans.GroupCap.
     val bestLen = new Array[Int](nDocs * nDocs)
     val bestStart = new Array[Int](nDocs * nDocs)
     val lastSeen = new Array[Int](nDocs)

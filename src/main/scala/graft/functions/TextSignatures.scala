@@ -23,8 +23,10 @@ import Hashing._
  */
 object TextSignatures {
 
-  /** Signature FORMAT version, stamped into checkpoint scopes/markers so a
-    * resume can never mix signatures from two hash families (round-5
+  /** Signature FORMAT version, hashed into Cli's checkpoint scope
+    * directory and stamped into the pipeline's `<stage>_format` tables
+    * (DedupPipeline.stage), so a resume can never mix signatures from two
+    * hash families (round-5
     * advisor finding): v1 = a*h+b mod 2^61-1 MinHash family (rounds 1-4),
     * v2 = the wraparound odd-multiplier family (round 5+). Bump on any
     * change that alters minhash/band/simhash/span key VALUES, including a

@@ -13,14 +13,29 @@ import org.apache.spark.sql.functions._
  *    reference indexes.py:43-48) — the correctness baseline.
  *  - lshTopK: scale path — random-hyperplane LSH buckets (sign sketch), only
  *    intra-bucket pairs scored, then per-query top-k. Sub-quadratic like
- *    HNSW; recall controlled by (nPlanes, nTables).
+ *    HNSW; recall controlled by ([[TopKPlanes]], [[TopKTables]]).
+ *
+ * Inputs are (vec_id, embedding) tables. The build constants below are
+ * fixed like the reference's HNSW parameters (helpers.py:15-27): callers
+ * pass only k or the threshold, and the LSH seed.
  */
 object Ann {
 
+  /** Top-k planes × tables; members per bucket before it degrades to star
+    * pairs; [[tunePlanes]]' per-pair recall target and table budget; the
+    * random-pair admission at or above which threshold pairs run the brute
+    * exact scan ([[lshCosinePairsPlan]]). */
+  val TopKPlanes = 12
+  val TopKTables = 6
+  val BucketCap = 2048
+  val RecallTarget = 0.99
+  val MaxTables = 32
+  val BruteAdmitCutoff = 0.3
+
   /** Normalize + cast embedding to double, with L2 norm column. */
-  private[operators] def prep(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
-    emb.select(col(idCol).as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
+  private[operators] def prep(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("id"),
+        transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("norm",
         sqrt(graft.expressions.SimilarityExpressions.dotProduct(col("v"), col("v"))))
 
@@ -57,9 +72,8 @@ object Ann {
    * Exact cosine top-k neighbors per vector. Deterministic tie-break:
    * (cosine desc, neighbor id asc). O(n²) — small-scale baseline and oracle.
    */
-  def bruteForceTopK(emb: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val e = prep(emb, idCol, vecCol)
+  def bruteForceTopK(emb: DataFrame, k: Int): DataFrame = {
+    val e = prep(emb)
     val scored = e.as("a").join(e.as("b"), col("a.id") =!= col("b.id"))
       .select(col("a.id").as("id"), col("b.id").as("neighbor"),
         round(cosine("a", "b"), 6).as("cosine"))
@@ -121,12 +135,9 @@ object Ann {
    * exactly, per-query top-k. Recall < 1 by construction; tested against
    * bruteForceTopK for overlap.
    */
-  def lshTopK(emb: DataFrame, k: Int, nPlanes: Int = 12, nTables: Int = 6,
-      seed: Long = 42L, idCol: String = "vec_id",
-      vecCol: String = "embedding", bucketCap: Int = 2048): DataFrame =
+  def lshTopK(emb: DataFrame, k: Int, seed: Long = 42L): DataFrame =
     ConfScope.smallInputScope(emb.sparkSession, emb) { CacheScope.run { s =>
-      materialize(lshTopKPlan(s, emb, k, nPlanes, nTables, seed, idCol,
-        vecCol, bucketCap))
+      materialize(lshTopKPlan(s, emb, k, seed))
     } }
 
   /** A planned LSH result, un-checkpointed (plan-shape tests assert on
@@ -145,28 +156,24 @@ object Ann {
   /** ONE prepped side, kept: feeds the bucket UDF and both rescore joins
     * (5 consumers of the scan + norm projection otherwise); lineage-cut
     * after the keep (5 consumers re-analyze it otherwise). */
-  private def prepKept(s: CacheScope, emb: DataFrame, idCol: String,
-      vecCol: String): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(
-      s.keep(prep(emb, idCol, vecCol)))
+  private def prepKept(s: CacheScope, emb: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(s.keep(prep(emb)))
 
   /** The embedding dimension, 0 for an empty table (whose plan then yields
     * an empty result with the usual schema). */
-  private def dimOf(emb: DataFrame, vecCol: String): Int =
-    emb.select(size(col(vecCol))).head(1).headOption.fold(0)(_.getInt(0))
+  private def dimOf(emb: DataFrame): Int =
+    emb.select(size(col("embedding"))).head(1).headOption.fold(0)(_.getInt(0))
 
   private[graft] def lshTopKPlan(s: CacheScope, emb: DataFrame, k: Int,
-      nPlanes: Int = 12, nTables: Int = 6, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      bucketCap: Int = 2048): LshPlan = {
-    val e = prepKept(s, emb, idCol, vecCol)
-    val buckets = hyperplaneBuckets(e, dimOf(emb, vecCol), nPlanes, nTables, seed)
+      seed: Long = 42L): LshPlan = {
+    val e = prepKept(s, emb)
+    val buckets = hyperplaneBuckets(e, dimOf(emb), TopKPlanes, TopKTables, seed)
     // capped bucket join (same machinery as every blocking stage): a dense
     // embedding region would otherwise make one mega-bucket emit O(n²)
     // candidate rows. Oversize buckets degrade to star pairs around the
     // bucket min (logged) — each member still gets >= 1 candidate.
     val capped = BucketJoin.pairs(
-      buckets.select(col("id"), col("bucket")), bucketCap, "ann_lsh")
+      buckets.select(col("id"), col("bucket")), BucketCap, "ann_lsh")
     val undirected = capped.pairs
     val scored = rescorePairs(undirected, e)
       .withColumn("cosine", round(col("cosine"), 6))
@@ -182,22 +189,21 @@ object Ann {
 
   /**
    * Threshold-aware LSH tuning: pick the LARGEST nPlanes (selectivity) whose
-   * required table count for expected per-pair recall >= recallTarget — at
-   * the WORST case, a pair exactly at the threshold — stays within
-   * maxTables. Per-bit collision p = 1 − acos(t)/π (random-hyperplane
+   * required table count for expected per-pair recall >= [[RecallTarget]] —
+   * at the WORST case, a pair exactly at the threshold — stays within
+   * [[MaxTables]]. Per-bit collision p = 1 − acos(t)/π (random-hyperplane
    * identity); per-table collision p^b; recall over T tables
    * 1 − (1 − p^b)^T. Pairs above the threshold only do better.
    */
-  def tunePlanes(threshold: Double, recallTarget: Double = 0.99,
-      maxTables: Int = 32): (Int, Int) = {
+  def tunePlanes(threshold: Double): (Int, Int) = {
     require(threshold > -1 && threshold < 1, "cosine threshold in (-1, 1)")
     val p = 1.0 - math.acos(threshold) / math.Pi
-    var best = (1, maxTables)
+    var best = (1, MaxTables)
     var b = 1
     while (b <= 24) {
       val q = math.pow(p, b)
-      val t = math.ceil(math.log1p(-recallTarget) / math.log1p(-q)).toInt
-      if (t <= maxTables) best = (b, math.max(t, 1))
+      val t = math.ceil(math.log1p(-RecallTarget) / math.log1p(-q)).toInt
+      if (t <= MaxTables) best = (b, math.max(t, 1))
       b += 1
     }
     best
@@ -220,26 +226,24 @@ object Ann {
     * LSH then pays nTables× bucket explode + the capped bucket join to
     * prune a small fraction of the rescore work, and a brute exact scan is
     * strictly cheaper AND exact-recall. When predicted admission >=
-    * bruteAdmitCutoff the plan falls back to the brute form (logged). At
-    * near-dup thresholds (>= ~0.72 at the default cutoff) the LSH path runs
+    * [[BruteAdmitCutoff]] the plan falls back to the brute form (logged). At
+    * near-dup thresholds (>= ~0.72 at that cutoff) the LSH path runs
     * and prunes aggressively. Neither form is sub-quadratic in the weak
     * regime — that is inherent to low-threshold cosine joins, not a plan
     * choice; the fallback just stops paying LSH overhead on top. */
   private[graft] def lshCosinePairsPlan(s: CacheScope, emb: DataFrame,
-      threshold: Double, recallTarget: Double = 0.99, maxTables: Int = 32,
-      seed: Long = 42L, idCol: String = "vec_id", vecCol: String = "embedding",
-      bucketCap: Int = 2048, bruteAdmitCutoff: Double = 0.3): LshPlan = {
-    val (nPlanes, nTables) = tunePlanes(threshold, recallTarget, maxTables)
+      threshold: Double, seed: Long = 42L): LshPlan = {
+    val (nPlanes, nTables) = tunePlanes(threshold)
     val pRand = randomPairAdmission(nPlanes, nTables)
-    val e = prepKept(s, emb, idCol, vecCol)
-    if (pRand >= bruteAdmitCutoff) {
+    val e = prepKept(s, emb)
+    if (pRand >= BruteAdmitCutoff) {
       log.info(f"cosine pairs at t=$threshold%.2f: tuned ($nPlanes planes, " +
         f"$nTables tables) would admit ${pRand * 100}%.0f%% of random " +
         "pairs — brute exact scan instead (full recall)")
       LshPlan(bruteCosinePairs(e, threshold), None)
     } else {
-      val buckets = hyperplaneBuckets(e, dimOf(emb, vecCol), nPlanes, nTables, seed)
-      val capped = BucketJoin.pairs(buckets, bucketCap, "cosine_lsh")
+      val buckets = hyperplaneBuckets(e, dimOf(emb), nPlanes, nTables, seed)
+      val capped = BucketJoin.pairs(buckets, BucketCap, "cosine_lsh")
       val out = rescorePairs(capped.pairs, e)
         .filter(col("cosine") >= threshold)
         .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))
@@ -264,11 +268,8 @@ object Ann {
    * the 100 TB use case) the tuned (nPlanes, nTables) prunes aggressively.
    */
   def lshCosinePairs(emb: DataFrame, threshold: Double,
-      recallTarget: Double = 0.99, maxTables: Int = 32, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      bucketCap: Int = 2048, bruteAdmitCutoff: Double = 0.3): DataFrame =
+      seed: Long = 42L): DataFrame =
     ConfScope.smallInputScope(emb.sparkSession, emb) { CacheScope.run { s =>
-      materialize(lshCosinePairsPlan(s, emb, threshold, recallTarget,
-        maxTables, seed, idCol, vecCol, bucketCap, bruteAdmitCutoff))
+      materialize(lshCosinePairsPlan(s, emb, threshold, seed))
     } }
 }

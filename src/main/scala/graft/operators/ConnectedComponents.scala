@@ -28,9 +28,9 @@ object ConnectedComponents {
    * the connected component. Nodes that appear in no edge are NOT emitted
    * (singletons handled by Clustering.assignAll).
    *
-   * driverFinishEdges: edge sets at or below this size are finished with an
+   * Edge sets of at most [[DriverFinishEdges]] are finished with an
    * in-memory union-find on the driver (one collect of 16 bytes/edge,
-   * ≤ ~128 MB of edge chunks at the default) instead of the iterative
+   * ≤ ~128 MB of edge chunks) instead of the iterative
    * loop — the standard last-mile for iterative graph contraction: each
    * loop round costs 2+ driver round-trips and a full shuffle no matter how
    * tiny the graph, so below the threshold the loop is pure scheduling
@@ -39,22 +39,24 @@ object ConnectedComponents {
    * verified-pair profile (CcTune probe, since deleted): driver finish
    * 4.5 s vs best loop 25.4 s at 2.25M edges; 9.4 s vs 40.1 s at 10M —
    * the frugal finish wins by 4-6x through this whole range, so the
-   * default sits at 8M edges (~0.4 GB peak transient on the driver, see
+   * threshold sits at 8M edges (~0.4 GB peak transient on the driver, see
    * [[driverFinish]]). At web scale the edge set exceeds the threshold and
-   * the distributed loop runs; pass 0 to force the loop (tests pin both
-   * paths).
+   * the distributed loop runs, for at most [[MaxIterations]] rounds.
    */
-  def components(edges: DataFrame, maxIterations: Int = 50,
-      driverFinishEdges: Long = 8000000L): DataFrame = {
+  def components(edges: DataFrame): DataFrame = components(edges, DriverFinishEdges)
+
+  private val DriverFinishEdges = 8000000L
+  private val MaxIterations = 50
+
+  /** [[components]] at a given driver-finish threshold: the seam the
+    * loop-path tests use (0 forces the loop on a small graph). */
+  private[operators] def components(edges: DataFrame, driverFinishEdges: Long): DataFrame =
     // AQE is pure overhead for the loop's many tiny shuffles: every query
     // stage materializes + re-plans, adding driver latency per round that
     // dominates on small edge sets.
-    ConfScope.aqeOff(edges.sparkSession)(
-      components0(edges, maxIterations, driverFinishEdges))
-  }
+    ConfScope.aqeOff(edges.sparkSession)(components0(edges, driverFinishEdges))
 
-  private def components0(edges: DataFrame, maxIterations: Int,
-      driverFinishEdges: Long): DataFrame = {
+  private def components0(edges: DataFrame, driverFinishEdges: Long): DataFrame = {
     // canonical directed edges large → small; drop self-loops
     val e = edges.select(
       greatest(col("id1"), col("id2")).as("src"),
@@ -80,16 +82,16 @@ object ConnectedComponents {
     val spark = e.sparkSession
     ConfScope.aqeOff(spark,
       Some(ConfScope.width(spark, nEdges, ConfScope.CcRowsPerPartition)))(
-      starLoop(e, maxIterations))
+      starLoop(e))
   }
 
   /** Large/small-star rounds from canonical edges to the star forest. */
-  private def starLoop(edges: DataFrame, maxIterations: Int): DataFrame = {
+  private def starLoop(edges: DataFrame): DataFrame = {
     var e = edges
     var lastFp: (Long, String, String) = (-1L, "", "")
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIterations) {
+    while (!converged && iter < MaxIterations) {
       // ONE large/small-star pair per localCheckpoint: each star operator
       // references its input ~3 times (neighbor union, per-node min join,
       // self edges), so chaining unmaterialized rounds multiplies subtree
@@ -104,7 +106,7 @@ object ConnectedComponents {
       lastFp = fp
       iter += 1
     }
-    require(converged, s"connected components did not converge in $maxIterations rounds")
+    require(converged, s"connected components did not converge in $MaxIterations rounds")
     // star forest: every (src, dst) has dst = component min; add roots
     e.select(col("src").as("id"), col("dst").as("component"))
       .union(e.select(col("dst").as("id"), col("dst").as("component")))
@@ -128,7 +130,7 @@ object ConnectedComponents {
     *    chunks via sc.parallelize and the Rows are materialized
     *    EXECUTOR-side — the assignments never exist as a driver-side
     *    LocalRelation of boxed tuples serialized into downstream plans.
-    * Bound at the 8M-edge default: ≤ ~0.4 GB transient (128 MB edge
+    * Bound at the 8M-edge threshold: ≤ ~0.4 GB transient (128 MB edge
     * chunks + 128 MB node array + ~40 MB union-find state + ~80 MB packed
     * result), scaling linearly below it — measured 9.4 s end-to-end at
     * 10M edges with no heap stress on the 8 g default driver. */

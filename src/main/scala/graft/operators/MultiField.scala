@@ -315,14 +315,11 @@ object MultiField {
    * is independent of the similarity threshold.
    */
   def lshCandidates(records: DataFrame, specs: Seq[FieldSpec],
-      cfg: graft.config.GraftConfig, idCol: String = "id",
-      extra: Seq[String] = Nil,
-      pairFilter: Option[(String, String) => Column] = None)
-      : CandidateGen.Result = {
+      cfg: graft.config.GraftConfig): CandidateGen.Result = {
     require(specs.nonEmpty, "at least one field spec required")
     val memberships = specs.zipWithIndex.map { case (sp, i) =>
       val sigs = Signatures.compute(
-        records.select(col(idCol).as("id"), col(sp.source).as("text")), cfg,
+        records.select(col("id"), col(sp.source).as("text")), cfg,
         emitShingles = false)
       sigs.select(col("id"),
         // field-mixed bucket: field i's bucket space never collides with
@@ -330,14 +327,7 @@ object MultiField {
         explode(transform(col("band_keys"),
           k => xxhash64(lit(i), k))).as("bucket"))
     }.reduce(_ unionByName _)
-    // extras (e.g. a linkage source tag) join in by id so the caller's
-    // pairFilter can run INSIDE the bucket join, before the pair exchange
-    val withExtra =
-      if (extra.isEmpty) memberships
-      else memberships.join(
-        records.select(col(idCol).cast("long").as("id") +: extra.map(col): _*), "id")
-    val r = BucketJoin.pairs(withExtra, cfg.maxBandBucket, "multifield_lsh",
-      pairFilter)
+    val r = BucketJoin.pairs(memberships, cfg.maxBandBucket, "multifield_lsh")
     CandidateGen.Result(
       r.pairs.withColumn("stage", lit("multifield_lsh")), r.oversizeLog)
   }
@@ -345,8 +335,8 @@ object MultiField {
   /** Weighted rescore of an externally-supplied candidate set (the verify
     * half of dedupPairs, shared by the exact and LSH paths). */
   def rescore(cands: DataFrame, records: DataFrame, specs: Seq[FieldSpec],
-      threshold: Double, idCol: String = "id"): DataFrame =
+      threshold: Double): DataFrame =
     weightedScore(cands.select("id1", "id2"), specs.map { sp =>
-      (sp.weight, records.select(col(idCol).as("id"), gramCol(col(sp.source), sp).as("g")))
+      (sp.weight, records.select(col("id"), gramCol(col(sp.source), sp).as("g")))
     }, threshold)
 }

@@ -5,23 +5,18 @@ import org.apache.spark.sql.functions._
 
 /**
  * Multimodal-column plumbing for training-data pipelines: image/audio/video
- * payloads ride as opaque `binary` columns with typed metadata, and
+ * payloads ride as opaque `binary` columns with a kind tag, and
  * decode/feature-extract/resize/frame-sample run as batched per-partition
  * transforms (the Scala analog of mapInPandas: one partition = a stream of
  * batches, heavy codec state initialized once per partition, vectorized
  * work inside).
  *
- * The actual codecs are NOT in this container (no image/audio libs), so the
- * decode step is a clearly-marked deterministic STUB — the Spark-side
- * contract (schema, partitioning, batch shape, null handling) is real and
- * tested; swapping `StubCodec` for a JNI/ffmpeg-backed codec changes no
- * plan shape.
+ * No image/audio codec ships with the engine, so decode is a deterministic
+ * stub codec (`StubCodec`) — the Spark-side contract (schema,
+ * partitioning, batch shape, null handling) is real and tested; swapping
+ * `StubCodec` for a JNI/ffmpeg-backed codec changes no plan shape.
  */
 object Multimodal {
-
-  /** Typed metadata the binary payload travels with. */
-  final case class MediaMeta(media_id: Long, kind: String, width: Int,
-      height: Int, duration_ms: Long)
 
   final case class MediaRow(media_id: Long, kind: String, payload: Array[Byte])
 
@@ -50,90 +45,6 @@ object Multimodal {
     }
   }
 
-  /**
-   * === REAL CODEC: binary PPM (P6) ===
-   * A genuinely decodable image format with no external libs: header
-   * `P6 <width> <height> <maxval>` (whitespace/comment separated, maxval
-   * <= 255) followed by width*height raw RGB triples. Decode → pixel
-   * stats proves the per-partition batch shape end-to-end on real bytes:
-   * features = [1.0 (decoded flag), width, height, mean R, mean G,
-   * mean B, mean luma, luma stddev] padded to featureDim. Non-PPM
-   * payloads fall back to StubCodec (deterministic, clearly fake).
-   */
-  object PpmCodec {
-    val featureDim: Int = StubCodec.featureDim
-
-    /** Parsed P6 image: width, height, raw RGB bytes (3*w*h). */
-    final case class Image(width: Int, height: Int, rgb: Array[Byte])
-
-    /** Strict P6 parse; None when the payload is not a well-formed PPM. */
-    def decode(payload: Array[Byte]): Option[Image] = {
-      if (payload == null || payload.length < 11 ||
-        payload(0) != 'P' || payload(1) != '6') return None
-      var pos = 2
-      // PPM allows `#` comments and arbitrary whitespace between tokens
-      def nextInt(): Int = {
-        while (pos < payload.length &&
-          (isWs(payload(pos)) || payload(pos) == '#')) {
-          if (payload(pos) == '#')
-            while (pos < payload.length && payload(pos) != '\n') pos += 1
-          else pos += 1
-        }
-        var v = -1
-        while (pos < payload.length && payload(pos) >= '0' &&
-          payload(pos) <= '9') {
-          v = (if (v < 0) 0 else v) * 10 + (payload(pos) - '0')
-          if (v > 1000000000) return -1
-          pos += 1
-        }
-        v
-      }
-      val w = nextInt(); val h = nextInt(); val maxVal = nextInt()
-      if (w <= 0 || h <= 0 || maxVal <= 0 || maxVal > 255) return None
-      if (pos >= payload.length || !isWs(payload(pos))) return None
-      pos += 1 // exactly ONE whitespace byte separates header from raster
-      val need = 3L * w * h
-      if (payload.length - pos < need) return None
-      val rgb = java.util.Arrays.copyOfRange(payload, pos, pos + need.toInt)
-      Some(Image(w, h, rgb))
-    }
-
-    private def isWs(b: Byte): Boolean =
-      b == ' ' || b == '\n' || b == '\r' || b == '\t'
-
-    /** Pixel-stat features from a decoded image (see object doc). */
-    def extract(img: Image): Array[Float] = {
-      val out = new Array[Float](featureDim)
-      val n = img.width.toLong * img.height
-      var sr = 0.0; var sg = 0.0; var sb = 0.0
-      var sl = 0.0; var sl2 = 0.0
-      var i = 0
-      while (i < img.rgb.length) {
-        val r = img.rgb(i) & 0xff
-        val g = img.rgb(i + 1) & 0xff
-        val b = img.rgb(i + 2) & 0xff
-        sr += r; sg += g; sb += b
-        val luma = 0.299 * r + 0.587 * g + 0.114 * b
-        sl += luma; sl2 += luma * luma
-        i += 3
-      }
-      out(0) = 1.0f
-      out(1) = img.width.toFloat
-      out(2) = img.height.toFloat
-      out(3) = (sr / n).toFloat
-      out(4) = (sg / n).toFloat
-      out(5) = (sb / n).toFloat
-      out(6) = (sl / n).toFloat
-      out(7) = math.sqrt(math.max(0.0, sl2 / n - (sl / n) * (sl / n))).toFloat
-      out
-    }
-
-    /** Real decode when the payload is a PPM, stub features otherwise. */
-    def decodeAndExtract(payload: Array[Byte]): Array[Float] =
-      decode(payload).map(extract)
-        .getOrElse(StubCodec.decodeAndExtract(payload))
-  }
-
   /** Attach media payloads (here: the html bytes) as a media table. */
   def mediaFromPages(pages: DataFrame): DataFrame =
     pages.select(col("id").as("media_id"), lit("html").as("kind"),
@@ -151,9 +62,8 @@ object Multimodal {
       .select(col("media_id").cast("long"), col("kind"), col("payload"))
       .as[MediaRow]
     ds.mapPartitions { it =>
-      // per-partition init point (real codec: load model/codec here, once).
-      // PpmCodec really decodes P6 payloads; anything else gets the stub.
-      val codec = PpmCodec
+      // per-partition init point (real codec: load model/codec here, once)
+      val codec = StubCodec
       it.map { row =>
         val payload = if (row.payload == null) Array.empty[Byte] else row.payload
         var checksum = 0xc0decL

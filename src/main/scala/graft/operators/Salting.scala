@@ -23,26 +23,20 @@ object Salting {
   def hostOf(url: Column): Column =
     regexp_extract(url, "^[a-z]+://([^/]+)", 1)
 
-  /**
-   * Repartition df over (key, salt) with salt = xxhash64(saltSource) % salts.
-   * numPartitions <= 0 leaves the partition count to
-   * spark.sql.shuffle.partitions.
-   */
+  /** Repartition df over (key, salt) with salt = xxhash64(saltSource) %
+    * salts, into spark.sql.shuffle.partitions partitions. */
   def saltedRepartition(df: DataFrame, key: Column, saltSource: Column,
-      salts: Int, numPartitions: Int = 0): DataFrame = {
+      salts: Int): DataFrame = {
     require(salts >= 1, "salts must be >= 1")
-    val salt = pmod(xxhash64(saltSource), lit(salts))
-    if (numPartitions > 0) df.repartition(numPartitions, key, salt)
-    else df.repartition(key, salt)
+    df.repartition(key, pmod(xxhash64(saltSource), lit(salts)))
   }
 
   /** Pages-table convenience: salt on host(url), seeded by the page id. */
-  def saltPagesByHost(pages: DataFrame, salts: Int,
-      numPartitions: Int = 0): DataFrame =
-    saltedRepartition(pages, hostOf(col("url")), col("id"), salts, numPartitions)
+  def saltPagesByHost(pages: DataFrame, salts: Int): DataFrame =
+    saltedRepartition(pages, hostOf(col("url")), col("id"), salts)
 
   /** Max partition-size share of the total — the skew diagnostic the test
-    * gates on (1/numPartitions = perfectly uniform; 0.3 = one hot host). */
+    * gates on (1/partitions = perfectly uniform; 0.3 = one hot host). */
   def maxPartitionShare(df: DataFrame): Double = {
     val counts = df.groupBy(spark_partition_id().as("p"))
       .agg(count(lit(1)).as("n"))

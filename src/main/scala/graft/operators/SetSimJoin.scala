@@ -37,20 +37,10 @@ object SetSimJoin {
    * (use array_distinct upstream). Returns (id1, id2, jaccard) with
    * id1 < id2 and jaccard >= threshold, jaccard rounded to 6 places
    * (byte-compatible with the brute-force oracle form).
-   *
-   * `extra` columns of d0 ride along on the prefix table and are visible to
-   * `pairFilter(aliasA, aliasB)` INSIDE the candidate equi-join — a
-   * predicate like cross-source disjointness (linkage) then kills pairs
-   * streaming in the join task, before the pair-distinct exchange, instead
-   * of after a full self-join output shuffle (same placement as
-   * BucketJoin's pairFilter hook).
    */
-  def jaccardSelfJoin(d0: DataFrame, threshold: Double,
-      extra: Seq[String] = Nil,
-      pairFilter: Option[(String, String) => Column] = None): DataFrame =
+  def jaccardSelfJoin(d0: DataFrame, threshold: Double): DataFrame =
     CacheScope.run { s =>
-      joinFromTable(prefixTable(s, d0, extra), threshold, extra, pairFilter)
-        .localCheckpoint()
+      joinFromTable(prefixTable(s, d0), threshold).localCheckpoint()
     }
 
   /**
@@ -115,7 +105,10 @@ object SetSimJoin {
   }
 
   /** The join half over a prebuilt [[PrefixTable]] (lazy; no extra caches —
-    * the prefix explode is derived from the cached `sorted` per join side). */
+    * the prefix explode is derived from the cached `sorted` per join side).
+    * `extra` columns ride along on the prefix rows so `pairFilter(a, b)`
+    * (MultiField linkage's cross-source test) prunes pairs inside the
+    * candidate join, before the pair-distinct exchange. */
   private[operators] def joinFromTable(pt: PrefixTable, threshold: Double,
       extra: Seq[String] = Nil,
       pairFilter: Option[(String, String) => Column] = None): DataFrame = {

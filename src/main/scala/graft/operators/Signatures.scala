@@ -29,8 +29,8 @@ object Signatures {
       n_tokens: Int)
 
   /** Column-level signature UDF (one pass; see TextSignatures.compute). */
-  def sigUdf(cfg: GraftConfig, emitShingles: Boolean = true,
-      parts: TextSignatures.SigParts = TextSignatures.SigParts.all) =
+  private def sigUdf(cfg: GraftConfig, emitShingles: Boolean,
+      parts: TextSignatures.SigParts) =
     udf { (text: String) =>
     val s = TextSignatures.compute(text, cfg, emitShingles, parts)
     SigRow(s.shingles,

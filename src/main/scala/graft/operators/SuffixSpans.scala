@@ -30,19 +30,21 @@ object SuffixSpans {
 
   final case class SpanRow(id1: Long, id2: Long, span_len: Int, span: String)
 
+  /** Members kept per fingerprint group; within the 1024-member bound of
+    * SuffixArrays.dupSpans. */
+  val GroupCap = 64
+
   /**
    * docs(id, text) → (id1, id2, span_len, span) for every pair sharing an
-   * exact normalized substring >= cfg.minSpanLen. groupCap (2..1024, the
-   * SuffixArrays.dupSpans bound) bounds degenerate fingerprint groups
-   * (identical boilerplate across millions of pages): larger groups are
-   * truncated to the first groupCap members by id (deterministic) —
-   * star-connectivity for those is still provided by the MinHash stage.
-   * Truncated groups are logged as one WARN (north rule: no silent caps;
-   * BucketJoin.warnOversize over a log shaped like BucketJoin's).
+   * exact normalized substring >= cfg.minSpanLen. [[GroupCap]] bounds
+   * degenerate fingerprint groups (identical boilerplate across millions of
+   * pages): larger groups are truncated to the first GroupCap members by id
+   * (deterministic) — star-connectivity for those is still provided by the
+   * MinHash stage. Truncated groups are logged as one WARN (north rule: no
+   * silent caps; BucketJoin.warnOversize over a log shaped like
+   * BucketJoin's).
    */
-  def spans(docs: DataFrame, cfg: GraftConfig, groupCap: Int = 64,
-      idCol: String = "id", textCol: String = "text"): DataFrame = {
-    require(groupCap >= 2 && groupCap <= 1024, s"groupCap in 2..1024, got $groupCap")
+  def spans(docs: DataFrame, cfg: GraftConfig): DataFrame =
     CacheScope.run { s =>
     val spark = docs.sparkSession
 
@@ -55,8 +57,8 @@ object SuffixSpans {
       if (text == null) "" else new String(TextSignatures.normalize(text))
     }
 
-    val d = s.keep(docs.select(col(idCol).cast("long").as("id"),
-      normUdf(col(textCol)).as("ntext")))
+    val d = s.keep(docs.select(col("id").cast("long").as("id"),
+      normUdf(col("text")).as("ntext")))
 
     // materializes the cache the chain reads 2-3 times anyway, and sizes
     // the small-input fast path (ConfScope.spanScope): at or below
@@ -70,12 +72,10 @@ object SuffixSpans {
     // AQE's coalescing starts earning its keep between 30k and 80k docs,
     // so the threshold sits at 40k.
     val nDocs = d.count()
-    ConfScope.spanScope(spark, nDocs)(
-      runChain(s, d, cfg, groupCap, winnowUdf, spark))
+    ConfScope.spanScope(spark, nDocs)(runChain(s, d, cfg, winnowUdf, spark))
     }
-  }
 
-  private def runChain(s: CacheScope, d: DataFrame, cfg: GraftConfig, groupCap: Int,
+  private def runChain(s: CacheScope, d: DataFrame, cfg: GraftConfig,
       winnowUdf: org.apache.spark.sql.expressions.UserDefinedFunction,
       spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
@@ -89,13 +89,13 @@ object SuffixSpans {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("bucket").orderBy("id")
     val capped = memberships
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= groupCap)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= GroupCap)
 
     // truncation log (north rule: no silent caps): one row per capped
     // fingerprint group, same shape as BucketJoin's oversize log
     val oversize = memberships.groupBy("bucket")
       .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > groupCap)
+      .filter(col("bucket_n") > GroupCap)
       .select(lit("suffix_span_groups").as("stage"), col("bucket"),
         col("bucket_n"), lit("Truncate").as("policy"))
 

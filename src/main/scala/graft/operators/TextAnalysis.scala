@@ -106,15 +106,15 @@ object TextAnalysis {
     }
   }
 
-  /** Full text-profile projection over a documents table. */
-  def profile(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+  /** Full text-profile projection over a (doc_id, text) table. */
+  def profile(docs: DataFrame): DataFrame =
     docs.select(
-      col(idCol),
-      tokenCountWs(col(textCol)).as("n_tokens_ws"),
-      tokenCountBpe(col(textCol)).as("n_tokens_bpe"),
-      round(punctRatio(col(textCol)), 6).as("punct_ratio"),
-      round(stopwordRatio(col(textCol)), 6).as("stopword_ratio"),
-      qualityScore(col(textCol)).as("quality"),
-      langId(col(textCol)).as("lang_id"),
-      fingerprintUdf(col(textCol)).as("fingerprint"))
+      col("doc_id"),
+      tokenCountWs(col("text")).as("n_tokens_ws"),
+      tokenCountBpe(col("text")).as("n_tokens_bpe"),
+      round(punctRatio(col("text")), 6).as("punct_ratio"),
+      round(stopwordRatio(col("text")), 6).as("stopword_ratio"),
+      qualityScore(col("text")).as("quality"),
+      langId(col("text")).as("lang_id"),
+      fingerprintUdf(col("text")).as("fingerprint"))
 }

@@ -77,7 +77,7 @@ class ConnectedComponentsSpec extends SparkSuite {
     val edges = Seq.fill(400)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       .filter { case (a, b) => a != b }
     val viaLoop = ConnectedComponents
-      .components(edges.toDF("id1", "id2"), driverFinishEdges = 0L)
+      .components(edges.toDF("id1", "id2"), 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaDriver = ConnectedComponents
       .components(edges.toDF("id1", "id2"))
@@ -88,7 +88,7 @@ class ConnectedComponentsSpec extends SparkSuite {
 
   test("golden fixture through the distributed loop (driverFinishEdges=0)") {
     val edges = goldenEdges.toDF("id1", "id2")
-    val comps = ConnectedComponents.components(edges, driverFinishEdges = 0L)
+    val comps = ConnectedComponents.components(edges, 0L)
     val assign = Clustering.assignAll(allIds.toDF("id"), comps, normalizeIds = false)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(assign == Map(

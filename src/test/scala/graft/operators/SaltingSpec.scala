@@ -13,11 +13,13 @@ class SaltingSpec extends SparkSuite {
 
     val host = Salting.hostOf(col("url"))
     val byHost = df.repartition(16, host)
-    val salted = Salting.saltedRepartition(df, host, col("id"), salts = 16,
-      numPartitions = 16)
-
     val skewRaw = Salting.maxPartitionShare(byHost)
-    val skewSalted = Salting.maxPartitionShare(salted)
+    // the pipeline's local path: AQE off (with AQE on, runtime coalescing
+    // folds this small input's salted partitions into one), the session's
+    // shuffle width sets the partition count
+    val skewSalted = ConfScope.aqeOff(spark, Some(16))(
+      Salting.maxPartitionShare(
+        Salting.saltedRepartition(df, host, col("id"), salts = 16)))
     info(f"max partition share: host-partitioned $skewRaw%.3f, salted $skewSalted%.3f")
     // the hot host (~30% of pages) bounds the unsalted layout
     assert(skewRaw >= 0.25, s"corpus hot host missing? raw skew $skewRaw")
@@ -36,10 +38,10 @@ class SaltingSpec extends SparkSuite {
   test("salting is deterministic (same input → same partition histogram)") {
     val (pages, _) = PageCorpus.generate(spark, 1000, 42L)
     val df = pages.toDF()
-    def hist() = Salting
-      .saltedRepartition(df, Salting.hostOf(col("url")), col("id"), 8, 8)
-      .groupBy(spark_partition_id()).count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toMap
+    def hist() = ConfScope.aqeOff(spark, Some(8))(
+      Salting.saltedRepartition(df, Salting.hostOf(col("url")), col("id"), 8)
+        .groupBy(spark_partition_id()).count().collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toMap)
     assert(hist() == hist())
   }
 }

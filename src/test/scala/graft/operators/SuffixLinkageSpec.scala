@@ -103,43 +103,4 @@ class SuffixLinkageSpec extends SparkSuite {
     assert(f(0)._4 == f(1)._4, "identical payloads => identical features")
     assert(f(0)._4.length == Multimodal.StubCodec.featureDim)
   }
-
-  /** Builds a real binary PPM (P6): header + raw RGB raster. */
-  private def ppm(w: Int, h: Int, rgb: Array[Byte],
-      header: String = ""): Array[Byte] = {
-    val hdr = if (header.nonEmpty) header else s"P6\n$w $h\n255\n"
-    hdr.getBytes("US-ASCII") ++ rgb
-  }
-
-  test("Multimodal PpmCodec: real P6 decode through the Spark batch path") {
-    // solid red 4x2: exact channel means, zero luma variance
-    val red = ppm(4, 2,
-      Array.tabulate(4 * 2 * 3)(i => if (i % 3 == 0) (-1).toByte else 0.toByte))
-    // 1x2 gradient with a header comment: black + white pixels
-    val bw = ppm(1, 2, Array[Byte](0, 0, 0, -1, -1, -1),
-      header = "P6\n# a comment\n1 2\n255\n")
-    // malformed: header truncated mid-raster => stub fallback
-    val bad = "P6\n9 9\n255\n".getBytes("US-ASCII") ++ Array[Byte](1, 2, 3)
-    val media = Seq((1L, "img", red), (2L, "img", bw), (3L, "img", bad))
-      .toDF("media_id", "kind", "payload")
-    val f = Multimodal.extractFeatures(media).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](4))).sortBy(_._1).map(_._2)
-
-    // red: decoded flag, dims, means R=255 G=0 B=0, luma=0.299*255, std 0
-    assert(f(0)(0) == 1.0f && f(0)(1) == 4.0f && f(0)(2) == 2.0f)
-    assert(f(0)(3) == 255.0f && f(0)(4) == 0.0f && f(0)(5) == 0.0f)
-    assert(math.abs(f(0)(6) - 0.299f * 255) < 1e-3 && f(0)(7) == 0.0f)
-    // black+white: means 127.5 each channel, luma std = 127.5
-    assert(f(1)(0) == 1.0f && f(1)(1) == 1.0f && f(1)(2) == 2.0f)
-    assert(f(1)(3) == 127.5f && f(1)(4) == 127.5f && f(1)(5) == 127.5f)
-    assert(math.abs(f(1)(7) - 127.5f) < 1e-3)
-    // malformed payload: stub path (flag slot is a hash-derived float,
-    // vanishingly unlikely to be exactly the decoded-flag 1.0 AND match
-    // real dims) — assert it differs from a successful decode signature
-    assert(!(f(2)(0) == 1.0f && f(2)(1) == 9.0f && f(2)(2) == 9.0f),
-      "malformed PPM must not take the decoded path")
-    // and the stub is deterministic: same bytes => same features
-    assert(Multimodal.PpmCodec.decodeAndExtract(bad).toSeq ==
-      Multimodal.StubCodec.decodeAndExtract(bad).toSeq)
-  }
 }

@@ -65,22 +65,21 @@ class VerifyModesSpec extends SparkSuite {
   }
 
   test("SuffixSpans: group-cap truncation is logged, spans stay exact") {
-    // 8 docs share one long boilerplate block -> one fingerprint-group family
-    // far above groupCap = 4
+    // GroupCap + 1 docs share one long boilerplate block -> one
+    // fingerprint-group family above the cap
     val boiler = "this exact boilerplate navigation footer block is repeated " +
       "verbatim across every page of the site and is long enough to winnow"
-    val docs = (1L to 8L).map(i => (i, s"unique lead $i $boiler unique tail $i"))
+    val docs = (1L to SuffixSpans.GroupCap + 1L)
+      .map(i => (i, s"unique lead $i $boiler unique tail $i"))
       .toDF("id", "text")
     val (spans, warns) = warnings(BucketJoin.getClass.getName)(
-      SuffixSpans.spans(docs, cfg, groupCap = 4).collect())
+      SuffixSpans.spans(docs, cfg).collect())
     assert(warns.size == 1, warns)
     assert(warns.head.startsWith("suffix_span_groups: ") &&
       warns.head.contains("policy Truncate"), warns)
     // spans among the surviving members are still exact and cover the block
     assert(spans.nonEmpty)
     assert(spans.forall(_.getAs[Int]("span_len") >= cfg.minSpanLen))
-    // groupCap outside 2..1024 (the dupSpans bound) is rejected up front
-    intercept[IllegalArgumentException](SuffixSpans.spans(docs, cfg, groupCap = 1025))
   }
 
   test("runPairs minhash-only exact mode == minhashDupPairs (same stage, same result)") {
@@ -91,7 +90,7 @@ class VerifyModesSpec extends SparkSuite {
       .select("id1", "id2", "jaccard")
       .withColumn("jaccard", round(col("jaccard"), 6))
       .as[(Long, Long, Double)].collect().toSet
-    val direct = Dedup.minhashDupPairs(df, cfg, idCol = "id")
+    val direct = Dedup.minhashDupPairs(df.withColumnRenamed("id", "doc_id"), cfg)
       .as[(Long, Long, Double)].collect().toSet
     assert(viaPipeline == direct)
     assert(direct.nonEmpty)
