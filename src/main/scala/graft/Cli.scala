@@ -230,8 +230,7 @@ object Cli {
     if (clustered) {
       val comps = ConnectedComponents.components(written.select("id1", "id2"))
       val assign = Clustering.assignAll(
-        raw.select(col(a.idCol).cast("long").as("id")), comps,
-        normalizeIds = false)
+        raw.select(col(a.idCol).cast("long").as("id")), comps)
       io.write(assign, "clusters")
       io.markComplete("clusters")
     }

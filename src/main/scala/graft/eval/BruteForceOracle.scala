@@ -45,9 +45,7 @@ object BruteForceOracle {
 
   /**
    * Expected cluster assignment: union-find over the oracle pairs, cluster
-   * key = min member id, singletons = own id (matches the engine's
-   * normalizeIds=false mode; the sequential re-id mode is tested separately
-   * against the reference's golden fixtures).
+   * key = min member id, singletons = own id (the engine's cluster key).
    */
   def clusters(docs: Seq[(Long, String)], cfg: GraftConfig): Map[Long, Long] = {
     val uf = new UnionFind

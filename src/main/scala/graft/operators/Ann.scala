@@ -173,7 +173,7 @@ object Ann {
     // candidate rows. Oversize buckets degrade to star pairs around the
     // bucket min (logged) — each member still gets >= 1 candidate.
     val capped = BucketJoin.pairs(
-      buckets.select(col("id"), col("bucket")), BucketCap, "ann_lsh")
+      Seq(BucketJoin.Stage("ann_lsh", buckets, BucketJoin.Star, 1)), BucketCap)
     val undirected = capped.pairs
     val scored = rescorePairs(undirected, e)
       .withColumn("cosine", round(col("cosine"), 6))
@@ -243,7 +243,8 @@ object Ann {
       LshPlan(bruteCosinePairs(e, threshold), None)
     } else {
       val buckets = hyperplaneBuckets(e, dimOf(emb), nPlanes, nTables, seed)
-      val capped = BucketJoin.pairs(buckets, BucketCap, "cosine_lsh")
+      val capped = BucketJoin.pairs(
+        Seq(BucketJoin.Stage("cosine_lsh", buckets, BucketJoin.Star, 1)), BucketCap)
       val out = rescorePairs(capped.pairs, e)
         .filter(col("cosine") >= threshold)
         .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))

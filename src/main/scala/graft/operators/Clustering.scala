@@ -1,64 +1,43 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
- * Stage 5 — cluster normalization, reproducing the reference's semantics
- * (entity_embed/data_utils/utils.py:211-235 `id_pairs_to_cluster_mapping_and_dict`):
- *   - components re-identified sequentially 0..n-1,
- *   - every record not in any pair gets a fresh singleton cluster id
- *     continuing after the max (utils.py:229-233),
+ * Stage 5 — cluster assignment, after the reference's
+ * `id_pairs_to_cluster_mapping_and_dict`
+ * (entity_embed/data_utils/utils.py:211-235):
+ *   - every record not in any pair gets a singleton cluster
+ *     (utils.py:229-233),
  *   - member lists sorted ascending (utils.py:221).
  *
- * Determinism: the reference numbers clusters by insertion order of a Python
- * dict — not meaningful distributed. We number by ascending minimum member
- * id (component key), which is stable across runs and partitionings; the
- * grouping fixture tests pin this. The dense_rank is a narrow global sort
- * over one row per CLUSTER (not per record) — at 10^12 records with ~10^11
- * clusters this ranking step is the documented scale limit of *sequential*
- * ids; production keeps the min-member-id itself as the cluster key
- * (`normalizeIds = false`).
+ * Cluster key: the reference numbers clusters 0..n-1 by insertion order of
+ * a Python dict — not meaningful distributed. Here the key is the
+ * component's minimum member id, and a singleton's key is its own id:
+ * stable across runs and partitionings, and disjoint without any global
+ * sort (a singleton is its own min and can collide with no paired
+ * component's min). The member sets are the reference's; the grouping
+ * fixture tests pin them.
  */
 object Clustering {
 
   /**
    * records(id) x componentAssignments(id, component) → (id, cluster) for
-   * EVERY record, singletons appended after the max paired cluster id.
+   * EVERY record. `normalizeIds = true` (sequential 0..n-1 keys) is not
+   * supported: ranking clusters is a global sort over unpartitioned windows.
    */
   def assignAll(recordIds: DataFrame, components: DataFrame,
-      normalizeIds: Boolean = true): DataFrame = {
+      normalizeIds: Boolean = false): DataFrame = {
+    require(!normalizeIds, "sequential cluster ids (normalizeIds = true) are " +
+      "not supported: they need a global sort over one partition; the " +
+      "cluster key is the min member id")
     val ids = recordIds.select(col("id").cast("long")).distinct()
-    val comp = components.select(col("id").cast("long"), col("component").cast("long"))
-
-    val paired =
-      if (normalizeIds) {
-        val w = Window.orderBy("component")
-        comp.withColumn("cluster", dense_rank().over(w).cast("long") - 1)
-          .select(col("id"), col("cluster"))
-          // the dense_rank plan is consumed twice below (maxCluster + union):
-          // checkpoint it once instead of executing the window twice
-          .localCheckpoint()
-      } else comp.withColumnRenamed("component", "cluster")
-
+    val paired = components.select(col("id").cast("long"),
+      col("component").cast("long").as("cluster"))
     // singletons: ids with no component (SET2, utils.py:230)
-    val singles = ids.join(comp, Seq("id"), "left_anti")
-    val singleAssign =
-      if (normalizeIds) {
-        // maxCluster is only needed on this branch — the scale path
-        // (normalizeIds = false) never pays the aggregation job
-        val maxCluster =
-          paired.agg(coalesce(max("cluster"), lit(-1L))).head().getLong(0)
-        val w = Window.orderBy("id")
-        singles.withColumn("cluster",
-          row_number().over(w).cast("long") + lit(maxCluster))
-      } else singles.withColumn("cluster", col("id"))
-        // scale mode: cluster key = min member id; a singleton is its own
-        // min and can collide with no paired component's min — disjoint
-        // without any global sort
-
-    paired.unionByName(singleAssign.select(col("id"), col("cluster")))
+    val singles = ids.join(paired, Seq("id"), "left_anti")
+      .withColumn("cluster", col("id"))
+    paired.unionByName(singles)
   }
 
   /**

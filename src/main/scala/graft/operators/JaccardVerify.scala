@@ -72,16 +72,11 @@ object JaccardVerify {
    * tier 1 always prefers the packed lanes — the bias is inside the margin
    * and tier 2 is exact regardless, so only the prefilter sees it.
    *
-   * semiJoin = true: prefilter the tier-2 payload side to docs that appear
-   * in a surviving pair before the scoring joins. Output-identical; a
-   * shuffle-volume win on low-participation corpora (design note at the
-   * tier-2 join). Neither tier forces a broadcast; the planner picks each
-   * join strategy.
+   * Neither tier forces a broadcast; the planner picks each join strategy.
    */
   def verify(candidates: DataFrame, sigs: DataFrame, cfg: GraftConfig,
       estimate: Boolean = false, texts: Option[DataFrame] = None,
-      packedEstimate: Boolean = false,
-      semiJoin: Boolean = false): DataFrame = {
+      packedEstimate: Boolean = false): DataFrame = {
     val t = cfg.simThreshold
     // exact tier-2 scoring re-shingles the texts, whatever the bundle
     // carries — fail fast with the coupling spelled out instead of a
@@ -117,11 +112,10 @@ object JaccardVerify {
       // job (profiled: the blocking union ran ~5x per flagship run at the
       // bench shape). A LAZY localCheckpoint materializes tier 1 once and
       // both joins read the cached RDD; ContextCleaner auto-unpersists it
-      // when unreferenced (a persist() here would leak per call — advisor
-      // finding on the semiJoin path). Local mode only: on a cluster a
-      // localCheckpoint is not recomputable after executor loss, and the
-      // in-memory cut was measured a net loss across JVMs
-      // (GraftSqlBridge.truncateLineageLocal scaladoc).
+      // when unreferenced (a persist() here would leak per call). Local
+      // mode only: on a cluster a localCheckpoint is not recomputable after
+      // executor loss, and the in-memory cut was measured a net loss across
+      // JVMs (GraftSqlBridge.truncateLineageLocal scaladoc).
       val spark = candidates.sparkSession
       val survivors =
         if (spark.sparkContext.isLocal) survivors0.localCheckpoint(eager = false)
@@ -131,22 +125,11 @@ object JaccardVerify {
       // the text side is ~88% of the dominant job's shuffle bytes at the
       // bench shape, shuffled once per join side): with the planted-dup
       // fixture nearly every doc appears in a surviving pair, so this is
-      // the floor for exact verification. On a LOW-participation corpus
-      // (real web dedup: 10-30% of docs in any near-dup pair) prefilter
-      // the text side with a survivor-id semi-join (Bloom-filter form at
-      // scales where the distinct-id set cannot broadcast) before these
-      // joins — it cuts the dominant shuffle by the non-participation
-      // fraction and composes with this code unchanged. Implemented below
-      // as `semiJoin` (output-identical — the inner joins ignore
-      // non-participating docs either way; VerifyModesSpec pins it): off by
-      // default because on the planted-dup bench corpus participation is
-      // near-total and the extra distinct-ids pass buys nothing.
-      val side0 = texts.get.select(col("id"), col("text").as("s"))
-      val side = if (!semiJoin) side0 else {
-        val ids = survivors.select(col("id1").as("id"))
-          .union(survivors.select(col("id2").as("id"))).distinct()
-        side0.join(ids, Seq("id"), "left_semi")
-      }
+      // the floor for exact verification. A survivor-id semi-join on the
+      // text side would cut that shuffle by the non-participation fraction,
+      // but no measured shape gains from it: on the 15%-participation
+      // benchmark corpus tier 2 is ~0.09 s of a 7.1 s run.
+      val side = texts.get.select(col("id"), col("text").as("s"))
       scorePairs(survivors, side,
         SimilarityExpressions.textShingleJaccard(_, _, cfg.shingleK), "jaccard")
         .filter(col("jaccard") >= t)

@@ -327,9 +327,9 @@ object MultiField {
         explode(transform(col("band_keys"),
           k => xxhash64(lit(i), k))).as("bucket"))
     }.reduce(_ unionByName _)
-    val r = BucketJoin.pairs(memberships, cfg.maxBandBucket, "multifield_lsh")
-    CandidateGen.Result(
-      r.pairs.withColumn("stage", lit("multifield_lsh")), r.oversizeLog)
+    val r = BucketJoin.pairs(Seq(BucketJoin.Stage("multifield_lsh", memberships,
+      BucketJoin.Star, 1)), cfg.maxBandBucket)
+    CandidateGen.Result(r.pairs, r.oversizeLog)
   }
 
   /** Weighted rescore of an externally-supplied candidate set (the verify

@@ -117,7 +117,7 @@ final class DedupPipeline(
     }
     val assignments = stage("clusters") {
       val comps = ConnectedComponents.components(verified)
-      Clustering.assignAll(pages.select("id"), comps, normalizeIds = false)
+      Clustering.assignAll(pages.select("id"), comps)
     }
     Result(sigsCached, candStage, verified, assignments)
   }

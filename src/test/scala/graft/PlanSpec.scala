@@ -42,7 +42,8 @@ class PlanSpec extends SparkSuite {
     val docs = spark.read.parquet(docsPath)
     val sigs = Signatures.compute(docs, cfg, "doc_id", "text")
     val m = sigs.select(col("id"), explode(col("band_keys")).as("bucket"))
-    val r = BucketJoin.pairs(m, cfg.maxBandBucket, "minhash")
+    val r = BucketJoin.pairs(
+      Seq(BucketJoin.Stage("minhash", m, BucketJoin.Star, 1)), cfg.maxBandBucket)
     r.pairs.collect() // let AQE finalize (runtime exchange reuse / broadcasts)
     val p = plan(r.pairs)
     // regression guard: the whole candidate-pair job must stay within its
@@ -54,6 +55,27 @@ class PlanSpec extends SparkSuite {
     assert(shuffles <= 8, s"bucket join shuffle budget exceeded ($shuffles):\n$p")
     assert(p.contains("BroadcastHashJoin") || p.contains("ReusedExchange"),
       s"small-scale stats join should broadcast or reuse:\n$p")
+  }
+
+  test("candidate generation: all stages in one window, bounded exchanges") {
+    // planned as the pipeline plans it: AQE off, the small-input scope
+    val docs = spark.read.parquet(docsPath)
+    val (windows, shuffles, p) = ConfScope.aqeOff(spark) {
+      ConfScope.smallInputScope(spark, docs) {
+        val sigs = Signatures.compute(docs, cfg, "doc_id", "text", emitShingles = false)
+        val ep = CandidateGen.all(sigs, cfg).candidates.queryExecution.executedPlan
+        // both join sides read the one window (the b side through a reused
+        // exchange): one distinct window plan for all stages (5 when each
+        // stage ran its own bucket join)
+        (ep.collect { case w: org.apache.spark.sql.execution.window.WindowExec =>
+          w.canonicalized }.distinct.size,
+          "Exchange hashpartitioning".r.findAllIn(ep.toString).size, ep.toString)
+      }
+    }
+    assert(windows == 1, s"one window for all blocking stages, got $windows:\n$p")
+    // the membership exchange and the pair groupBy's: 3 on this input (10
+    // when each stage ran its own bucket join)
+    assert(shuffles <= 9, s"candidate generation shuffle budget exceeded ($shuffles):\n$p")
   }
 
   test("flagship pipeline plan contains no cartesian product") {

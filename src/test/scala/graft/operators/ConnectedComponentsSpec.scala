@@ -15,22 +15,22 @@ class ConnectedComponentsSpec extends SparkSuite {
   val goldenEdges = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L), (7L, 8L), (7L, 9L), (9L, 10L))
   val allIds = (1L to 12L)
 
-  test("golden union-find fixture: components + singletons + sequential ids") {
+  test("golden union-find fixture: components + singletons") {
     val edges = goldenEdges.toDF("id1", "id2")
     val comps = ConnectedComponents.components(edges)
     val ids = allIds.toDF("id")
-    val assign = Clustering.assignAll(ids, comps, normalizeIds = true)
-    val members = Clustering.clusterMembers(assign)
+    val members = Clustering.clusterMembers(Clustering.assignAll(ids, comps))
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toList))
-      .sortBy(_._1)
-      .toList
-    assert(members == List(
-      0L -> List(1L, 2L, 3L),
-      1L -> List(4L, 5L),
-      2L -> List(6L, 7L, 8L, 9L, 10L),
-      3L -> List(11L),
-      4L -> List(12L)))
+      .map(r => r.getSeq[Long](1).toList)
+      .toSet
+    assert(members == Set(
+      List(1L, 2L, 3L), List(4L, 5L), List(6L, 7L, 8L, 9L, 10L),
+      List(11L), List(12L)))
+    // the reference's sequential 0..n-1 keys fail fast, with the reason
+    val e = intercept[IllegalArgumentException] {
+      Clustering.assignAll(ids, comps, normalizeIds = true)
+    }
+    assert(e.getMessage.contains("min member id"), e.getMessage)
   }
 
   test("scale mode: cluster key = min member id; singleton key = own id") {
@@ -48,9 +48,9 @@ class ConnectedComponentsSpec extends SparkSuite {
     val edges = Seq.empty[(Long, Long)].toDF("id1", "id2")
     val comps = ConnectedComponents.components(edges)
     assert(comps.count() == 0)
-    val assign = Clustering.assignAll(Seq(5L, 9L).toDF("id"), comps, normalizeIds = true)
+    val assign = Clustering.assignAll(Seq(5L, 9L).toDF("id"), comps)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(assign == Map(5L -> 0L, 9L -> 1L))
+    assert(assign == Map(5L -> 5L, 9L -> 9L))
   }
 
   test("CC matches in-memory union-find on a random graph") {

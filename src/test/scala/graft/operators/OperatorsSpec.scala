@@ -51,6 +51,67 @@ class OperatorsSpec extends SparkSuite {
     assert(log.forall(r => r.getAs[Long]("bucket_n") == 257L &&
       r.getAs[String]("stage") == "minhash" && r.getAs[String]("policy") == "Star"),
       log.mkString("\n"))
+    // all three stages in one join: over-cap MinHash and SimHash buckets
+    // star, over-cap span buckets emit nothing; each is logged by policy
+    val all = CandidateGen.all(Signatures.compute(same, cfg, "doc_id"), cfg)
+    val allPairs = all.candidates.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(allPairs == (1L to 256L).map(j => (0L, j, "minhash")).toSet)
+    val policies = all.oversizeLog.collect()
+      .map(r => r.getAs[String]("stage") -> r.getAs[String]("policy")).toSet
+    assert(policies == Set("minhash" -> "Star", "simhash" -> "Star", "span" -> "Drop"),
+      policies)
+    val spans = CandidateGen.spanStage(Signatures.compute(same, cfg, "doc_id"), cfg)
+    assert(spans.candidates.isEmpty)
+    val (_, spanWarns) = warnings(BucketJoin.getClass.getName)(
+      BucketJoin.warnOversize(spans.oversizeLog))
+    assert(spanWarns.size == 1 && spanWarns.head.startsWith("span: ") &&
+      spanWarns.head.contains("policy Drop (largest bucket_n 257)"), spanWarns)
+  }
+
+  test("CandidateGen.all: span corroboration, stage tags, Hamming ball on SimHash rows only") {
+    // hand-built signature rows: (id, band keys, SimHash chunk keys,
+    // fingerprint, span keys); bucket values are disjoint per stage
+    val far = -1L // 64 bits from 0
+    val sigs = Seq(
+      (1L, Seq(100L), Seq.empty[Long], 0L, Seq(1L, 2L)), // minhash + 2 span hits
+      (2L, Seq(100L), Seq.empty[Long], far, Seq(1L, 2L)),
+      (3L, Seq.empty[Long], Seq.empty[Long], 0L, Seq(5L, 6L)), // 2 span hits
+      (4L, Seq.empty[Long], Seq.empty[Long], 0L, Seq(5L, 6L)),
+      (5L, Seq.empty[Long], Seq.empty[Long], 0L, Seq(7L)), // 1 span hit
+      (6L, Seq.empty[Long], Seq.empty[Long], 0L, Seq(7L)),
+      (7L, Seq.empty[Long], Seq(200L), 0L, Seq.empty[Long]), // outside the ball
+      (8L, Seq.empty[Long], Seq(200L), far, Seq.empty[Long]),
+      (9L, Seq.empty[Long], Seq(201L), 0L, Seq.empty[Long]), // inside the ball
+      (10L, Seq.empty[Long], Seq(201L), 1L, Seq.empty[Long]),
+      (11L, Seq.empty[Long], Seq(202L), 0L, Seq(8L, 9L)), // simhash + span
+      (12L, Seq.empty[Long], Seq(202L), 1L, Seq(8L, 9L)),
+      (13L, Seq.empty[Long], Seq(203L), 0L, Seq(10L, 11L)), // span, outside the ball
+      (14L, Seq.empty[Long], Seq(203L), far, Seq(10L, 11L)))
+      .toDF("id", "band_keys", "simhash_chunks", "simhash", "span_keys")
+      .withColumn("n_tokens", org.apache.spark.sql.functions.lit(5))
+    val got = CandidateGen.all(sigs, cfg).candidates.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(cfg.minSpanHits == 2)
+    assert(got == Set((1L, 2L, "minhash"), (3L, 4L, "span"), (9L, 10L, "simhash"),
+      (11L, 12L, "simhash"), (13L, 14L, "span")), got)
+  }
+
+  test("CandidateGen.all: a pairFilter drops normal-bucket pairs, never star pairs") {
+    // Linkage's cross-source filter: 257 same-source docs in one band
+    // bucket star around the min id anyway; a same-source pair in a normal
+    // bucket is dropped, a cross-source one kept
+    val big = (0L to 256L).map(i => (i, Seq(1L), "L"))
+    val small = Seq((1000L, Seq(2L), "L"), (1001L, Seq(2L), "L"),
+      (1002L, Seq(3L), "L"), (1003L, Seq(3L), "R"))
+    val sigs = (big ++ small).toDF("id", "band_keys", "source")
+    val crossSource: CandidateGen.PairFilter = (a, b) =>
+      org.apache.spark.sql.functions.col(s"$a.source") =!=
+        org.apache.spark.sql.functions.col(s"$b.source")
+    val got = CandidateGen.all(sigs, cfg, useSimhash = false, useSpans = false,
+        extra = Seq("source"), pairFilter = Some(crossSource))
+      .candidates.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == (1L to 256L).map(j => (0L, j)).toSet + ((1002L, 1003L)))
   }
 
   test("Dedup.embeddingCosinePairs exact cosine") {

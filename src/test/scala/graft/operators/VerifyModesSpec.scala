@@ -118,24 +118,6 @@ class VerifyModesSpec extends SparkSuite {
     }
   }
 
-  test("verify semiJoin: output identical, non-participating docs pruned from the side") {
-    val (pages, _) = graft.corpus.PageCorpus.generateLocal(300, cfg.seed)
-    val df = spark.createDataset(pages.toSeq).toDF()
-    val sigs = Signatures.compute(df, cfg, emitShingles = false).persist()
-    val cands = CandidateGen.minhashStage(sigs, cfg).candidates
-    val texts = Some(df.select(col("id"), col("text")))
-    def run(semi: Boolean) =
-      JaccardVerify.verify(cands, sigs, cfg, texts = texts, semiJoin = semi)
-        .select("id1", "id2", "jaccard")
-        .withColumn("jaccard", round(col("jaccard"), 9))
-        .as[(Long, Long, Double)].collect().toSet
-    val off = run(semi = false)
-    val on = run(semi = true)
-    assert(off.nonEmpty)
-    assert(on == off, "semi-join prefilter must be output-identical")
-    sigs.unpersist()
-  }
-
   test("SparkEntry corpus cache has a release path") {
     graft.SparkEntry.corpus(spark, 50)
     assert(graft.SparkEntry.cachedCorpusCount(spark) >= 1)
