@@ -121,18 +121,6 @@ object Cli {
       "renumber first, e.g. row_number() over the natural key")
   }
 
-  /** Pairs-granularity checkpoint (same marker contract as the pipeline
-    * path): with a checkpoint scope, read its completed `pairs` table, else
-    * compute, write, mark and read it back. */
-  private def checkpointedPairs(spark: SparkSession, ckpt: Option[String])(
-      compute: => DataFrame): DataFrame = ckpt match {
-    case Some(dir) =>
-      val t = new graft.io.ParquetTables(spark, dir)
-      if (!t.isComplete("pairs")) { t.write(compute, "pairs"); t.markComplete("pairs") }
-      t.read("pairs")
-    case None => compute
-  }
-
   /** Run with an existing session (tests call this; main wraps it). */
   def run(spark: SparkSession, a: Args): Unit = {
     requireMode(a)
@@ -183,13 +171,16 @@ object Cli {
         a.sourceCol, a.leftSource, graft.functions.TextSignatures.formatVersion).##
       f"$d/cfg_${h & 0xffffffffL}%08x"
     }
+    // pairs-granularity checkpoint of the modes DedupPipeline does not run
+    def checkpointed(pairs: => DataFrame): DataFrame = ckpt.fold(pairs)(
+      d => new graft.io.ParquetTables(spark, d).checkpoint("pairs")(pairs))
 
     val (pairs, clustered) = (a.mode, fieldJson) match {
       case ("linkage", fj) =>
         require(raw.columns.contains(a.sourceCol),
           s"linkage mode needs --source-col '${a.sourceCol}' in the input")
         val recs = raw.withColumn(a.idCol, col(a.idCol).cast("long"))
-        val p = checkpointedPairs(spark, ckpt)(fj match {
+        val p = checkpointed(fj match {
           case Some(json) =>
             // multi-field linkage: the reference's flagship linkage shape
             // (field config over two catalogs, Record-Linkage-Example)
@@ -209,7 +200,7 @@ object Cli {
         // editing fields.json in place and rerunning with the same
         // --checkpoint-dir recomputes under a fresh scope instead of
         // silently serving pairs scored under the old config
-        val p = checkpointedPairs(spark, ckpt)(MultiField.dedupPairs(
+        val p = checkpointed(MultiField.dedupPairs(
           raw.withColumn(a.idCol, col(a.idCol).cast("long")),
           MultiField.parseConfigs(json), cfg.simThreshold, a.idCol))
         (p, true)

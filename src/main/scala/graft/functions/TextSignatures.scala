@@ -24,9 +24,9 @@ import Hashing._
 object TextSignatures {
 
   /** Signature FORMAT version, hashed into Cli's checkpoint scope
-    * directory and stamped into the pipeline's `<stage>_format` tables
-    * (DedupPipeline.stage), so a resume can never mix signatures from two
-    * hash families (round-5
+    * directory and stamped into the schema of the pipeline's versioned
+    * stage tables (DedupPipeline.stage, `DedupPipeline.FormatKey`), so a
+    * resume can never mix signatures from two hash families (round-5
     * advisor finding): v1 = a*h+b mod 2^61-1 MinHash family (rounds 1-4),
     * v2 = the wraparound odd-multiplier family (round 5+). Bump on any
     * change that alters minhash/band/simhash/span key VALUES, including a

@@ -25,20 +25,26 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
  *
  * The marker split exists because plain parquet directories are not atomic:
  * a killed writer leaves a partial directory, so completion is a separate
- * `_GRAFT_OK` flag written AFTER the data (resume contract,
- * pipeline.DedupPipeline). Transactional formats collapse both into the
- * snapshot commit.
+ * `_GRAFT_OK` flag written AFTER the data. [[TableIO.checkpoint]] is the one
+ * owner of that protocol (pipeline.DedupPipeline's stages, Cli's pairs);
+ * transactional formats collapse both steps into the snapshot commit.
  */
 trait TableIO {
   def read(table: String): DataFrame
+  /** Every engine write replaces the table (`mode` is never set). */
   def write(df: DataFrame, table: String,
       mode: SaveMode = SaveMode.Overwrite): Unit
-  /** Append rows (metrics/lineage side sinks). */
-  def append(df: DataFrame, table: String): Unit = write(df, table, SaveMode.Append)
   /** True iff the table exists AND its write completed. */
   def isComplete(table: String): Boolean
   /** Flag a finished write (no-op for transactional backends). */
   def markComplete(table: String): Unit
+
+  /** Resume contract: the completed table if there is one, else `compute`
+    * written once, then marked complete, then read back. */
+  final def checkpoint(table: String)(compute: => DataFrame): DataFrame = {
+    if (!isComplete(table)) { write(compute, table); markComplete(table) }
+    read(table)
+  }
 }
 
 /**
@@ -50,6 +56,7 @@ final class ParquetTables(spark: SparkSession, root: String,
     suffix: String = "") extends TableIO {
 
   private def path(table: String) = s"$root/$table$suffix"
+  private def marker(table: String) = new org.apache.hadoop.fs.Path(s"${path(table)}/_GRAFT_OK")
   private def fs(p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -59,13 +66,8 @@ final class ParquetTables(spark: SparkSession, root: String,
   override def write(df: DataFrame, table: String, mode: SaveMode): Unit =
     df.write.mode(mode).parquet(path(table))
 
-  override def isComplete(table: String): Boolean = {
-    val ok = new org.apache.hadoop.fs.Path(s"${path(table)}/_GRAFT_OK")
-    fs(ok).exists(ok)
-  }
+  override def isComplete(table: String): Boolean = fs(marker(table)).exists(marker(table))
 
-  override def markComplete(table: String): Unit = {
-    val ok = new org.apache.hadoop.fs.Path(s"${path(table)}/_GRAFT_OK")
-    fs(ok).create(ok, true).close()
-  }
+  override def markComplete(table: String): Unit =
+    fs(marker(table)).create(marker(table), true).close()
 }

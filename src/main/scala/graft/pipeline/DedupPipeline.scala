@@ -1,9 +1,11 @@
 package graft.pipeline
 
 import graft.config.GraftConfig
+import graft.functions.TextSignatures
 import graft.operators._
-import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 /**
  * The end-to-end near-duplicate detection + clustering pipeline — the
@@ -14,16 +16,17 @@ import org.apache.spark.sql.functions._
  *                ├─ simhash ball ─┼─ union ─ jaccard verify ─ CC ─ clusters
  *                └─ span winnow ──┘
  *
- * Checkpoint/resume (north rule "resumable from checkpoint"): every stage
- * writes its output Parquet under `checkpointDir/<stage>` plus a `_GRAFT_OK`
- * marker; a re-run skips any stage whose marker exists, so a killed job
- * resumes from the last completed stage with byte-identical results
- * (everything downstream of the deterministic signatures is deterministic).
+ * Checkpoint/resume (north rule "resumable from checkpoint"): each stage
+ * is written once, as Parquet under `checkpointDir/<stage>` plus a
+ * `_GRAFT_OK` marker (TableIO.checkpoint); a re-run skips any stage whose
+ * marker exists, so a killed job resumes from the last completed stage with
+ * byte-identical results (everything downstream of the deterministic
+ * signatures is deterministic).
  *
- * Lineage + metrics (north rule): every stage logs per-partition row counts
- * (spark_partition_id aggregation) to `checkpointDir/lineage`; oversized
- * blocking buckets (skew cap hits) go to `checkpointDir/oversize` — no
- * silent caps.
+ * Lineage + metrics (north rule): one job per call replaces
+ * `checkpointDir/lineage` with each stage table's per-partition row counts
+ * (spark_partition_id aggregation); oversized blocking buckets (skew cap
+ * hits) go to `checkpointDir/oversize` — no silent caps.
  */
 final class DedupPipeline(
     spark: SparkSession,
@@ -119,6 +122,8 @@ final class DedupPipeline(
       val comps = ConnectedComponents.components(verified)
       Clustering.assignAll(pages.select("id"), comps)
     }
+    lineage("signatures" -> sigsCached, "candidates" -> candStage,
+      "verified" -> verified, "clusters" -> assignments)
     Result(sigsCached, candStage, verified, assignments)
   }
 
@@ -151,18 +156,18 @@ final class DedupPipeline(
     // the staged pipeline): a completed `pairs` table short-circuits the
     // whole job, and the parquet write IS the one materialization — no
     // localCheckpoint first (that would run the verify job twice).
-    // Versioned resume: estimate-mode jaccard is a minhash-lane agreement,
-    // format-dependent (see stage()).
+    // Versioned: estimate-mode jaccard is format-dependent (see stage()).
     val out = stage("pairs", versioned = true) {
       runPairsPlan(s, pages, exact, useMinhash, useSimhash, useSpans)
     }
+    lineage("pairs" -> out)
     if (io.isEmpty) out.localCheckpoint() else out
   } }
 
   private def runPairsPlan(s: CacheScope, pages: DataFrame, exact: Boolean,
       useMinhash: Boolean, useSimhash: Boolean, useSpans: Boolean): DataFrame = {
     val input = salted(pages)
-    val parts = graft.functions.TextSignatures.SigParts(
+    val parts = TextSignatures.SigParts(
       simhash = useSimhash, spans = useSpans)
     // same lineage cut as run(): blocking + verify each re-analyze the
     // signature subtree otherwise (see GraftSqlBridge.truncateLineage)
@@ -190,68 +195,65 @@ final class DedupPipeline(
     *
     * `versioned = true`: the stage's VALUES depend on the signature hash
     * family (the signatures table; the estimate-mode pairs table, whose
-    * jaccard is a minhash-lane agreement). Completion then also writes a
-    * `<name>_format` table stamped with TextSignatures.formatVersion, and a
+    * jaccard is a minhash-lane agreement). The table then carries
+    * TextSignatures.formatVersion in its schema ([[FormatKey]]), and a
     * resume against a checkpoint written by a different family fails fast
     * instead of silently mixing incompatible values (round-5 advisor
-    * finding). Pre-versioning checkpoints (no format table) also fail; the
-    * error names the stage directory to delete to recompute. */
+    * finding). A checkpoint from before schema stamps is checked through its
+    * `<name>_format` table; with neither, the error names the stage
+    * directory to delete to recompute. */
   private def stage(name: String, persist: Boolean = false,
       versioned: Boolean = false)(body: => DataFrame): DataFrame =
     io match {
       case None =>
         if (persist) body.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else body
-      case Some(t) =>
-        val fmt = graft.functions.TextSignatures.formatVersion.toLong
-        if (versioned && t.isComplete(name)) {
-          val stored =
-            if (t.isComplete(s"${name}_format"))
-              t.read(s"${name}_format").head().getLong(0)
-            else -1L
-          require(stored == fmt,
-            s"checkpointed '$name' was written with signature format " +
-              (if (stored < 0) "unknown (a checkpoint from before format stamps)"
-               else stored.toString) +
-              s" but this engine computes format $fmt; resuming would mix " +
-              "incompatible signature values. To recover, delete the " +
-              s"checkpoint's '$name' stage directory (or the whole checkpoint " +
-              "directory) and re-run to recompute it, or keep the jar that " +
-              "wrote it")
+      case Some(t) if versioned =>
+        val fmt = TextSignatures.formatVersion.toLong
+        val out = t.checkpoint(name) {
+          val df = body
+          df.withMetadata(df.columns.head, new MetadataBuilder()
+            .withMetadata(df.schema.head.metadata).putLong(FormatKey, fmt).build())
         }
-        if (!t.isComplete(name)) {
-          t.write(body, name)
-          logLineage(name)
-          if (versioned) {
-            import spark.implicits._
-            t.write(Seq(fmt).toDF("format_version"), s"${name}_format")
-            t.markComplete(s"${name}_format")
-          }
-          t.markComplete(name)
-        }
-        t.read(name)
+        val m = out.schema.head.metadata
+        val stored =
+          if (m.contains(FormatKey)) m.getLong(FormatKey)
+          else if (t.isComplete(s"${name}_format")) t.read(s"${name}_format").head().getLong(0)
+          else -1L
+        require(stored == fmt,
+          s"checkpointed '$name' was written with signature format " +
+            (if (stored < 0) "unknown (a checkpoint from before format stamps)"
+             else stored.toString) +
+            s" but this engine computes format $fmt; resuming would mix " +
+            "incompatible signature values. To recover, delete the " +
+            s"checkpoint's '$name' stage directory (or the whole checkpoint " +
+            "directory) and re-run to recompute it, or keep the jar that " +
+            "wrote it")
+        out
+      case Some(t) => t.checkpoint(name)(body)
     }
 
-  /** Append-only side output (metrics/logs), best-effort under no checkpoint. */
+  /** Side output (metrics/logs), written only under a checkpoint. */
   private def sideSink(name: String, df: DataFrame): Unit =
-    io.foreach(_.write(df, name, SaveMode.Overwrite))
+    io.foreach(_.write(df, name))
 
-  /** Per-partition lineage: rows per partition of the stage output. */
-  private def logLineage(name: String): Unit =
-    io.foreach { t =>
-      t.append(
-        t.read(name)
-          .groupBy(spark_partition_id().as("partition"))
-          .agg(count(lit(1)).as("rows"))
-          .withColumn("stage", lit(name)),
-        "lineage")
-    }
+  /** Per-partition lineage: rows per partition of each stage, in one job. */
+  private def lineage(stages: (String, DataFrame)*): Unit =
+    io.foreach(_.write(stages.map { case (name, df) =>
+      df.groupBy(spark_partition_id().as("partition"))
+        .agg(count(lit(1)).as("rows"))
+        .withColumn("stage", lit(name))
+    }.reduce(_ union _), "lineage"))
 }
 
 object DedupPipeline {
   /** Salt buckets per host for the ingest exchange ([[DedupPipeline]]'s
     * `salted`). */
   val HostSalts = 8
+
+  /** Metadata key of a versioned stage table's format stamp, on its first
+    * column. */
+  private[pipeline] val FormatKey = "graft_format"
 
   final case class Result(
       signatures: DataFrame,

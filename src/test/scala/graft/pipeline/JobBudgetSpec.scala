@@ -1,0 +1,59 @@
+package graft.pipeline
+
+import graft.SparkSuite
+import graft.config.GraftConfig
+import graft.corpus.PageCorpus
+import java.nio.file.Files
+
+/**
+ * Job budget of the flagship pipeline: each Spark job is a fixed latency
+ * (scheduling, task launch, a driver round trip) whatever its row count, so
+ * the number of jobs a call launches is pinned from above. A checkpointed
+ * run writes each stage once and builds its lineage in one more job.
+ */
+class JobBudgetSpec extends SparkSuite {
+
+  val cfg = GraftConfig.default
+
+  /** Jobs launched while `body` runs, counted through a job group of its
+    * own (AQE and broadcast threads inherit the caller's group). The status
+    * store is fed in event order, so once a marker job started after
+    * `body` is visible, every job of `body` is. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID()}"
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    inGroup(group)(body)
+    inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty,
+      "marker job start was never delivered")
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  private def corpus = PageCorpus.generate(spark, 400, cfg.seed)._1.toDF()
+
+  private def runAndCollect(p: DedupPipeline, df: org.apache.spark.sql.DataFrame) =
+    p.run(df).assignments.collect()
+
+  test("checkpointed run and its resume stay within their job budgets") {
+    val dir = Files.createTempDirectory("graft_budget").toString
+    val df = corpus
+    val fresh = jobsOf(runAndCollect(new DedupPipeline(spark, cfg, Some(dir)), df))
+    assert(fresh <= 18, s"checkpointed run launched $fresh jobs")
+    new java.io.File(s"$dir/clusters/_GRAFT_OK").delete()
+    val resumed = jobsOf(runAndCollect(new DedupPipeline(spark, cfg, Some(dir)), df))
+    assert(resumed <= 10, s"resume launched $resumed jobs")
+  }
+
+  test("a run without a checkpoint stays within its job budget") {
+    val df = corpus
+    val jobs = jobsOf(runAndCollect(new DedupPipeline(spark, cfg), df))
+    assert(jobs <= 11, s"un-checkpointed run launched $jobs jobs")
+  }
+}
