@@ -39,12 +39,8 @@ object SimilarityExpressions {
   def jaccardSorted(a: Column, b: Column): Column =
     call(JaccardSorted, Seq(longs, longs), a, b)
 
-  /** Fraction of agreeing positions of two equal-length long arrays. */
-  def minhashAgreement(a: Column, b: Column): Column =
-    call(MinHashAgreement, Seq(longs, longs), a, b)
-
   /** Agreement fraction over PACKED 8-bit minhash lanes (8 per long) —
-    * the narrow tier-1 payload (TextSignatures.Sig.minhash8). `numPerm`
+    * the tier-1 payload (TextSignatures.Sig.minhash8). `numPerm`
     * bounds the lane scan: the final long's unused lanes are zero-padded
     * on BOTH sides and would otherwise count as phantom agreements when
     * numPerm is not a multiple of 8. */
@@ -82,19 +78,6 @@ object JaccardSorted {
     }
     val union = na + nb - inter
     if (union == 0) 0.0 else inter.toDouble / union
-  }
-}
-
-object MinHashAgreement {
-  def compute(a: ArrayData, b: ArrayData): Double = {
-    val n = a.numElements()
-    if (n == 0 || n != b.numElements()) return 0.0
-    var i = 0; var eq = 0
-    while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) eq += 1
-      i += 1
-    }
-    eq.toDouble / n
   }
 }
 

@@ -34,8 +34,7 @@ object TextSignatures {
   val formatVersion: Int = 2
 
   final case class Sig(
-      shingles: Array[Long], // sorted distinct k-shingle hashes (Jaccard verify)
-      minhash: Array[Long], // numPerm MinHash values
+      minhash: Array[Long], // numPerm MinHash values (the band keys' input)
       minhash8: Array[Long], // numPerm low bytes, 8 per long — the tier-1
       // estimate payload: position-wise EQUALITY is all the agreement
       // estimator uses, and an 8-bit lane false-equals with p = 1/256,
@@ -49,7 +48,7 @@ object TextSignatures {
       nShingles: Int,
       nTokens: Int)
 
-  val empty: Sig = Sig(Array.empty, Array.empty, Array.empty, Array.empty, 0L, Array.empty, Array.empty, 0, 0)
+  val empty: Sig = Sig(Array.empty, Array.empty, Array.empty, 0L, Array.empty, Array.empty, 0, 0)
 
   /** Which optional signature families to compute. At 10^12 documents the
     * kernel is the hottest function in the engine — a consumer that only
@@ -178,11 +177,10 @@ object TextSignatures {
     set.toSortedArray
   }
 
-  /** Full signature bundle; single pass over the text. emitShingles = false
-    * skips materializing the sorted shingle array (set size still counted) —
-    * for pipelines whose verify tier recomputes Jaccard from text. `parts`
-    * limits which signature families are computed (see SigParts). */
-  def compute(text: String, cfg: GraftConfig, emitShingles: Boolean = true,
+  /** Full signature bundle; single pass over the text. The shingle set is
+    * counted, never materialized: exact verify recomputes it from the text.
+    * `parts` limits which signature families are computed (see SigParts). */
+  def compute(text: String, cfg: GraftConfig,
       parts: SigParts = SigParts.all): Sig = {
     if (text == null) return empty
     val cs = normalize(text)
@@ -222,7 +220,6 @@ object TextSignatures {
       lane += 1
     }
     val nShingles = set.size
-    val shingles = if (emitShingles) set.toSortedArray else Array.emptyLongArray
 
     // --- LSH band keys: hash r consecutive sig rows per band, mix band idx
     //     so band 3's bucket space never collides with band 7's ---
@@ -275,7 +272,7 @@ object TextSignatures {
       if (parts.spans) winnow(cs, cfg.spanGramLen, cfg.winnowWindow)
       else Array.emptyLongArray
 
-    Sig(shingles, sig, packed, bandKeys, if (nTokens == 0) 0L else simhash,
+    Sig(sig, packed, bandKeys, if (nTokens == 0) 0L else simhash,
       chunks, spanKeys, nShingles, nTokens)
   }
 

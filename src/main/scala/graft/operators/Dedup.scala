@@ -64,10 +64,8 @@ object Dedup {
   /** MinHash+LSH near-dup pairs over a (doc_id, text) table — the scale path. */
   def minhashDupPairs(docs: DataFrame, cfg: GraftConfig): DataFrame =
     ConfScope.smallInputScope(docs.sparkSession, docs) { CacheScope.run { s =>
-    // kept: consumed by the banding stage and twice by the verify joins;
-    // narrow bundle (no shingle arrays — exact verify recomputes from text,
-    // bitwise-identical)
-    val sigs = s.keep(Signatures.compute(docs, cfg, "doc_id", emitShingles = false,
+    // kept: consumed by the banding stage and twice by the verify joins
+    val sigs = s.keep(Signatures.compute(docs, cfg, "doc_id",
         parts = graft.functions.TextSignatures.SigParts.minhashOnly))
     val cands = CandidateGen.minhashStage(sigs, cfg)
     val texts = docs.select(col("doc_id").cast("long").as("id"), col("text"))

@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
  * pages). Joining the full shingle sets (~8 bytes/char) onto every candidate
  * shuffles GBs of array payload mostly to reject pairs. Instead:
  *
- *   tier 1 — estimate: join the fixed-width MinHash signature (numPerm
- *     longs) and score by agreement fraction (unbiased Jaccard estimator,
- *     σ = sqrt(j(1-j)/numPerm) ≈ 0.044 at 128 perms). Pairs below
+ *   tier 1 — estimate: join the packed 8-bit MinHash lanes (numPerm / 8
+ *     longs) and score by lane agreement fraction (Jaccard estimator,
+ *     σ = sqrt(j(1-j)/numPerm) ≈ 0.044 at 128 perms, plus the ≤ (1−j)/256
+ *     one-sided bias of 8-bit lanes, see `verify`). Pairs below
  *     threshold − margin are dropped; margin = 3.5σ keeps the probability
  *     of dropping a true ≥ threshold pair under ~2·10⁻⁴ (recall gate is
  *     still measured empirically against the exact oracle).
@@ -43,8 +44,14 @@ object JaccardVerify {
       .drop("s1", "s2")
 
   /**
-   * candidates(id1, id2, stage) x sigs(id, minhash8 [, minhash]) →
+   * candidates(id1, id2, stage) x sigs(id, minhash8) →
    * (id1, id2, jaccard, stage) filtered at cfg.simThreshold.
+   *
+   * Tier 1 scores the packed 8-bit MinHash lanes (Signatures' one bundle
+   * carries no other MinHash payload). An 8-bit lane false-equals with
+   * p = 1/256, so the estimate is biased UP by at most ~(1−j)/256 ≈ 0.004,
+   * one-sided: inside the two-tier margin, and the estimate-mode output
+   * carries it.
    *
    * estimate = true: tier 1 only — the 100 TB mode; `jaccard` is the
    * MinHash estimate (±σ), no text is ever shuffled.
@@ -54,50 +61,28 @@ object JaccardVerify {
    * (the TextShingleJaccard kernel — same shingling, bitwise-identical to
    * Hashing.jaccardSorted over the shingle sets) instead of joining stored
    * shingle arrays. A shingle array is ~8 bytes per corpus char; the text
-   * is ~8x smaller, so this cuts tier-2 join traffic ~8x and lets the
-   * signature stage skip materializing shingle arrays entirely
-   * (Signatures.compute emitShingles=false). The CPU cost — re-shingling
-   * two documents per SURVIVING pair — is a few microseconds against tens
-   * of KB of saved memory/shuffle traffic, the resource that actually caps
-   * N→4N scaling.
-   *
-   * Estimate-mode contract (estimate = true, tier 1 IS the output): the
-   * returned `jaccard` is the UNBIASED numPerm-lane MinHash estimator when
-   * the bundle carries the full 64-bit `minhash` column (the default — all
-   * in-repo wide bundles do); only when the bundle carries NOTHING but the
-   * packed lanes, or the caller opts in via `packedEstimate = true` (the 8×
-   * narrower 100 TB prefilter-grade mode), is the 8-bit estimator used —
-   * whose false-equal p = 1/256 per disagreeing lane biases the estimate UP
-   * by ≤ ~(1−j)/256 ≈ 0.004, one-sided. In two-tier mode (estimate = false)
-   * tier 1 always prefers the packed lanes — the bias is inside the margin
-   * and tier 2 is exact regardless, so only the prefilter sees it.
+   * is ~8x smaller, so the signature stage never materializes shingle
+   * arrays. The CPU cost — re-shingling two documents per SURVIVING pair —
+   * is a few microseconds against tens of KB of saved memory/shuffle
+   * traffic, the resource that actually caps N→4N scaling.
    *
    * Neither tier forces a broadcast; the planner picks each join strategy.
+   *
+   * @param packedEstimate has no effect; kept for callers that pass it by name.
    */
   def verify(candidates: DataFrame, sigs: DataFrame, cfg: GraftConfig,
       estimate: Boolean = false, texts: Option[DataFrame] = None,
-      packedEstimate: Boolean = false): DataFrame = {
+      @scala.annotation.unused packedEstimate: Boolean = true): DataFrame = {
     val t = cfg.simThreshold
-    // exact tier-2 scoring re-shingles the texts, whatever the bundle
-    // carries — fail fast with the coupling spelled out instead of a
-    // None.get deep in plan construction
+    // exact tier-2 scoring re-shingles the texts — fail fast with the
+    // coupling spelled out instead of a None.get deep in plan construction
     require(estimate || texts.nonEmpty,
       "exact verify (estimate = false) needs texts = Some(df(id, text)): " +
         "tier 2 recomputes the exact Jaccard from the text; pass texts, " +
         "or use estimate = true for tier-1 scores only")
-    val hasPacked = sigs.columns.contains("minhash8")
-    val hasFull = sigs.columns.contains("minhash")
-    // tier-1 payload selection per the estimate-mode contract above
-    val packed = hasPacked && (!estimate || packedEstimate || !hasFull)
-    val minhashSide =
-      if (packed) sigs.select(col("id"), col("minhash8").as("s"))
-      else sigs.select(col("id"), col("minhash").as("s"))
-    val agreement: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
-      if (packed) (a, b) => SimilarityExpressions.minhashAgreementPacked(a, b, cfg.numPerm)
-      else SimilarityExpressions.minhashAgreement
-
     val estimated = scorePairs(candidates.select("id1", "id2", "stage"),
-      minhashSide, agreement, "est")
+      sigs.select(col("id"), col("minhash8").as("s")),
+      SimilarityExpressions.minhashAgreementPacked(_, _, cfg.numPerm), "est")
 
     if (estimate) {
       estimated.filter(col("est") >= t)

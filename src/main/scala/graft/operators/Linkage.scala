@@ -33,7 +33,7 @@ object Linkage {
     // lineage-cut after keep: blocking + verify re-analyze this subtree
     // per consumer otherwise (GraftSqlBridge.truncateLineage scaladoc)
     val sigs = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(s.keep(
-      Signatures.compute(records, cfg, idCol, textCol, emitShingles = false)
+      Signatures.compute(records, cfg, idCol, textCol)
         .join(src, "id")))
     // source-disjointness evaluated INSIDE the bucket join (pairFilter hook):
     // intra-source collisions — ~half of all pairs on balanced sources —

@@ -318,9 +318,10 @@ object MultiField {
       cfg: graft.config.GraftConfig): CandidateGen.Result = {
     require(specs.nonEmpty, "at least one field spec required")
     val memberships = specs.zipWithIndex.map { case (sp, i) =>
+      // band keys are all this reads: skip the SimHash and span passes
       val sigs = Signatures.compute(
         records.select(col("id"), col(sp.source).as("text")), cfg,
-        emitShingles = false)
+        parts = graft.functions.TextSignatures.SigParts.minhashOnly)
       sigs.select(col("id"),
         // field-mixed bucket: field i's bucket space never collides with
         // field j's (same trick as band-index mixing inside the kernel)

@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
 object Signatures {
 
   final case class SigRow(
-      shingles: Array[Long],
-      minhash: Array[Long],
       minhash8: Array[Long],
       band_keys: Array[Long],
       simhash: Long,
@@ -29,40 +27,33 @@ object Signatures {
       n_tokens: Int)
 
   /** Column-level signature UDF (one pass; see TextSignatures.compute). */
-  private def sigUdf(cfg: GraftConfig, emitShingles: Boolean,
-      parts: TextSignatures.SigParts) =
+  private def sigUdf(cfg: GraftConfig, parts: TextSignatures.SigParts) =
     udf { (text: String) =>
-    val s = TextSignatures.compute(text, cfg, emitShingles, parts)
-    SigRow(s.shingles,
-      if (emitShingles) s.minhash else Array.emptyLongArray, // narrow mode:
-      // tier-1 runs on the packed lanes; the full 1KB signature is never
-      // stored or shuffled
-      s.minhash8, s.bandKeys, s.simhash, s.simhashChunks,
+    val s = TextSignatures.compute(text, cfg, parts)
+    SigRow(s.minhash8, s.bandKeys, s.simhash, s.simhashChunks,
       s.spanKeys, s.nShingles, s.nTokens)
     }
 
   /**
-   * df(id, text, ...) -> df(id, shingles, band_keys, simhash, simhash_chunks,
-   * span_keys, n_shingles, n_tokens). `text` itself is NOT carried forward —
-   * downstream stages only ever see derived columns (byte-identity invariant).
-   *
-   * emitShingles = false drops the shingle-array column (and skips building
-   * the array in the kernel): ~8 bytes/char of corpus that the text-mode
-   * verify tier (JaccardVerify texts=...) never needs — the signature
-   * bundle shrinks ~7x, which is most of the stage's persist/cache traffic.
+   * df(id, text, ...) -> df(id, minhash8, band_keys, simhash, simhash_chunks,
+   * span_keys, n_shingles, n_tokens): the one signature bundle. `text`
+   * itself is NOT carried forward — downstream stages only ever see derived
+   * columns (byte-identity invariant). Neither the shingle set (~8
+   * bytes/char of corpus) nor the full 64-bit MinHash lanes are stored:
+   * exact verify recomputes Jaccard from the text, and the tier-1 estimate
+   * scores the packed 8-bit lanes (JaccardVerify).
    *
    * `parts` limits which signature families the kernel computes (see
    * TextSignatures.SigParts) — MinHash-only consumers (MinHash-only dedup,
    * pairs mode with one blocking stage) skip the SimHash token vote and the
    * winnowing pass entirely.
+   *
+   * @param emitShingles has no effect; kept for callers that pass it by name.
    */
   def compute(df: DataFrame, cfg: GraftConfig,
       idCol: String = "id", textCol: String = "text",
-      emitShingles: Boolean = true,
-      parts: TextSignatures.SigParts = TextSignatures.SigParts.all): DataFrame = {
-    val out = df.select(col(idCol).as("id"),
-        sigUdf(cfg, emitShingles, parts)(col(textCol)).as("sig"))
+      @scala.annotation.unused emitShingles: Boolean = false,
+      parts: TextSignatures.SigParts = TextSignatures.SigParts.all): DataFrame =
+    df.select(col(idCol).as("id"), sigUdf(cfg, parts)(col(textCol)).as("sig"))
       .select(col("id"), col("sig.*"))
-    if (emitShingles) out else out.drop("shingles").drop("minhash")
-  }
 }

@@ -84,14 +84,9 @@ final class DedupPipeline(
   /** pages(id, text, ...) → (id, cluster) for every input page. */
   def run(pages: DataFrame): Result = planningScope(pages) {
     val input = salted(pages)
-    // signatures feed 3 blocking stages + the tier-1 verify join → persisted.
-    // emitShingles = false: the verify tier recomputes exact Jaccard from
-    // text (JaccardVerify texts mode, bitwise-identical), so the ~8
-    // bytes/char shingle arrays are never built, cached, or shuffled — the
-    // signature bundle is ~7x narrower, which is most of this stage's
-    // cache/checkpoint traffic.
+    // signatures feed 3 blocking stages + the tier-1 verify join → persisted
     val sigsCached = stage("signatures", persist = true, versioned = true) {
-      Signatures.compute(input, cfg, emitShingles = false)
+      Signatures.compute(input, cfg)
     }
     // lineage cut: candidates/verified/CC all build on signatures, and each
     // would re-analyze its full subtree (quadratic driver time in stage
@@ -135,11 +130,11 @@ final class DedupPipeline(
    * assignment writeback — exactly the record → pairs slice the reference's
    * 10,600 rec/s baseline measures.
    *
-   * Scoring tier matches the reference's single-score shape: tier-1 MinHash
-   * estimate as the final score (`estimate = true`, packed 8-bit lanes — the
-   * 100 TB prefilter-grade mode; one-sided bias documented in
-   * JaccardVerify). Pass `exact = true` for the two-tier exact-Jaccard
-   * variant (what `run` uses).
+   * Scoring tier matches the reference's single-score shape: the tier-1
+   * MinHash estimate over the packed 8-bit lanes is the final score
+   * (`estimate = true`, the 100 TB mode; its ≤ (1−j)/256 one-sided bias is
+   * documented in JaccardVerify). Pass `exact = true` for the two-tier
+   * exact-Jaccard variant (what `run` uses).
    *
    * Stage flags select the blocking paths; the signature kernel computes
    * ONLY the families the enabled stages consume (SigParts — at 10^12 docs
@@ -172,15 +167,14 @@ final class DedupPipeline(
     // same lineage cut as run(): blocking + verify each re-analyze the
     // signature subtree otherwise (see GraftSqlBridge.truncateLineage)
     val sigs = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(
-      s.keep(Signatures.compute(input, cfg, emitShingles = false, parts = parts)))
+      s.keep(Signatures.compute(input, cfg, parts = parts)))
     val r = CandidateGen.all(sigs, cfg,
       useMinhash = useMinhash, useSimhash = useSimhash, useSpans = useSpans)
     // no silent caps in pairs mode either: skew-cap hits land in the same
     // oversize sink run() uses (no-op without a checkpoint dir)
     sideSink("oversize", r.oversizeLog)
     JaccardVerify.verify(r.candidates, sigs, cfg, estimate = !exact,
-      texts = if (exact) Some(input.select(col("id"), col("text"))) else None,
-      packedEstimate = !exact)
+      texts = if (exact) Some(input.select(col("id"), col("text"))) else None)
   }
 
   /** Run a stage, or load it from checkpoint if already completed.

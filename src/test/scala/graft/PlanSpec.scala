@@ -62,7 +62,7 @@ class PlanSpec extends SparkSuite {
     val docs = spark.read.parquet(docsPath)
     val (windows, shuffles, p) = ConfScope.aqeOff(spark) {
       ConfScope.smallInputScope(spark, docs) {
-        val sigs = Signatures.compute(docs, cfg, "doc_id", "text", emitShingles = false)
+        val sigs = Signatures.compute(docs, cfg, "doc_id", "text")
         val ep = CandidateGen.all(sigs, cfg).candidates.queryExecution.executedPlan
         // both join sides read the one window (the b side through a reused
         // exchange): one distinct window plan for all stages (5 when each
@@ -80,7 +80,7 @@ class PlanSpec extends SparkSuite {
 
   test("flagship pipeline plan contains no cartesian product") {
     val (pages, _) = graft.corpus.PageCorpus.generate(spark, 200, cfg.seed)
-    val sigs = Signatures.compute(pages.toDF(), cfg, emitShingles = false)
+    val sigs = Signatures.compute(pages.toDF(), cfg)
     val cands = CandidateGen.all(sigs, cfg).candidates
     // tier 2 scores from the texts, as DedupPipeline.run does
     val verified = JaccardVerify.verify(cands, sigs, cfg,

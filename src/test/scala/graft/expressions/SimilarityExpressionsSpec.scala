@@ -19,13 +19,12 @@ class SimilarityExpressionsSpec extends SparkSuite {
 
   test("interpreted eval matches codegen (both paths)") {
     val df = Seq((Array(1L, 5L, 9L), Array(5L, 9L, 11L))).toDF("a", "b")
-    // jaccard 2/4; agreement 0/3; packed lanes over the first 16 of 24:
+    // jaccard 2/4; packed lanes over the first 16 of 24:
     // 1, 5, 9 vs 5, 9, 11 agree on the upper zero lanes of each long only
     val scores = Seq(
       SimilarityExpressions.jaccardSorted($"a", $"b"),
-      SimilarityExpressions.minhashAgreement($"a", $"b"),
       SimilarityExpressions.minhashAgreementPacked($"a", $"b", 16))
-    val expected = Seq(2.0 / 4.0, 0.0, 14.0 / 16.0)
+    val expected = Seq(2.0 / 4.0, 14.0 / 16.0)
     def eval() = { val r = df.select(scores: _*).head(); scores.indices.map(r.getDouble) }
     // codegen path (wholestage on)
     assert(eval() == expected)
@@ -59,12 +58,6 @@ class SimilarityExpressionsSpec extends SparkSuite {
     }
   }
 
-  test("MinHashAgreement native expression") {
-    val df = Seq((Array(1L, 2L, 3L, 4L), Array(1L, 9L, 3L, 7L))).toDF("a", "b")
-    assert(df.select(SimilarityExpressions.minhashAgreement($"a", $"b"))
-      .head().getDouble(0) == 0.5)
-  }
-
   test("wrong-typed arguments fail at analysis") {
     val df = Seq((Array("x"), Array("y"), 1.5)).toDF("a", "b", "d")
     Seq(
@@ -93,10 +86,12 @@ class SimilarityExpressionsSpec extends SparkSuite {
         graft.functions.TextSignatures.compute(b, cfg))
     }
     val df = pairs.map { case (sa, sb) =>
-      (sa.minhash, sb.minhash, sa.minhash8, sb.minhash8)
-    }.toDF("a", "b", "pa", "pb")
-    val got = df.select(
-      SimilarityExpressions.minhashAgreement($"a", $"b"),
+      // full-lane agreement over the 64-bit values, the packed lanes' reference
+      val full = sa.minhash.zip(sb.minhash).count { case (x, y) => x == y }.toDouble /
+        cfg.numPerm
+      (full, sa.minhash8, sb.minhash8)
+    }.toDF("full", "pa", "pb")
+    val got = df.select($"full",
       SimilarityExpressions.minhashAgreementPacked($"pa", $"pb", cfg.numPerm)).collect()
     got.foreach { r =>
       val full = r.getDouble(0); val packed = r.getDouble(1)

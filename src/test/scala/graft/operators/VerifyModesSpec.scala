@@ -5,8 +5,8 @@ import graft.config.GraftConfig
 import graft.expressions.SimilarityExpressions
 import org.apache.spark.sql.functions._
 
-/** Round-4 advisor/verdict items: JaccardVerify exact-mode texts guard,
-  * estimate-mode estimator contract, SuffixSpans group-cap truncation log,
+/** JaccardVerify exact-mode texts guard, the one signature bundle and its
+  * packed-lane tier-1 estimate, SuffixSpans group-cap truncation log,
   * SparkEntry corpus-cache release. */
 class VerifyModesSpec extends SparkSuite {
   import spark.implicits._
@@ -22,45 +22,47 @@ class VerifyModesSpec extends SparkSuite {
   test("verify: narrow bundle without texts fails fast with the coupling spelled out") {
     val docs = toyDocs
     val cands = Seq((1L, 2L, "minhash")).toDF("id1", "id2", "stage")
-    // exact mode scores from texts only: a wide bundle's stored shingle
-    // arrays do not stand in for them
-    for (emit <- Seq(false, true)) {
-      val sigs = Signatures.compute(docs, cfg, emitShingles = emit)
-      val e = intercept[IllegalArgumentException] {
-        JaccardVerify.verify(cands, sigs, cfg)
-      }
-      assert(e.getMessage.contains("texts"))
-      assert(e.getMessage.contains("estimate = true"))
-      // estimate mode needs no shingles and no texts — must NOT throw
-      assert(JaccardVerify.verify(cands, sigs, cfg, estimate = true).columns
-        .contains("jaccard"))
+    val sigs = Signatures.compute(docs, cfg)
+    val e = intercept[IllegalArgumentException] {
+      JaccardVerify.verify(cands, sigs, cfg)
     }
+    assert(e.getMessage.contains("texts"))
+    assert(e.getMessage.contains("estimate = true"))
+    // estimate mode needs no shingles and no texts — must NOT throw
+    assert(JaccardVerify.verify(cands, sigs, cfg, estimate = true).columns
+      .contains("jaccard"))
   }
 
-  test("verify estimate mode: unbiased full-lane estimator by default, packed on opt-in") {
+  test("Signatures.compute emits the one narrow bundle") {
+    val narrow = Seq("id", "minhash8", "band_keys", "simhash", "simhash_chunks",
+      "span_keys", "n_shingles", "n_tokens")
+    assert(Signatures.compute(toyDocs, cfg).columns.toSeq == narrow)
+    // the by-name parameter frozen callers still pass changes nothing
+    assert(Signatures.compute(toyDocs, cfg, emitShingles = true).columns.toSeq == narrow)
+  }
+
+  test("verify estimate mode: packed-lane agreement") {
     val docs = toyDocs
-    val sigs = Signatures.compute(docs, cfg) // wide: minhash AND minhash8
-      .persist()
+    val sigs = Signatures.compute(docs, cfg).persist()
     val cands = Seq((1L, 2L, "minhash")).toDF("id1", "id2", "stage")
     val lowCfg = cfg.copy(simThreshold = 0.0) // keep the pair regardless of score
     def est(packed: Boolean): Double =
       JaccardVerify.verify(cands, sigs, lowCfg, estimate = true,
           packedEstimate = packed)
         .select("jaccard").head().getDouble(0)
-    val full = sigs.as("a").join(sigs.as("b"),
+    val packed = sigs.as("a").join(sigs.as("b"),
         col("a.id") === 1L && col("b.id") === 2L)
-      .select(
-        SimilarityExpressions.minhashAgreement(col("a.minhash"), col("b.minhash"))
-          .as("f"),
-        SimilarityExpressions.minhashAgreementPacked(
-          col("a.minhash8"), col("b.minhash8"), cfg.numPerm).as("p"))
-      .head()
-    assert(est(packed = false) == full.getDouble(0),
-      "default estimate mode must report the unbiased full-lane estimator")
-    assert(est(packed = true) == full.getDouble(1),
-      "packedEstimate=true must report the 8-bit-lane estimator")
-    // the packed estimator's bias is one-sided: never below the full one
-    assert(full.getDouble(1) >= full.getDouble(0))
+      .select(SimilarityExpressions.minhashAgreementPacked(
+        col("a.minhash8"), col("b.minhash8"), cfg.numPerm))
+      .head().getDouble(0)
+    assert(est(packed = true) == packed)
+    assert(est(packed = false) == packed, "packedEstimate has no effect")
+    // against the full 64-bit lanes the 8-bit bias is one-sided: never below
+    val texts = docs.as[(Long, String)].collect().toMap
+    val (a, b) = (graft.functions.TextSignatures.compute(texts(1L), cfg),
+      graft.functions.TextSignatures.compute(texts(2L), cfg))
+    val full = a.minhash.zip(b.minhash).count { case (x, y) => x == y }.toDouble / cfg.numPerm
+    assert(packed >= full && packed - full <= 4.0 / cfg.numPerm, s"full=$full packed=$packed")
     sigs.unpersist()
   }
 
@@ -105,9 +107,9 @@ class VerifyModesSpec extends SparkSuite {
   test("SigParts: disabled families come back empty, enabled ones identical to full") {
     // MinHash is always computed: minhashOnly drops SimHash and spans
     val docs = toyDocs
-    val full = Signatures.compute(docs, cfg, emitShingles = false).collect()
+    val full = Signatures.compute(docs, cfg).collect()
       .map(r => r.getAs[Long]("id") -> r).toMap
-    val mh = Signatures.compute(docs, cfg, emitShingles = false,
+    val mh = Signatures.compute(docs, cfg,
       parts = graft.functions.TextSignatures.SigParts.minhashOnly).collect()
       .map(r => r.getAs[Long]("id") -> r).toMap
     for ((id, r) <- mh) {

@@ -6,10 +6,11 @@ import graft.corpus.PageCorpus
 import java.nio.file.Files
 
 /**
- * Job budget of the flagship pipeline: each Spark job is a fixed latency
- * (scheduling, task launch, a driver round trip) whatever its row count, so
- * the number of jobs a call launches is pinned from above. A checkpointed
- * run writes each stage once and builds its lineage in one more job.
+ * Job budget of the pipeline's entry calls: each Spark job is a fixed
+ * latency (scheduling, task launch, a driver round trip) whatever its row
+ * count, so the number of jobs a call launches is pinned from above. A
+ * checkpointed run writes each stage once and builds its lineage in one
+ * more job.
  */
 class JobBudgetSpec extends SparkSuite {
 
@@ -55,5 +56,27 @@ class JobBudgetSpec extends SparkSuite {
     val df = corpus
     val jobs = jobsOf(runAndCollect(new DedupPipeline(spark, cfg), df))
     assert(jobs <= 11, s"un-checkpointed run launched $jobs jobs")
+  }
+
+  test("runPairs stays within its job budget") {
+    val df = corpus
+    val jobs = jobsOf(new DedupPipeline(spark, cfg).runPairs(df).collect())
+    assert(jobs <= 4, s"runPairs launched $jobs jobs")
+  }
+
+  test("checkpointed runPairs and its resume stay within their job budgets") {
+    val dir = Files.createTempDirectory("graft_budget_pairs").toString
+    val df = corpus
+    val fresh = jobsOf(new DedupPipeline(spark, cfg, Some(dir)).runPairs(df).collect())
+    assert(fresh <= 7, s"checkpointed runPairs launched $fresh jobs")
+    // the completed pairs table short-circuits the whole job
+    val resumed = jobsOf(new DedupPipeline(spark, cfg, Some(dir)).runPairs(df).collect())
+    assert(resumed <= 3, s"runPairs resume launched $resumed jobs")
+  }
+
+  test("tokenJaccardPairs stays within its job budget") {
+    val docs = corpus.withColumnRenamed("id", "doc_id")
+    val jobs = jobsOf(graft.operators.Dedup.tokenJaccardPairs(docs, 0.2, ngram = 3).collect())
+    assert(jobs <= 13, s"tokenJaccardPairs launched $jobs jobs")
   }
 }
