@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 /**
  * Scaling-efficiency evidence (north rule: throughput scaling efficiency
  * >= 0.8 from N to 4N executors). No real cluster exists in this sandbox, so
  * per the driver protocol (BASELINE.md) the same job runs on the same input
  * at two parallelism levels — local[N] and local[4N] — in fresh sessions,
- * and efficiency = (T_N / T_4N) / 4. Writes BENCH/BASELINE.md.
+ * and efficiency = (T_N / T_4N) / 4. Prints its table to stdout only; the
+ * recorded N→4N evidence in BENCH/BASELINE.md is ScalingCluster's.
  *
  * Measurement hygiene: the sandbox host is time-shared and shows multi-x
  * run-to-run noise, so N / 4N sessions are INTERLEAVED (pairs sampled under
@@ -73,8 +72,6 @@ object Scaling {
          |isolation, so this UNDER-states true multi-executor scaling.
          |""".stripMargin
 
-    Files.createDirectories(Paths.get("BENCH"))
-    Files.writeString(Paths.get("BENCH/BASELINE.md"), md)
     println(md)
     println(f"""{"dps_n":$bestN%.1f,"dps_4n":$best4N%.1f,"efficiency":$efficiency%.3f}""")
   }

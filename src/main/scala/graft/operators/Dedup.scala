@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.config.GraftConfig
-import org.apache.spark.sql.DataFrame
+import graft.functions.TextSignatures
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /**
@@ -64,17 +65,37 @@ object Dedup {
   /** MinHash+LSH near-dup pairs over a (doc_id, text) table — the scale path. */
   def minhashDupPairs(docs: DataFrame, cfg: GraftConfig): DataFrame =
     ConfScope.smallInputScope(docs.sparkSession, docs) { CacheScope.run { s =>
-    // kept: consumed by the banding stage and twice by the verify joins
-    val sigs = s.keep(Signatures.compute(docs, cfg, "doc_id",
-        parts = graft.functions.TextSignatures.SigParts.minhashOnly))
-    val cands = CandidateGen.minhashStage(sigs, cfg)
-    val texts = docs.select(col("doc_id").cast("long").as("id"), col("text"))
-    val out = JaccardVerify.verify(cands.candidates, sigs, cfg, texts = Some(texts))
+    val r = signaturePairs(s, docs.select(col("doc_id").cast("long").as("id"),
+      col("text")), cfg, exact = true, useSimhash = false, useSpans = false)
+    val out = r.pairs
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
       .localCheckpoint()
-    BucketJoin.warnOversize(cands.oversizeLog)
+    BucketJoin.warnOversize(r.oversizeLog)
     out
     } }
+
+  /** The one signature-blocked pairs plan (reference `predict_pairs`,
+    * cli.py:429-524): input(id: long, text [, extra...]) → signatures of
+    * the families the enabled stages read, kept in `s` and lineage-cut
+    * (GraftSqlBridge.truncateLineage) → CandidateGen.all, where `extra`
+    * rides along for `pairFilter` → JaccardVerify.verify, exact or tier-1
+    * estimate. The caller reports the oversize log and materializes the
+    * pairs before `s` closes. */
+  private[graft] def signaturePairs(s: CacheScope, input: DataFrame, cfg: GraftConfig,
+      exact: Boolean, useMinhash: Boolean = true, useSimhash: Boolean = true,
+      useSpans: Boolean = true, extra: Seq[String] = Nil,
+      pairFilter: Option[CandidateGen.PairFilter] = None): BucketJoin.Result = {
+    val computed = Signatures.compute(input, cfg,
+      parts = TextSignatures.SigParts(simhash = useSimhash, spans = useSpans))
+    val sigs = GraftSqlBridge.truncateLineageLocal(s.keep(
+      if (extra.isEmpty) computed
+      else computed.join(input.select(("id" +: extra).map(col): _*), "id")))
+    val cands = CandidateGen.all(sigs, cfg, useMinhash, useSimhash, useSpans, extra, pairFilter)
+    BucketJoin.Result(
+      JaccardVerify.verify(cands.candidates, sigs, cfg, estimate = !exact,
+        texts = Option.when(exact)(input.select(col("id"), col("text")))),
+      cands.oversizeLog)
+  }
 
   /**
    * Embedding-cosine near-dup pairs over a (vec_id, embedding Array[Float])

@@ -28,25 +28,28 @@ object Linkage {
       idCol: String = "id", textCol: String = "text",
       sourceCol: String = "source"): DataFrame =
     ConfScope.smallInputScope(records.sparkSession, records) { CacheScope.run { s =>
-    val src = records.select(col(idCol).cast("long").as("id"),
-      col(sourceCol).as("source"))
-    // lineage-cut after keep: blocking + verify re-analyze this subtree
-    // per consumer otherwise (GraftSqlBridge.truncateLineage scaladoc)
-    val sigs = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(s.keep(
-      Signatures.compute(records, cfg, idCol, textCol)
-        .join(src, "id")))
+    val input = records.select(col(idCol).cast("long").as("id"),
+      col(textCol).as("text"), col(sourceCol).as("source"))
     // source-disjointness evaluated INSIDE the bucket join (pairFilter hook):
     // intra-source collisions — ~half of all pairs on balanced sources —
     // never reach the pair exchange or the verify stage. Star pairs from
-    // oversize buckets bypass the filter, so the post-verify source filter
-    // below stays as the correctness guarantee.
+    // oversize buckets bypass the filter, so orient's source filter stays
+    // as the correctness guarantee.
     val crossSource: CandidateGen.PairFilter = (a, b) =>
       col(s"$a.source") =!= col(s"$b.source")
-    val cands = CandidateGen.all(sigs, cfg,
+    val r = Dedup.signaturePairs(s, input, cfg, exact = true,
       extra = Seq("source"), pairFilter = Some(crossSource))
-    val texts = records.select(col(idCol).cast("long").as("id"),
-      col(textCol).as("text"))
-    val out = JaccardVerify.verify(cands.candidates, sigs, cfg, texts = Some(texts))
+    val out = orient(r.pairs, input, leftSource, "jaccard").localCheckpoint()
+    BucketJoin.warnOversize(r.oversizeLog)
+    out
+    } }
+
+  /** pairs(id1, id2, scoreCol) → the cross-source pairs as
+    * (left_id, right_id, scoreCol), whatever the id order;
+    * `src(id, source)` names each id's source. */
+  private[graft] def orient(pairs: DataFrame, src: DataFrame,
+      leftSource: String, scoreCol: String): DataFrame =
+    pairs
       .join(src.select(col("id").as("id1"), col("source").as("src1")), "id1")
       .join(src.select(col("id").as("id2"), col("source").as("src2")), "id2")
       .filter(col("src1") =!= col("src2"))
@@ -54,10 +57,5 @@ object Linkage {
       .select(
         when(col("src1") === leftSource, col("id1")).otherwise(col("id2")).as("left_id"),
         when(col("src1") === leftSource, col("id2")).otherwise(col("id1")).as("right_id"),
-        col("jaccard"))
-      .filter(col("left_id").isNotNull && col("right_id").isNotNull)
-      .localCheckpoint()
-    BucketJoin.warnOversize(cands.oversizeLog)
-    out
-    } }
+        col(scoreCol))
 }

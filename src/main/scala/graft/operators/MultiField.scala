@@ -181,15 +181,7 @@ object MultiField {
       extra = Seq(sourceCol), pairFilter = Some(crossSource))
     val src = records.select(col(idCol).cast("long").as("id"),
       col(sourceCol).as("source"))
-    plan
-      .join(src.select(col("id").as("id1"), col("source").as("src1")), "id1")
-      .join(src.select(col("id").as("id2"), col("source").as("src2")), "id2")
-      .filter(col("src1") =!= col("src2"))
-      .filter(col("src1") === leftSource || col("src2") === leftSource)
-      .select(
-        when(col("src1") === leftSource, col("id1")).otherwise(col("id2")).as("left_id"),
-        when(col("src1") === leftSource, col("id2")).otherwise(col("id1")).as("right_id"),
-        col("score"))
+    Linkage.orient(plan, src, leftSource, "score")
       .localCheckpoint()
     } }
 

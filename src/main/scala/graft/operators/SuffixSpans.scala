@@ -48,10 +48,9 @@ object SuffixSpans {
     CacheScope.run { s =>
     val spark = docs.sparkSession
 
-    val winnowUdf = udf { (text: String) =>
-      if (text == null) Array.empty[Long]
-      else TextSignatures.winnow(TextSignatures.normalize(text),
-        cfg.spanGramLen, cfg.winnowWindow)
+    // over `ntext`, already normalized (normalize is idempotent)
+    val winnowUdf = udf { (ntext: String) =>
+      TextSignatures.winnow(ntext.toCharArray, cfg.spanGramLen, cfg.winnowWindow)
     }
     val normUdf = udf { (text: String) =>
       if (text == null) "" else new String(TextSignatures.normalize(text))

@@ -27,6 +27,9 @@ import org.apache.spark.sql.types.MetadataBuilder
  * `checkpointDir/lineage` with each stage table's per-partition row counts
  * (spark_partition_id aggregation); oversized blocking buckets (skew cap
  * hits) go to `checkpointDir/oversize` — no silent caps.
+ *
+ * Both entry points are eager and release their caches (CacheScope) on
+ * return; a Result frame read afterwards recomputes (see [[Result]]).
  */
 final class DedupPipeline(
     spark: SparkSession,
@@ -38,7 +41,7 @@ final class DedupPipeline(
 
   /** All stage/lineage/metrics IO goes through the TableIO seam: explicit
     * `tableIO` wins; else `checkpointDir` selects path-per-table parquet;
-    * else stages stay in-session (persist, no resume). Swapping in an
+    * else stages stay in-session (no resume). Swapping in an
     * Iceberg-backed TableIO touches nothing below this line. */
   private val io: Option[graft.io.TableIO] =
     tableIO.orElse(checkpointDir.map(d => new graft.io.ParquetTables(spark, d)))
@@ -82,20 +85,15 @@ final class DedupPipeline(
     else pages
 
   /** pages(id, text, ...) → (id, cluster) for every input page. */
-  def run(pages: DataFrame): Result = planningScope(pages) {
+  def run(pages: DataFrame): Result = planningScope(pages) { CacheScope.run { s =>
     val input = salted(pages)
-    // signatures feed 3 blocking stages + the tier-1 verify join → persisted
-    val sigsCached = stage("signatures", persist = true, versioned = true) {
-      Signatures.compute(input, cfg)
-    }
-    // lineage cut: candidates/verified/CC all build on signatures, and each
-    // would re-analyze its full subtree (quadratic driver time in stage
-    // depth — see GraftSqlBridge.truncateLineage). The cut reads the cache
-    // (or the checkpoint parquet, already a leaf) exactly as before;
-    // Result.signatures keeps the cached handle so unpersist() works.
+    val computed = stage("signatures", versioned = true)(Signatures.compute(input, cfg))
+    // signatures feed 3 blocking stages + the tier-1 verify join: kept for
+    // the call and lineage-cut (GraftSqlBridge.truncateLineage), unless the
+    // checkpoint Parquet is already the leaf
     val sigs =
-      if (io.isEmpty) org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(sigsCached)
-      else sigsCached
+      if (io.isEmpty) org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(s.keep(computed))
+      else computed
     // candidates/verified stay UN-persisted: each has one logical consumer,
     // and the one subtree Catalyst's broadcast chaining really does
     // re-execute (tier-1 survivors, which feed BOTH tier-2 joins) is cut
@@ -117,10 +115,10 @@ final class DedupPipeline(
       val comps = ConnectedComponents.components(verified)
       Clustering.assignAll(pages.select("id"), comps)
     }
-    lineage("signatures" -> sigsCached, "candidates" -> candStage,
+    lineage("signatures" -> sigs, "candidates" -> candStage,
       "verified" -> verified, "clusters" -> assignments)
-    Result(sigsCached, candStage, verified, assignments)
-  }
+    Result(sigs, candStage, verified, assignments)
+  } }
 
   /**
    * Pairs-only mode — the work-equivalent of the reference's `predict_pairs`
@@ -153,39 +151,19 @@ final class DedupPipeline(
     // localCheckpoint first (that would run the verify job twice).
     // Versioned: estimate-mode jaccard is format-dependent (see stage()).
     val out = stage("pairs", versioned = true) {
-      runPairsPlan(s, pages, exact, useMinhash, useSimhash, useSpans)
+      val r = Dedup.signaturePairs(s, salted(pages), cfg, exact,
+        useMinhash, useSimhash, useSpans)
+      // no silent caps in pairs mode either: skew-cap hits land in the same
+      // oversize sink run() uses (no-op without a checkpoint dir)
+      sideSink("oversize", r.oversizeLog)
+      r.pairs
     }
     lineage("pairs" -> out)
     if (io.isEmpty) out.localCheckpoint() else out
   } }
 
-  private def runPairsPlan(s: CacheScope, pages: DataFrame, exact: Boolean,
-      useMinhash: Boolean, useSimhash: Boolean, useSpans: Boolean): DataFrame = {
-    val input = salted(pages)
-    val parts = TextSignatures.SigParts(
-      simhash = useSimhash, spans = useSpans)
-    // same lineage cut as run(): blocking + verify each re-analyze the
-    // signature subtree otherwise (see GraftSqlBridge.truncateLineage)
-    val sigs = org.apache.spark.sql.GraftSqlBridge.truncateLineageLocal(
-      s.keep(Signatures.compute(input, cfg, parts = parts)))
-    val r = CandidateGen.all(sigs, cfg,
-      useMinhash = useMinhash, useSimhash = useSimhash, useSpans = useSpans)
-    // no silent caps in pairs mode either: skew-cap hits land in the same
-    // oversize sink run() uses (no-op without a checkpoint dir)
-    sideSink("oversize", r.oversizeLog)
-    JaccardVerify.verify(r.candidates, sigs, cfg, estimate = !exact,
-      texts = if (exact) Some(input.select(col("id"), col("text"))) else None)
-  }
-
-  /** Run a stage, or load it from checkpoint if already completed.
-    *
-    * Without a checkpoint dir, a stage with `persist = true` is cached
-    * MEMORY_AND_DISK: used for outputs with >= 2 downstream consumers,
-    * where Catalyst would otherwise re-execute the whole upstream plan —
-    * including the per-document signature UDF — once per consumer. At
-    * cluster scale the checkpoint Parquet plays this role. Single-consumer
-    * stages are left lazy (persisting them costs a full extra
-    * materialization for nothing).
+  /** Run a stage, or load it from checkpoint if already completed. Without
+    * a checkpoint dir the stage is the body's lazy frame.
     *
     * `versioned = true`: the stage's VALUES depend on the signature hash
     * family (the signatures table; the estimate-mode pairs table, whose
@@ -196,12 +174,10 @@ final class DedupPipeline(
     * finding). A checkpoint from before schema stamps is checked through its
     * `<name>_format` table; with neither, the error names the stage
     * directory to delete to recompute. */
-  private def stage(name: String, persist: Boolean = false,
-      versioned: Boolean = false)(body: => DataFrame): DataFrame =
+  private def stage(name: String, versioned: Boolean = false)(
+      body: => DataFrame): DataFrame =
     io match {
-      case None =>
-        if (persist) body.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else body
+      case None => body
       case Some(t) if versioned =>
         val fmt = TextSignatures.formatVersion.toLong
         val out = t.checkpoint(name) {
@@ -249,6 +225,10 @@ object DedupPipeline {
     * column. */
   private[pipeline] val FormatKey = "graft_format"
 
+  /** `run`'s stage tables. With a checkpoint each is read from its stage
+    * table. Without one, `assignments` reads the materialized components,
+    * and `signatures` (uncached: `unpersist()` is a no-op), `candidates` and
+    * `verified` recompute from the pages. */
   final case class Result(
       signatures: DataFrame,
       candidates: DataFrame,

@@ -12,6 +12,21 @@ class TextSignaturesSpec extends AnyFunSuite {
     assert(new String(TextSignatures.normalize("   ")) == "")
   }
 
+  test("normalize is idempotent: span winnowing reads normalized text as is") {
+    // per char: lowercasing a lowercased char is a no-op, and lowercasing
+    // never turns a non-whitespace char into whitespace
+    (Char.MinValue to Char.MaxValue).filterNot(Character.isWhitespace(_)).foreach { c =>
+      val l = Character.toLowerCase(c)
+      assert(Character.toLowerCase(l) == l && !Character.isWhitespace(l), c.toInt)
+    }
+    Seq("  Hello\t\n WORLD  ", "", "   ", "alpha-beta gamma, delta!",
+      "tab\tseparated\nlines\r\n  here", "non\u00a0breaking space",
+      "\u0130stanbul \u03a3\u039f\u03a3 \u212a").foreach { t =>
+      val once = TextSignatures.normalize(t)
+      assert(TextSignatures.normalize(new String(once)).sameElements(once), t)
+    }
+  }
+
   test("shingleSet is sorted, distinct, and edit-sensitive") {
     val a = TextSignatures.shingleSet("abcdefgh".toCharArray, 5)
     assert(a.length == 4) // abcde bcdef cdefg defgh

@@ -45,4 +45,17 @@ class CacheLeakSpec extends SparkSuite {
       c.getClass.getSimpleName == "SparkNumberFormatException"), e)
     assert(cacheEmpty, "a failed job left cache entries")
   }
+
+  test("DedupPipeline.run releases its signatures, with and without a checkpoint") {
+    val pages = graft.corpus.PageCorpus.generate(spark, 200, GraftConfig.default.seed)._1.toDF()
+    val dir = java.nio.file.Files.createTempDirectory("graft_leak").toString
+    Seq(None, Some(dir)).foreach { ckpt =>
+      spark.catalog.clearCache()
+      val r = new graft.pipeline.DedupPipeline(spark, GraftConfig.default, ckpt).run(pages)
+      assert(r.assignments.count() == 200)
+      assert(cacheEmpty, s"run left its signatures cached (checkpoint $ckpt)")
+      // a frame read after the call recomputes from the pages
+      assert(r.verified.count() > 0)
+    }
+  }
 }

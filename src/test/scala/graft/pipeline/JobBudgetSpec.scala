@@ -79,4 +79,18 @@ class JobBudgetSpec extends SparkSuite {
     val jobs = jobsOf(graft.operators.Dedup.tokenJaccardPairs(docs, 0.2, ngram = 3).collect())
     assert(jobs <= 13, s"tokenJaccardPairs launched $jobs jobs")
   }
+
+  test("minhashDupPairs stays within its job budget") {
+    val docs = corpus.withColumnRenamed("id", "doc_id")
+    val jobs = jobsOf(graft.operators.Dedup.minhashDupPairs(docs, cfg).collect())
+    assert(jobs <= 10, s"minhashDupPairs launched $jobs jobs")
+  }
+
+  test("linkagePairs stays within its job budget") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, when}
+    val tagged = corpus.withColumn("source",
+      when(pmod(col("id"), lit(2)) === 0, "left").otherwise("right"))
+    val jobs = jobsOf(graft.operators.Linkage.linkagePairs(tagged, cfg, "left").collect())
+    assert(jobs <= 13, s"linkagePairs launched $jobs jobs")
+  }
 }
