@@ -112,7 +112,9 @@ object ConfScope {
     * [[smallInputScope]] width. An input of unknown size also runs with AQE
     * off — the regime measured faster at every local size — but at the
     * session width, since there is no size to right-size to and counting
-    * it would cost a job. */
+    * it would cost a job. Callers: DedupPipeline (every entry call) and
+    * Dedup.tokenJaccardPairs, whose SetSimJoin stages are planned up front
+    * instead of re-planned between stages. */
   def pipelineScope[T](spark: SparkSession, pages: DataFrame)(body: => T): T =
     sizeOf(spark, pages) match {
       case Unknown => aqeOff(spark)(body)

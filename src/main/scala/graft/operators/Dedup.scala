@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.config.GraftConfig
+import graft.expressions.SimilarityExpressions
 import graft.functions.TextSignatures
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
@@ -42,25 +43,18 @@ object Dedup {
    * web scale instead of a cartesian product.
    */
   def tokenJaccardPairs(docs: DataFrame, threshold: Double, ngram: Int = 1): DataFrame =
-    ConfScope.smallInputScope(docs.sparkSession, docs) {
-    // n-gram identity = hash of the n consecutive TOKEN HASHES, not of the
-    // joined string: set counts are unchanged (modulo 64-bit collisions, the
-    // engine-wide convention), and the projection is O(tokens) — the
-    // string-concat form (slice + concat_ws per position) copied O(tokens²)
-    // chars per document and was the hottest expression in the whole join.
-    val toks = split(lower(trim(col("text"))), "\\s+")
-    val th = docs.select(col("doc_id").as("id"),
-      transform(toks, t => xxhash64(t)).as("th"))
-    val grams =
-      if (ngram == 1) array_distinct(col("th"))
-      else when(size(col("th")) >= ngram,
-        array_distinct(transform(
-          sequence(lit(1), size(col("th")) - (ngram - 1)),
-          i => xxhash64((0 until ngram).map(j => element_at(col("th"), i + j)): _*))))
-        .otherwise(array().cast("array<long>"))
-    val d = th.select(col("id"), grams.as("g"))
-    SetSimJoin.jaccardSelfJoin(d, threshold)
+    ConfScope.pipelineScope(docs.sparkSession, docs) {
+      SetSimJoin.jaccardSelfJoin(wordNgrams(docs, ngram), threshold)
     }
+
+  /** (id, g): each doc's sorted distinct word n-gram hashes. An n-gram's
+    * identity is the hash of its n consecutive TOKEN HASHES, not of the
+    * joined string: set counts are unchanged (modulo 64-bit collisions, the
+    * engine-wide convention), and one kernel call per doc builds the set
+    * (SimilarityExpressions.wordNgramHashes). */
+  private[graft] def wordNgrams(docs: DataFrame, ngram: Int): DataFrame =
+    docs.select(col("doc_id").as("id"),
+      SimilarityExpressions.wordNgramHashes(col("text"), ngram).as("g"))
 
   /** MinHash+LSH near-dup pairs over a (doc_id, text) table — the scale path. */
   def minhashDupPairs(docs: DataFrame, cfg: GraftConfig): DataFrame =

@@ -33,10 +33,10 @@ import org.apache.spark.sql.functions._
 object SetSimJoin {
 
   /**
-   * d: DataFrame(id: any integral, g: Array[String]) — g must be distinct
-   * (use array_distinct upstream). Returns (id1, id2, jaccard) with
-   * id1 < id2 and jaccard >= threshold, jaccard rounded to 6 places
-   * (byte-compatible with the brute-force oracle form).
+   * d: DataFrame(id: any integral, g: array<string>, or array<bigint>
+   * token hashes; prefixTable dedups and sorts it). Returns (id1, id2,
+   * jaccard) with id1 < id2 and jaccard >= threshold, jaccard rounded to
+   * 6 places (byte-compatible with the brute-force oracle form).
    */
   def jaccardSelfJoin(d0: DataFrame, threshold: Double): DataFrame =
     CacheScope.run { s =>
@@ -59,9 +59,9 @@ object SetSimJoin {
    * was persisted for the same reason: consumed by both sides of the
    * candidate self-join).
    */
-  private[operators] final case class PrefixTable(d: DataFrame, sorted: DataFrame)
+  private[graft] final case class PrefixTable(d: DataFrame, sorted: DataFrame)
 
-  private[operators] def prefixTable(s: CacheScope, d0: DataFrame,
+  private[graft] def prefixTable(s: CacheScope, d0: DataFrame,
       extra: Seq[String] = Nil): PrefixTable = {
     extra.foreach(c => require(d0.columns.contains(c), s"extra column '$c' missing"))
     // Tokens ride as 64-bit hashes end to end (the engine-wide convention):
@@ -83,7 +83,7 @@ object SetSimJoin {
     // measured as ~4x the cost of every join stage combined. At cluster
     // scale this is the stage checkpoint.
     val d = s.keep(d0.select(col("id") +: extra.map(col) :+
-      array_sort(array_distinct(hashed)).as("h"): _*))
+      sort_array(array_distinct(hashed)).as("h"): _*))
 
     // 1 shuffle: global token order key = (document frequency, token hash).
     // Rarest-first prefixes minimize join fan-out: a token with df=k
@@ -99,7 +99,7 @@ object SetSimJoin {
     // estimate job.
     val sorted = s.keep(toks.join(dfreq, "tok")
       .groupBy("id")
-      .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("st"),
+      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("st"),
         (count(lit(1)).as("n") +: extra.map(c => first(col(c)).as(c))): _*))
     PrefixTable(d, sorted)
   }
@@ -109,7 +109,7 @@ object SetSimJoin {
     * `extra` columns ride along on the prefix rows so `pairFilter(a, b)`
     * (MultiField linkage's cross-source test) prunes pairs inside the
     * candidate join, before the pair-distinct exchange. */
-  private[operators] def joinFromTable(pt: PrefixTable, threshold: Double,
+  private[graft] def joinFromTable(pt: PrefixTable, threshold: Double,
       extra: Seq[String] = Nil,
       pairFilter: Option[(String, String) => Column] = None): DataFrame = {
     require(threshold > 0 && threshold <= 1, "0 < threshold <= 1")

@@ -97,7 +97,8 @@ class PlanSpec extends SparkSuite {
   }
 
   /** (kernel object, inside a WholeStageCodegenExec?) per plan node that
-    * calls a graft.expressions kernel, descending into AQE query stages. */
+    * calls a graft.expressions kernel, descending into AQE query stages and
+    * the plans of cached relations. */
   private def kernelCalls(p: org.apache.spark.sql.execution.SparkPlan,
       inCodegen: Boolean): Seq[(String, Boolean)] = {
     import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
@@ -111,9 +112,38 @@ class PlanSpec extends SparkSuite {
       case q: adaptive.QueryStageExec => Seq(q.plan -> false)
       case w: WholeStageCodegenExec => Seq(w.child -> true)
       case i: InputAdapter => Seq(i.child -> false)
+      case m: columnar.InMemoryTableScanExec => Seq(m.relation.cachedPlan -> false)
       case _ => p.children.map(_ -> inCodegen)
     }
     here ++ kids.flatMap { case (c, f) => kernelCalls(c, f) }
+  }
+
+  test("tokenJaccardPairs: the gram kernel runs in codegen, no lambda in any plan") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    // planned as tokenJaccardPairs plans it (the pipeline regime), lazy:
+    // the public form's localCheckpoint would hide the join plan
+    val docs = spark.read.parquet(docsPath)
+    val ep = ConfScope.pipelineScope(spark, docs) {
+      CacheScope.run { s =>
+        val pairs = SetSimJoin.joinFromTable(
+          SetSimJoin.prefixTable(s, Dedup.wordNgrams(docs, 3)), 0.2)
+        pairs.collect()
+        pairs.queryExecution.executedPlan
+      }
+    }
+    val calls = kernelCalls(ep, inCodegen = false)
+    assert(calls.map(_._1).toSet == Set("WordNgramHashes", "JaccardSorted"), calls)
+    assert(calls.forall(_._2), s"kernel call outside whole-stage codegen: $calls")
+    // transform(...) / array_sort(...) evaluate an interpreted lambda per
+    // element (CodegenFallback): none may remain, cached plans included
+    def lambdas(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+      p.expressions.flatMap(_.collect { case h: HigherOrderFunction => h.prettyName }) ++
+        (p match {
+          case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+            Seq(m.relation.cachedPlan)
+          case _ => p.children
+        }).flatMap(lambdas)
+    assert(lambdas(ep).isEmpty, s"lambda functions in the plan: ${lambdas(ep)}\n$ep")
   }
 
   test("cosine LSH pairs + pairs-mode plans contain no cartesian product") {

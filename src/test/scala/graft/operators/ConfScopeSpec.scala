@@ -76,6 +76,51 @@ class ConfScopeSpec extends SparkSuite {
     } finally spark.conf.set(Aqe, before._1)
   }
 
+  /** Whether each SQL execution started by `body` was planned adaptively.
+    * Listener events arrive in order, so once a marker job started after
+    * `body` is seen, every execution of `body` is. */
+  private def adaptiveExecutions(body: => Unit): Seq[Boolean] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val marker = s"aqe-marker-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          seen.add(s.sparkPlanInfo.nodeName == "AdaptiveSparkPlan")
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          done.countDown()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+    } finally sc.removeSparkListener(l)
+    seen.toArray.map(_.asInstanceOf[Boolean]).toSeq
+  }
+
+  test("tokenJaccardPairs on a local input runs AQE-off, then restores the prior AQE state") {
+    val docs = spark.range(60).selectExpr("id AS doc_id",
+      "concat_ws(' ', 'w' || (id % 7), 'w' || (id % 5), 'w' || (id % 3), 'w' || (id % 2)) AS text")
+    val prior = spark.conf.getAll.get(Aqe)
+    try for (state <- Seq(Some("true"), None)) {
+      state.fold(spark.conf.unset(Aqe))(spark.conf.set(Aqe, _))
+      // the call is eager (its result is checkpointed): every execution it
+      // starts runs inside its scope
+      val adaptive = adaptiveExecutions(Dedup.tokenJaccardPairs(docs, 0.3, ngram = 2))
+      assert(adaptive.nonEmpty && !adaptive.contains(true),
+        s"AQE state $state: adaptive executions $adaptive")
+      assert(spark.conf.getAll.get(Aqe) == state, s"AQE state $state not restored")
+    } finally prior.fold(spark.conf.unset(Aqe))(spark.conf.set(Aqe, _))
+  }
+
   test("nested scopes (pipeline -> spans) restore each level") {
     ConfScope.withConfs(spark, Aqe -> "true", Width -> "32") {
       ConfScope.pipelineScope(spark, statsless) {

@@ -91,10 +91,22 @@ class SetSimJoinSpec extends SparkSuite {
       (_, i) => concat_ws(" ", slice(toks, i + 1, lit(3)))))
     val d = docs.select(col("doc_id").as("id"), grams.as("g"))
 
-    val got = Dedup.tokenJaccardPairs(docs, 0.2, ngram = 3)
-      .as[(Long, Long, Double)].collect().toSet
+    // count each doc's evaluations in tasks (above a repartition, so the
+    // optimizer cannot fold the projection into the local relation)
+    val evals = spark.sparkContext.longAccumulator
+    val counted = docs.repartition(3).select(col("doc_id"),
+      udf((t: String) => { evals.add(1); t }).apply(col("text")).as("text"))
+    val (got, warns) = warnings("org.apache.spark.storage.BlockManager")(
+      Dedup.tokenJaccardPairs(counted, 0.2, ngram = 3).as[(Long, Long, Double)].collect().toSet)
     val want = brute(d, 0.2)
     assert(got == want)
     assert(want.nonEmpty)
+    // the kept gram table is computed once per doc. When two concurrent
+    // stages ask for one of its partitions before it is stored, the second
+    // task waits on the first's block lock, then logs "already exists" and
+    // reads the stored block: a re-put notice, not a second computation
+    assert(evals.value == 60, s"gram sets computed ${evals.value} times for 60 docs")
+    assert(warns.forall(_.matches(
+      "Block rdd_\\d+_\\d+ already exists on this machine; not re-adding it")), warns)
   }
 }
