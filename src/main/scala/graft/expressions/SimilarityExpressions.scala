@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{lit, lower, split, trim}
 import org.apache.spark.sql.{GraftSqlBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
@@ -37,18 +37,18 @@ object SimilarityExpressions {
 
   /** The sorted distinct word n-gram hashes of `text`, as an
     * `array<bigint>` (the SetSimJoin gram set of Dedup.tokenJaccardPairs).
-    * The values are those of the Catalyst chain
-    * `split(lower(trim(text)), "\\s+")` → `xxhash64` per token → per
-    * n-gram `xxhash64` of the n token hashes (n = 1: the token hashes
-    * themselves) → `array_distinct`, which evaluates an interpreted lambda
-    * per token and per gram; here one codegen'd call walks the bytes once.
-    * Null text gives null for n = 1 and an empty array otherwise, as the
-    * chain did. */
+    * Tokens are the built-in `split(lower(trim(text)), "\\s+")`; the kernel
+    * hashes each token with `xxhash64`, each run of n token hashes with
+    * `xxhash64` again (n = 1: the token hashes themselves), and sorts and
+    * dedups the grams in the same call, where the `transform` and
+    * `array_distinct` chain it replaces evaluated an interpreted lambda per
+    * token and per gram. Null text gives null for n = 1 and an empty array
+    * otherwise, as the chain did. */
   def wordNgramHashes(text: Column, n: Int): Column = {
     require(n >= 1, "n >= 1")
     ExpressionUtils.column(StaticInvoke(WordNgramHashes.getClass, longs, "compute",
-      Seq(ExpressionUtils.expression(text), ExpressionUtils.expression(lit(n))),
-      inputTypes = Seq(StringType, IntegerType), propagateNull = false))
+      Seq(split(lower(trim(text)), "\\s+"), lit(n)).map(ExpressionUtils.expression),
+      inputTypes = Seq(ArrayType(StringType), IntegerType), propagateNull = false))
   }
 
   /** Exact Jaccard of two SORTED distinct long arrays (merge-intersect). */
@@ -98,90 +98,24 @@ object JaccardSorted {
 }
 
 object WordNgramHashes {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Lower,
-    StringSplit, StringTrim, UnsafeArrayData, XXH64}
+  import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
   import org.apache.spark.unsafe.Platform
-  import org.apache.spark.unsafe.types.UTF8String
 
   /** `xxhash64`'s seed. */
   private val Seed = 42L
 
-  /** Per-thread scratch: the lowercased bytes and the token/gram hashes. */
-  private final class S {
-    var bytes: Array[Byte] = new Array[Byte](8192)
-    var hs: Array[Long] = new Array[Long](2048)
-  }
-  private val tl: ThreadLocal[S] = ThreadLocal.withInitial(() => new S)
-
-  /** Java's regex `\s`: space and the bytes 0x09-0x0D (\t \n VT \f \r). */
-  @inline private def isSpace(b: Byte): Boolean =
-    b == ' ' || (b >= '\t' && b <= '\r')
-
-  private def push(sc: S, nt: Int, h: Long): Int = {
-    if (nt == sc.hs.length) sc.hs = java.util.Arrays.copyOf(sc.hs, nt * 2)
-    sc.hs(nt) = h
-    nt + 1
-  }
-
-  /** Token hashes of ASCII text into `sc.hs`, returning their count, or -1
-    * at the first non-ASCII byte. `trim` strips ASCII spaces only; `split`
-    * with limit -1 keeps the empty tokens a leading or trailing non-space
-    * whitespace run leaves (an empty string is one empty token). */
-  private def asciiTokens(u: UTF8String, sc: S): Int = {
-    var lo = 0
-    var hi = u.numBytes
-    while (lo < hi && u.getByte(lo) == ' ') lo += 1
-    while (hi > lo && u.getByte(hi - 1) == ' ') hi -= 1
-    if (sc.bytes.length < hi - lo)
-      sc.bytes = new Array[Byte](Integer.highestOneBit(hi - lo - 1) << 1)
-    val b = sc.bytes
-    var nt = 0
-    var start = 0
-    var j = 0
-    var i = lo
-    while (i < hi) {
-      val c = u.getByte(i)
-      if (c < 0) return -1
-      if (isSpace(c)) {
-        nt = push(sc, nt, XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET + start,
-          j - start, Seed))
-        i += 1
-        while (i < hi && isSpace(u.getByte(i))) i += 1
-        start = j
-      } else {
-        b(j) = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
-        j += 1
-        i += 1
-      }
-    }
-    push(sc, nt, XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET + start, j - start, Seed))
-  }
-
-  /** Token hashes of any text via the built-in expressions themselves,
-    * evaluated interpreted (their case mapping and regex split are what the
-    * ASCII walk reproduces). Built per call so each evaluation reads the
-    * current SQL conf. */
-  private def builtinTokens(u: UTF8String, sc: S): Int = {
-    val toks = StringSplit(Lower(StringTrim(BoundReference(0, StringType, nullable = false))),
-      Literal("\\s+"), Literal(-1)).eval(InternalRow(u)).asInstanceOf[ArrayData]
-    var nt = 0
-    while (nt < toks.numElements()) nt = push(sc, nt, XXH64.hashUTF8String(toks.getUTF8String(nt), Seed))
-    nt
-  }
-
   /** Static kernel shared by interpreted eval and generated code. */
-  def compute(text: UTF8String, n: Int): ArrayData = {
-    if (text == null) return if (n == 1) null else UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-    val sc = tl.get()
-    var nt = asciiTokens(text, sc)
-    if (nt < 0) nt = builtinTokens(text, sc)
-    val hs = sc.hs
+  def compute(tokens: ArrayData, n: Int): ArrayData = {
+    if (tokens == null) return if (n == 1) null else UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+    val nt = tokens.numElements()
+    val hs = new Array[Long](nt)
+    var i = 0
+    while (i < nt) { hs(i) = XXH64.hashUTF8String(tokens.getUTF8String(i), Seed); i += 1 }
     // gram i = xxhash64(t_i, ..., t_{i+n-1}) over the token hashes; it
     // overwrites hs(i), which no later gram reads
     val m = if (n == 1) nt else math.max(nt - n + 1, 0)
     if (n > 1) {
-      var i = 0
+      i = 0
       while (i < m) {
         var h = Seed
         var j = 0
@@ -192,7 +126,7 @@ object WordNgramHashes {
     }
     java.util.Arrays.sort(hs, 0, m)
     var k = 0
-    var i = 0
+    i = 0
     while (i < m) {
       if (k == 0 || hs(i) != hs(k - 1)) { hs(k) = hs(i); k += 1 }
       i += 1

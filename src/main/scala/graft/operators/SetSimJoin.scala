@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
 object SetSimJoin {
 
   /**
-   * d: DataFrame(id: any integral, g: array<string>, or array<bigint>
-   * token hashes; prefixTable dedups and sorts it). Returns (id1, id2,
+   * d: DataFrame(id: any integral, g: array<string>, or the SORTED
+   * DISTINCT array<bigint> of token hashes, read as is). Returns (id1, id2,
    * jaccard) with id1 < id2 and jaccard >= threshold, jaccard rounded to
    * 6 places (byte-compatible with the brute-force oracle form).
    */
@@ -69,21 +69,21 @@ object SetSimJoin {
     // the strings modulo 64-bit collisions, the shuffle payload is 8
     // bytes/token instead of a string, and verification runs in the
     // codegen'd merge kernel (jaccardSorted) instead of building a hash
-    // set per pair. Callers that already hash (array<long> input) skip the
-    // re-hash — the tokenize/gram projection is the hottest part of the
-    // whole join and must not be paid twice.
-    val hashed = d0.schema("g").dataType match {
+    // set per pair. Callers that already hash (array<long> input) hand in
+    // the sorted distinct set and it passes through as is — the gram
+    // projection is the hottest part of the whole join and must not be
+    // paid twice.
+    val h = d0.schema("g").dataType match {
       case org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.LongType, _) => col("g")
-      case _ => transform(col("g"), t => xxhash64(t))
+      case _ => sort_array(array_distinct(transform(col("g"), t => xxhash64(t))))
     }
     // PERSISTED: the hashed-set table is consumed 4x (df count, per-id
     // sort, and both sides of the verify join) — without this the upstream
     // scan + tokenize + gram projection re-executes per consumer, which
     // measured as ~4x the cost of every join stage combined. At cluster
     // scale this is the stage checkpoint.
-    val d = s.keep(d0.select(col("id") +: extra.map(col) :+
-      sort_array(array_distinct(hashed)).as("h"): _*))
+    val d = s.keep(d0.select(col("id") +: extra.map(col) :+ h.as("h"): _*))
 
     // 1 shuffle: global token order key = (document frequency, token hash).
     // Rarest-first prefixes minimize join fan-out: a token with df=k

@@ -49,7 +49,7 @@ class WordNgramHashesSpec extends SparkSuite {
     val rnd = new scala.util.Random(20261020L)
     (0 until n).map { _ =>
       val len = rnd.nextInt(24)
-      // a third of the strings stay ASCII, to exercise the byte walk
+      // a third of the strings stay ASCII
       val p = if (rnd.nextInt(3) == 0) pool.filter(_ < 128) else pool
       (0 until len).map(_ => p(rnd.nextInt(p.length))).mkString
     }

@@ -72,41 +72,66 @@ class SetSimJoinSpec extends SparkSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested-loop join in plan")
   }
 
-  test("tokenJaccardPairs (trigram path) matches brute force on text") {
-    val docs = (0L until 60L).map { i =>
-      val rnd = new scala.util.Random(i * 31 + 7)
-      val words = (0 until (6 + rnd.nextInt(10)))
-        .map(_ => s"w${rnd.nextInt(25)}")
-      val text = if (i % 4 == 3) {
-        val prev = new scala.util.Random((i - 1) * 31 + 7)
-        ((0 until (6 + prev.nextInt(10))).map(_ => s"w${prev.nextInt(25)}") :+ "zz")
-          .mkString(" ")
-      } else words.mkString(" ")
-      (i, text)
-    }.toDF("doc_id", "text")
+  /** 60 docs of 6-15 words over a 25-word vocabulary; every 4th doc is
+    * its predecessor plus one word (a planted near-dup). */
+  private def trigramDocs: DataFrame = (0L until 60L).map { i =>
+    val rnd = new scala.util.Random(i * 31 + 7)
+    val words = (0 until (6 + rnd.nextInt(10)))
+      .map(_ => s"w${rnd.nextInt(25)}")
+    val text = if (i % 4 == 3) {
+      val prev = new scala.util.Random((i - 1) * 31 + 7)
+      ((0 until (6 + prev.nextInt(10))).map(_ => s"w${prev.nextInt(25)}") :+ "zz")
+        .mkString(" ")
+    } else words.mkString(" ")
+    (i, text)
+  }.toDF("doc_id", "text")
 
+  /** The re-put notice BlockManager logs when two concurrent stages ask for
+    * one kept partition before it is stored: the second task waits on the
+    * first's block lock, then reads the stored block instead of adding its
+    * own copy. */
+  private val RePut = "Block rdd_\\d+_\\d+ already exists on this machine; not re-adding it"
+
+  test("tokenJaccardPairs (trigram path) matches brute force on text") {
+    val docs = trigramDocs
     val toks = split(lower(trim(col("text"))), "\\s+")
     val grams = array_distinct(transform(
       slice(toks, lit(1), greatest(size(toks) - 2, lit(0))),
       (_, i) => concat_ws(" ", slice(toks, i + 1, lit(3)))))
     val d = docs.select(col("doc_id").as("id"), grams.as("g"))
 
-    // count each doc's evaluations in tasks (above a repartition, so the
-    // optimizer cannot fold the projection into the local relation)
-    val evals = spark.sparkContext.longAccumulator
-    val counted = docs.repartition(3).select(col("doc_id"),
-      udf((t: String) => { evals.add(1); t }).apply(col("text")).as("text"))
     val (got, warns) = warnings("org.apache.spark.storage.BlockManager")(
-      Dedup.tokenJaccardPairs(counted, 0.2, ngram = 3).as[(Long, Long, Double)].collect().toSet)
+      Dedup.tokenJaccardPairs(docs, 0.2, ngram = 3).as[(Long, Long, Double)].collect().toSet)
     val want = brute(d, 0.2)
     assert(got == want)
     assert(want.nonEmpty)
-    // the kept gram table is computed once per doc. When two concurrent
-    // stages ask for one of its partitions before it is stored, the second
-    // task waits on the first's block lock, then logs "already exists" and
-    // reads the stored block: a re-put notice, not a second computation
-    assert(evals.value == 60, s"gram sets computed ${evals.value} times for 60 docs")
-    assert(warns.forall(_.matches(
-      "Block rdd_\\d+_\\d+ already exists on this machine; not re-adding it")), warns)
+    assert(warns.forall(_.matches(RePut)), warns)
+  }
+
+  /** How many times `tokenJaccardPairs` evaluates each doc's text, counted
+    * by `count` applied to the text column of `docs`. */
+  private def textEvals(docs: DataFrame,
+      count: org.apache.spark.sql.expressions.UserDefinedFunction =>
+        org.apache.spark.sql.expressions.UserDefinedFunction): Long = {
+    val evals = spark.sparkContext.longAccumulator
+    val counted = docs.select(col("doc_id"),
+      count(udf((t: String) => { evals.add(1); t })).apply(col("text")).as("text"))
+    Dedup.tokenJaccardPairs(counted, 0.2, ngram = 3).collect()
+    evals.value
+  }
+
+  test("tokenJaccardPairs computes each doc's gram set once") {
+    // above a repartition, so the optimizer cannot fold the projection
+    // into the local relation and evaluate it on the driver
+    assert(textEvals(trigramDocs.repartition(3), identity) == 60)
+  }
+
+  test("tokenJaccardPairs computes a nondeterministic text column once per doc (known failure)") {
+    // a nondeterministic text column straight over the local relation is
+    // evaluated twice per doc (120 for 60 docs): some reader of the kept
+    // gram table recomputes its input instead of reading the cache
+    pendingUntilFixed {
+      assert(textEvals(trigramDocs, _.asNondeterministic()) == 60)
+    }
   }
 }
